@@ -21,217 +21,13 @@ from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import __spark_entry__ as entry  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-# Headline set: flagship extraction + one per operator family.
-BENCH_QUERIES = [
-    "extract_html_spans",
-    "extract_pdf_paged",
-    "extract_pdf_native_paged",
-    "pdf_native_roundtrip",
-    "pdf_outline",
-    "pdf_links",
-    "extract_pdf_raw_routed",
-    "page_render_meta",
-    "page_render_ocr_roundtrip",
-    "url_canonicalize",
-    "url_dedup",
-    "lm_quality_buckets",
-    "dsir_weights",
-    "dsir_resample",
-    "extract_uspto_spans",
-    "extract_status_counts",
-    "extract_doctags_spans",
-    "extract_main_content",
-    "extract_image_docs",
-    "extract_mixed_routed",
-    "extract_pdf_page_limit",
-    "pdf_page_cells",
-    "pdf_real_cells",
-    "pdf_real_assembled",
-    "page_dump",
-    "page_assembly",
-    "export_markdown",
-    "export_html",
-    "export_doctags",
-    "export_doctags_loc",
-    "export_docling_json",
-    "extract_docling_markdown",
-    "extract_docling_itxt",
-    "extract_docling_html",
-    "extract_md_spans",
-    "extract_csv_spans",
-    "extract_asciidoc_spans",
-    "extract_jats_spans",
-    "extract_docling_json_spans",
-    "extract_docx_spans",
-    "extract_xlsx_spans",
-    "extract_pptx_spans",
-    "extract_media_manifest",
-    "table_cells",
-    "chunk_documents",
-    "chunk_documents_hier",
-    "enrich_spans",
-    "format_sniff",
-    "format_sniff_exact",
-    "doc_token_stats",
-    "doc_sentences",
-    "corpus_grep",
-    "doc_quality",
-    "doc_fingerprint",
-    "doc_readability",
-    "doc_char_entropy",
-    "gopher_rules",
-    "doc_language_id",
-    "doc_winnow_fingerprints",
-    "doc_repetition",
-    "pii_scrub",
-    "decontaminate_docs",
-    "decontaminate_semantic",
-    "lm_quality",
-    "lm_quality_bigram",
-    "quality_classifier",
-    "pack_sequences",
-    "pack_manifest",
-    "sample_weighted",
-    "mixture_weights",
-    "epoch_plan",
-    "split_docs",
-    "cap_per_source",
-    "source_gated_docs",
-    "token_histogram",
-    "vocab_growth",
-    "bpe_merge_candidates",
-    "cooccurrence_pmi",
-    "ngram_counts",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_substrings",
-    "dedup_segments",
-    "ngram_jaccard_pairs",
-    "curate_corpus",
-    "source_reputation",
-    "pagerank_hosts",
-    "dedup_boilerplate_lines",
-    "c4_line_filter",
-    "dedup_components",
-    "dedup_canonical",
-    "embedding_dedup",
-    "knn_cosine_bruteforce",
-    "knn_cosine_int8",
-    "knn_cosine_lsh",
-    "knn_cosine_ivf",
-    "knn_cosine_pq",
-    "hard_negatives",
-    "knn_classify",
-    "bm25_topk",
-    "inverted_index",
-    "kmeans_clusters",
-    "semdedup",
-    "doc_embed_hash",
-    "tfidf_hash_vectors",
-    "events_asof_join",
-    "events_range_join",
-    "events_rollup",
-    "events_gap_fill",
-    "events_anomaly",
-    "events_interpolate",
-    "events_kmv_distinct",
-    "events_quantiles",
-    "events_quantiles_sketch",
-    "events_pivot",
-    "top_terms",
-    "span_diff",
-    "changed_docs",
-    "events_sessionize",
-    "events_funnel",
-    "events_retention",
-    "event_transitions",
-    "events_windowed",
-    "events_sliding",
-    "events_json_props",
-    "media_decode_meta",
-    "media_audio_meta",
-    "media_frame_plan",
-    "media_asset_dedup",
-    "media_exif",
-    "tpch_q1_pricing",
-    "tpch_q3_shipping",
-    "tpch_q5_local_supplier",
-    "ngram_containment_pairs",
-    "bloom_dedup",
-    "quality_percentile_gate",
-    "doc_normalize",
-    "winnow_overlap_pairs",
-    "ngram_novelty",
-    "idf_rarity",
-    "url_blocklist_gate",
-    "minhash_jaccard_est",
-    "script_mix",
-    "near_dup_eval",
-    "dedup_report",
-    "mad_outlier_gate",
-    "source_vocab_jaccard",
-    "source_vocab_kmv",
-    "heavy_hitters_cms",
-    "zorder_layout",
-    "compaction_plan",
-    "dedup_minhash_lsh_indep",
-    # round 4
-    "layout_post_clusters",
-    "html_table_cells",
-    "pdf_text_in_rect",
-    "doc_outline",
-    "reservoir_sample",
-    "stratified_split",
-    "robots_gate",
-    "domain_mix_report",
-    "source_bigram_entropy",
-    "ocr_region_plan",
-    "ocr_reconcile",
-    "omml_equations",
-    "pdf_table_structure",
-    "bpe_train_merges",
-    "bpe_encode_tokens",
-    "warc_records",
-    "warc_cdx",
-    "warc_revisit_dedup",
-    "wordpiece_encode",
-    "unigram_encode",
-    "oov_rate",
-    "charset_sniff",
-    "warc_extract_spans",
-    "mojibake_repair",
-    "pack_interleaved",
-    "interleave_stats",
-    "html_links",
-    "outlink_host_graph",
-    "media_ahash",
-    "media_phash_near_dup",
-    "media_caption_pairs",
-    "anchor_text_index",
-    "crawl_frontier",
-    "sitemap_urls",
-    "html_metadata",
-    "feed_urls",
-    "url_path_templates",
-    "hreflang_links",
-    "noindex_gate",
-    "robots_sitemaps",
-    "dup_ngram_fraction",
-    "hits_hosts",
-    "knn_recall_eval",
-    "code_detect",
-    "curriculum_order",
-    "embed_pool",
-    "stream_extract_status",
-    "wet_text_records",
-    "wat_metadata",
-    "bitext_candidates",
-]
+# Every registry query, in registry order.
+BENCH_QUERIES = list(entry.queries())
 
 
 def build_spark(cpus: str) -> SparkSession:
@@ -287,11 +83,9 @@ def time_query(fn, spark, sf_dir: str) -> tuple:
 
 
 def main() -> None:
-    import __spark_entry__ as entry_mod
-
     spark = build_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
-    qmap = entry_mod.queries()
+    qmap = entry.queries()
 
     # warm the JVM + parquet footers + Python worker daemons once so
     # per-query numbers measure the plan, not session startup
@@ -305,8 +99,6 @@ def main() -> None:
     counts: dict = {}
     total = 0.0
     for name in BENCH_QUERIES:
-        if name not in qmap:
-            continue
         sec, n = time_query(qmap[name], spark, SF_DIR)
         results[name] = round(sec, 3)
         counts[name] = n

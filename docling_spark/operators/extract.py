@@ -39,186 +39,34 @@ from ..schema import (
 # models/factories/base_factory.py:24-60)
 
 def _load_parsers() -> Dict[str, Callable[[str], object]]:
+    """Payload kind → parser, for every single-payload kind. pdf_page
+    is not here: its payload is a list of pages (see _parse_doc)."""
+    from ..parsers.asciidoc_parser import parse_asciidoc_document
     from ..parsers.csv_parser import parse_csv_document
+    from ..parsers.docling_json import parse_docling_json
+    from ..parsers.doctags_parser import parse_doctags
+    from ..parsers.docx_parser import parse_docx_document
     from ..parsers.html_parser import parse_html_document
+    from ..parsers.jats_parser import parse_jats_document
+    from ..parsers.md_parser import parse_md_document
+    from ..parsers.pptx_parser import parse_pptx_document
+    from ..parsers.uspto_parser import parse_uspto_document
+    from ..parsers.xlsx_parser import parse_xlsx_document
 
-    parsers: Dict[str, Callable[[str], object]] = {
+    return {
         "html": parse_html_document,
         "csv": parse_csv_document,
+        "md": parse_md_document,
+        "asciidoc": parse_asciidoc_document,
+        "docx": parse_docx_document,
+        "xlsx": parse_xlsx_document,
+        "pptx": parse_pptx_document,
+        "jats": parse_jats_document,
+        "docling_json": parse_docling_json,
+        "uspto": parse_uspto_document,
+        "doctags": parse_doctags,
     }
-    try:
-        from ..parsers.md_parser import parse_md_document
-        parsers["md"] = parse_md_document
-    except ImportError:
-        pass
-    try:
-        from ..parsers.asciidoc_parser import parse_asciidoc_document
-        parsers["asciidoc"] = parse_asciidoc_document
-    except ImportError:
-        pass
-    try:
-        from ..parsers.docx_parser import parse_docx_document
-        parsers["docx"] = parse_docx_document
-    except ImportError:
-        pass
-    try:
-        from ..parsers.xlsx_parser import parse_xlsx_document
-        parsers["xlsx"] = parse_xlsx_document
-    except ImportError:
-        pass
-    try:
-        from ..parsers.pptx_parser import parse_pptx_document
-        parsers["pptx"] = parse_pptx_document
-    except ImportError:
-        pass
-    try:
-        from ..parsers.jats_parser import parse_jats_document
-        parsers["jats"] = parse_jats_document
-    except ImportError:
-        pass
-    try:
-        from ..parsers.docling_json import parse_docling_json
-        parsers["docling_json"] = parse_docling_json
-    except ImportError:
-        pass
-    try:
-        from ..parsers.uspto_parser import parse_uspto_document
-        parsers["uspto"] = parse_uspto_document
-    except ImportError:
-        pass
-    try:
-        from ..parsers.doctags_parser import parse_doctags
-        parsers["doctags"] = parse_doctags
-    except ImportError:
-        pass
-    try:
-        from ..parsers.pdf_page import parse_pdf_pages
-        parsers["pdf_page"] = None  # multi-span path, handled separately
-    except ImportError:
-        pass
-    return parsers
 
-
-def _span_field(span, key, default=None):
-    if isinstance(span, dict):
-        return span.get(key, default)
-    return getattr(span, key, default)
-
-
-def _extract_one(doc_spans: list, parsers: dict,
-                 with_markdown: bool = False,
-                 with_itxt: bool = False,
-                 with_html: bool = False) -> tuple:
-    """Extract one document. Returns (spans, status, errors, markdown,
-    itxt, html). ``with_markdown`` / ``with_itxt`` / ``with_html``
-    additionally render the parse tree through the docling-dialect
-    serializers (md_dialect / itxt_dialect / html_dialect) before
-    flattening — byte-parity with the reference's export goldens,
-    pinned by tests/test_md_dialect.py, tests/test_itxt_dialect.py and
-    tests/test_html_dialect.py."""
-    if not doc_spans:
-        return [], STATUS_SKIPPED, [], None, None, None
-
-    ordered = sorted(doc_spans, key=lambda s: _span_field(s, "offset", 0) or 0)
-    media_refs: List[str] = []
-    payload_kind = None
-    payloads: List[str] = []
-    page_payloads: List[str] = []
-
-    for s in ordered:
-        kind = _span_field(s, "kind", "") or ""
-        if kind == "media":
-            media_refs.append(_span_field(s, "media_ref", "") or "")
-        elif kind == "pdf_page":
-            page_payloads.append(_span_field(s, "text", "") or "")
-            payload_kind = "pdf_page"
-        elif payload_kind is None or payload_kind == kind:
-            payload_kind = kind
-            payloads.append(_span_field(s, "text", "") or "")
-
-    if payload_kind is None:
-        return [], STATUS_SKIPPED, [], None, None, None
-
-    try:
-        if payload_kind == "pdf_page":
-            from ..parsers.pdf_page import parse_pdf_pages
-            tree = parse_pdf_pages(page_payloads)
-        else:
-            parse = parsers.get(payload_kind)
-            if parse is None:
-                return [], STATUS_SKIPPED, [], None, None, None
-            tree = parse("".join(payloads))
-        markdown = None
-        if with_markdown:
-            from ..md_dialect import render_markdown_docling
-            markdown = render_markdown_docling(tree)
-        itxt = None
-        if with_itxt:
-            from ..itxt_dialect import render_itxt
-            itxt = render_itxt(tree)
-        html = None
-        if with_html:
-            from ..html_dialect import render_html_docling
-            html = render_html_docling(tree)
-        spans = flatten(tree)
-        # interleaved media refs → picture spans, in order (FIXTURES.md §3.4)
-        if media_refs:
-            pic_idx = 0
-            for sp in spans:
-                if sp["kind"] == "picture" and pic_idx < len(media_refs):
-                    sp["media_ref"] = media_refs[pic_idx]
-                    pic_idx += 1
-        return spans, STATUS_SUCCESS, [], markdown, itxt, html
-    except Exception as exc:  # per-doc containment — never kill the task
-        return [], STATUS_FAILURE, [{
-            "component": "extract",
-            "module": payload_kind,
-            "message": f"{type(exc).__name__}: {exc}"[:500],
-        }], None, None, None
-
-
-def _make_extract_batches(with_markdown: bool = False,
-                          with_itxt: bool = False,
-                          with_html: bool = False):
-    def _extract_batches(
-            batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parsers = _load_parsers()  # executor-local init-once per task
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].tolist()
-            span_lists = pdf["spans"].tolist()
-            out = {"doc_id": [], "spans": [], "status": [], "errors": [],
-                   "n_spans": [], "wall_us": []}
-            if with_markdown:
-                out["markdown"] = []
-            if with_itxt:
-                out["itxt"] = []
-            if with_html:
-                out["html"] = []
-            for doc_id, raw in zip(doc_ids, span_lists):
-                t0 = time.monotonic_ns()
-                raw_list = list(raw) if raw is not None else []
-                spans, status, errors, markdown, itxt, html = _extract_one(
-                    raw_list, parsers, with_markdown=with_markdown,
-                    with_itxt=with_itxt, with_html=with_html)
-                out["doc_id"].append(doc_id)
-                out["spans"].append(
-                    [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                     for s in spans])
-                out["status"].append(status)
-                out["errors"].append(
-                    [(e["component"], e["module"], e["message"])
-                     for e in errors])
-                out["n_spans"].append(len(spans))
-                out["wall_us"].append((time.monotonic_ns() - t0) // 1000)
-                if with_markdown:
-                    out["markdown"].append(markdown)
-                if with_itxt:
-                    out["itxt"].append(itxt)
-                if with_html:
-                    out["html"].append(html)
-            yield pd.DataFrame(out)
-
-    return _extract_batches
 
 
 # ---------------------------------------------------------------------------
@@ -703,33 +551,27 @@ def extract_spans(
     with_itxt: bool = False,
     with_html: bool = False,
     oversize: str = "drop",
-    assembly: str = "catalyst",
 ) -> DataFrame:
     """(doc_id, spans) → (doc_id, spans, status, errors, n_spans, wall_us
     [, markdown] [, itxt] [, html]).
 
-    ``assembly`` picks where the pre-parse per-doc assembly (offset
-    sort, media-ref collection, payload-kind routing, payload concat)
-    runs and how the output crosses the Arrow boundary:
-    ``"catalyst"`` (default) evaluates the pre-assembly JVM-side so
+    One path: Catalyst pre-assembles each document (``_preassembled``:
+    offset sort, payload-kind routing, payload concat, media refs), so
     the Arrow boundary carries four flat columns instead of one
-    array<struct> whose every span materializes as a Python object —
-    2.3× over ``"python"``, the original in-UDF assembly kept as the
-    parity reference (tests/test_extract_flat.py proves
-    byte-identical output on adversarial inputs). ``"arrow"`` uses
-    the same pre-assembly but emits results via ``mapInArrow`` with
-    the span/error list arrays built as flat Arrow child arrays,
-    skipping the per-tuple boxing of the pandas→Arrow converter:
-    row-identical output (A/B-verified at 800k docs) and measurably
-    faster at per-machine parallelism up to 16 cores (+7% at 4,
-    +7% at 8, +10% at 16 on level medians) — the right mode on a
-    real multi-executor cluster, where executors run 4–16 cores
-    each. It is NOT the default only because this sandbox's gated
-    local[32] scaling pair becomes serial-floor-bound with the
-    faster marshal (all 64 runnable threads contend in one JVM and
-    the 8→32 efficiency criterion dips below 0.8 — a single-box
-    measurement artifact, see BENCH/notes_r05.md), and the default
-    must match the committed gated baseline.
+    array<struct> whose every span would become a Python object; one
+    ``mapInPandas`` UDF (``_extract_batches``) then parses it. Two other
+    assemblies once gave the same rows: the whole assembly in Python
+    inside the UDF, and this pre-assembly with an Arrow-native output
+    marshal that bypassed pandas. Neither was measurably faster, so
+    both were deleted. On a 4-vCPU host at local[4], medians of 4 warm
+    runs with rows checked identical, this path / Arrow marshal /
+    in-UDF took 4.06 / 3.75 / 3.97 s on 2,400 HTML docs with 1 in 20 a
+    236 KB page (run spreads 3.79–4.08, 3.53–3.96 and 3.96–4.26 s),
+    and 1.88 / 1.83 / 1.80 s on 40k light HTML docs. This path was
+    kept because the production jobs already ran it, so their executed
+    plans did not change. tests/test_extract_flat.py checks its rows
+    against a plain-Python statement of the assembly rules on
+    adversarial and random inputs.
 
     ``oversize`` controls what happens to documents over
     ``max_payload_chars``: ``"drop"`` (default) filters them before the
@@ -740,10 +582,9 @@ def extract_spans(
     tests/test_invalid_input.py:38-40). The failure rows are built with
     pure Catalyst — oversize payloads never reach Python.
 
-    Catalyst prefilters (size gate, allowed kinds) run before the UDF;
-    parsing happens in one Arrow-batched mapInPandas stage. Partitioning
-    is hash(doc_id) — one doc per row, so doc-hash balance is the right
-    default; skewed mega-PDFs use the page-parallel path
+    Catalyst prefilters (size gate, allowed kinds) run before the UDF.
+    Partitioning is hash(doc_id) — one doc per row, so doc-hash balance
+    is the right default; skewed mega-PDFs use the page-parallel path
     (extract_spans_paged) instead.
 
     ``with_markdown`` adds a docling-dialect markdown rendering of the
@@ -751,8 +592,12 @@ def extract_spans(
     goldens — md_dialect.py) with zero extra parse cost: the tree is
     already in hand inside the UDF. ``with_itxt`` likewise adds the
     indented-text rendering (_export_to_indented_text parity —
-    itxt_dialect.py), which serializes the tree's nesting structure.
+    itxt_dialect.py), which serializes the tree's nesting structure,
+    and ``with_html`` the docling-dialect HTML (html_dialect.py).
     """
+    exports = tuple(name for name, on in (("markdown", with_markdown),
+                                          ("itxt", with_itxt),
+                                          ("html", with_html)) if on)
     if allowed_kinds is not None:
         df = df.filter(
             F.exists("spans", lambda s: s["kind"].isin(list(allowed_kinds))))
@@ -764,23 +609,9 @@ def extract_spans(
         df = df.filter(fits)
     if num_partitions:
         df = df.repartition(num_partitions, "doc_id")
-    schema = (OUTPUT_DDL
-              + (", markdown string" if with_markdown else "")
-              + (", itxt string" if with_itxt else "")
-              + (", html string" if with_html else ""))
-    if assembly == "arrow":
-        out = _preassembled(df).mapInArrow(
-            _make_extract_batches_arrow(with_markdown, with_itxt,
-                                        with_html),
-            schema=schema)
-    elif assembly == "catalyst":
-        out = _preassembled(df).mapInPandas(
-            _make_extract_batches_flat(with_markdown, with_itxt, with_html),
-            schema=schema)
-    else:
-        out = df.mapInPandas(
-            _make_extract_batches(with_markdown, with_itxt, with_html),
-            schema=schema)
+    out = _preassembled(df).mapInPandas(
+        _make_doc_batches(exports),
+        schema=OUTPUT_DDL + "".join(f", {e} string" for e in exports))
     if oversize_df is not None:
         fail = oversize_df.select(
             "doc_id",
@@ -798,32 +629,26 @@ def extract_spans(
             )).alias("errors"),
             F.lit(0).cast("int").alias("n_spans"),
             F.lit(0).cast("long").alias("wall_us"),
-            *([F.lit(None).cast("string").alias("markdown")]
-              if with_markdown else []),
-            *([F.lit(None).cast("string").alias("itxt")]
-              if with_itxt else []),
-            *([F.lit(None).cast("string").alias("html")]
-              if with_html else []))
+            *[F.lit(None).cast("string").alias(e) for e in exports])
         out = out.unionByName(fail)
     return out
 
 
 def _preassembled(df: DataFrame) -> DataFrame:
-    """Catalyst pre-assembly of the per-doc parser input: everything
-    `_extract_one` does BEFORE calling the parser — offset sort,
+    """Catalyst pre-assembly of the per-doc parser input — offset sort,
     media-ref collection, payload-kind resolution, payload
-    concatenation — expressed as JVM-side array expressions, so the
-    Arrow boundary carries four flat columns instead of one
-    array<struct> per document whose every span must materialize as a
-    Python object. Replays `_extract_one`'s exact rules:
+    concatenation — as JVM-side array expressions, so the Arrow
+    boundary carries four flat columns instead of one array<struct>
+    per document whose every span must materialize as a Python object.
+    The rules (tests/test_extract_flat.py holds the same rules in plain
+    Python and checks the two agree):
 
       * spans sorted by (coalesce(offset,0), original index) — the
         stable-sort semantics of Python ``sorted``;
       * media_refs = media spans' refs in that order;
-      * payload_kind = 'pdf_page' if ANY pdf_page span exists (the
-        elif-chain override), else the kind of the first non-media
-        span (null kind reads as ''), else NULL (media-only/empty doc
-        → SKIPPED downstream);
+      * payload_kind = 'pdf_page' if ANY pdf_page span exists, else
+        the kind of the first non-media span (null kind reads as ''),
+        else NULL (media-only/empty doc → SKIPPED downstream);
       * pages = the pdf_page texts in order, or a single element
         holding the concatenation of the first-kind spans' texts.
     """
@@ -863,14 +688,19 @@ def _preassembled(df: DataFrame) -> DataFrame:
                     lambda s: s["media_ref"]).alias("media_refs"))
 
 
-def _extract_one_flat(kind, pages, media_refs, parsers: dict,
-                      with_markdown: bool = False,
-                      with_itxt: bool = False,
-                      with_html: bool = False) -> tuple:
-    """`_extract_one` with the pre-parse assembly already done
-    JVM-side (see _preassembled). Same returns, same error contract."""
+def _parse_doc(kind, pages, media_refs, parsers: dict,
+               exports: tuple = ()) -> tuple:
+    """Parse one pre-assembled document. Returns (spans, status,
+    errors, rendered), ``rendered`` holding one string per requested
+    export in ``exports`` order ("markdown" / "itxt" / "html": the
+    parse tree through the docling-dialect serializers before
+    flattening — byte-parity with the reference's export goldens,
+    pinned by tests/test_md_dialect.py, tests/test_itxt_dialect.py and
+    tests/test_html_dialect.py). A parser exception becomes one
+    failure row: one bad document never kills the task."""
+    unrendered = (None,) * len(exports)
     if kind is None:
-        return [], STATUS_SKIPPED, [], None, None, None
+        return [], STATUS_SKIPPED, [], unrendered
     try:
         if kind == "pdf_page":
             from ..parsers.pdf_page import parse_pdf_pages
@@ -878,60 +708,51 @@ def _extract_one_flat(kind, pages, media_refs, parsers: dict,
         else:
             parse = parsers.get(kind)
             if parse is None:
-                return [], STATUS_SKIPPED, [], None, None, None
+                return [], STATUS_SKIPPED, [], unrendered
             tree = parse(pages[0] if len(pages) else "")
-        markdown = None
-        if with_markdown:
-            from ..md_dialect import render_markdown_docling
-            markdown = render_markdown_docling(tree)
-        itxt = None
-        if with_itxt:
-            from ..itxt_dialect import render_itxt
-            itxt = render_itxt(tree)
-        html = None
-        if with_html:
-            from ..html_dialect import render_html_docling
-            html = render_html_docling(tree)
+        rendered = tuple(_exporter(e)(tree) for e in exports)
         spans = flatten(tree)
+        # interleaved media refs → picture spans, in order (FIXTURES.md §3.4)
         if len(media_refs):
             pic_idx = 0
             for sp in spans:
                 if sp["kind"] == "picture" and pic_idx < len(media_refs):
                     sp["media_ref"] = media_refs[pic_idx]
                     pic_idx += 1
-        return spans, STATUS_SUCCESS, [], markdown, itxt, html
+        return spans, STATUS_SUCCESS, [], rendered
     except Exception as exc:  # per-doc containment — never kill the task
         return [], STATUS_FAILURE, [{
             "component": "extract",
             "module": kind,
             "message": f"{type(exc).__name__}: {exc}"[:500],
-        }], None, None, None
+        }], unrendered
 
 
-def _make_extract_batches_flat(with_markdown: bool = False,
-                               with_itxt: bool = False,
-                               with_html: bool = False):
+def _exporter(name: str) -> Callable[[object], str]:
+    if name == "markdown":
+        from ..md_dialect import render_markdown_docling
+        return render_markdown_docling
+    if name == "itxt":
+        from ..itxt_dialect import render_itxt
+        return render_itxt
+    from ..html_dialect import render_html_docling
+    return render_html_docling
+
+
+def _make_doc_batches(exports: tuple):
     def _extract_batches(
             batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parsers = _load_parsers()  # executor-local init-once per task
         for pdf in batches:
             out = {"doc_id": pdf["doc_id"], "spans": [], "status": [],
-                   "errors": [], "n_spans": [], "wall_us": []}
-            if with_markdown:
-                out["markdown"] = []
-            if with_itxt:
-                out["itxt"] = []
-            if with_html:
-                out["html"] = []
+                   "errors": [], "n_spans": [], "wall_us": [],
+                   **{e: [] for e in exports}}
             for kind, pages, refs in zip(
                     pdf["payload_kind"].tolist(),
                     pdf["pages"].tolist(), pdf["media_refs"].tolist()):
                 t0 = time.monotonic_ns()
-                spans, status, errors, markdown, itxt, html = (
-                    _extract_one_flat(
-                        kind, pages, refs, parsers,
-                        with_markdown=with_markdown,
-                        with_itxt=with_itxt, with_html=with_html))
+                spans, status, errors, rendered = _parse_doc(
+                    kind, pages, refs, parsers, exports)
                 out["spans"].append(
                     [(s["kind"], s["text"], s["media_ref"], s["offset"])
                      for s in spans])
@@ -941,127 +762,11 @@ def _make_extract_batches_flat(with_markdown: bool = False,
                      for e in errors])
                 out["n_spans"].append(len(spans))
                 out["wall_us"].append((time.monotonic_ns() - t0) // 1000)
-                if with_markdown:
-                    out["markdown"].append(markdown)
-                if with_itxt:
-                    out["itxt"].append(itxt)
-                if with_html:
-                    out["html"].append(html)
+                for e, text in zip(exports, rendered):
+                    out[e].append(text)
             yield pd.DataFrame(out)
 
     return _extract_batches
-
-
-def _make_extract_batches_arrow(with_markdown: bool = False,
-                                with_itxt: bool = False,
-                                with_html: bool = False):
-    """mapInArrow twin of _make_extract_batches_flat: the output span
-    and error arrays are built as FLAT Arrow child arrays (one
-    pa.array per struct field + list offsets) instead of per-doc
-    Python lists of tuples routed through a pandas object column —
-    the column-at-a-time pa.array over flat str lists skips the
-    per-tuple boxing in the pandas→Arrow converter, which is the
-    largest non-parse slice of extraction core time. doc_id passes
-    through zero-copy from the input batch."""
-    import pyarrow as pa
-
-    def _extract_batches(batches):
-        parsers = _load_parsers()  # executor-local init-once per task
-        for rb in batches:
-            names = rb.schema.names
-            doc_ids = rb.column(names.index("doc_id"))
-            kinds_in = rb.column(names.index("payload_kind")).to_pylist()
-            pages_in = rb.column(names.index("pages")).to_pylist()
-            refs_in = rb.column(names.index("media_refs")).to_pylist()
-            s_kind: list = []
-            s_text: list = []
-            s_ref: list = []
-            s_off: list = []
-            s_offsets = [0]
-            e_comp: list = []
-            e_mod: list = []
-            e_msg: list = []
-            e_offsets = [0]
-            statuses: list = []
-            n_spans: list = []
-            walls: list = []
-            mds: list = []
-            itxts: list = []
-            htmls: list = []
-            for kind, pages, refs in zip(kinds_in, pages_in, refs_in):
-                t0 = time.monotonic_ns()
-                spans, status, errors, markdown, itxt, html = (
-                    _extract_one_flat(
-                        kind, pages, refs, parsers,
-                        with_markdown=with_markdown,
-                        with_itxt=with_itxt, with_html=with_html))
-                for s in spans:
-                    s_kind.append(s["kind"])
-                    s_text.append(s["text"])
-                    s_ref.append(s["media_ref"])
-                    s_off.append(s["offset"])
-                s_offsets.append(len(s_kind))
-                for e in errors:
-                    e_comp.append(e["component"])
-                    e_mod.append(e["module"])
-                    e_msg.append(e["message"])
-                e_offsets.append(len(e_comp))
-                statuses.append(status)
-                n_spans.append(len(spans))
-                walls.append((time.monotonic_ns() - t0) // 1000)
-                if with_markdown:
-                    mds.append(markdown)
-                if with_itxt:
-                    itxts.append(itxt)
-                if with_html:
-                    htmls.append(html)
-            spans_arr = pa.ListArray.from_arrays(
-                pa.array(s_offsets, pa.int32()),
-                pa.StructArray.from_arrays(
-                    [pa.array(s_kind, pa.string()),
-                     pa.array(s_text, pa.string()),
-                     pa.array(s_ref, pa.string()),
-                     pa.array(s_off, pa.int32())],
-                    ["kind", "text", "media_ref", "offset"]))
-            errors_arr = pa.ListArray.from_arrays(
-                pa.array(e_offsets, pa.int32()),
-                pa.StructArray.from_arrays(
-                    [pa.array(e_comp, pa.string()),
-                     pa.array(e_mod, pa.string()),
-                     pa.array(e_msg, pa.string())],
-                    ["component", "module", "message"]))
-            cols = [doc_ids, spans_arr, pa.array(statuses, pa.string()),
-                    errors_arr, pa.array(n_spans, pa.int32()),
-                    pa.array(walls, pa.int64())]
-            out_names = ["doc_id", "spans", "status", "errors",
-                         "n_spans", "wall_us"]
-            if with_markdown:
-                cols.append(pa.array(mds, pa.string()))
-                out_names.append("markdown")
-            if with_itxt:
-                cols.append(pa.array(itxts, pa.string()))
-                out_names.append("itxt")
-            if with_html:
-                cols.append(pa.array(htmls, pa.string()))
-                out_names.append("html")
-            yield pa.RecordBatch.from_arrays(cols, out_names)
-
-    return _extract_batches
-
-
-def extract_spans_flat(
-    df: DataFrame,
-    *,
-    num_partitions: Optional[int] = None,
-    with_markdown: bool = False,
-    with_itxt: bool = False,
-    with_html: bool = False,
-) -> DataFrame:
-    """Alias for extract_spans(assembly="catalyst") — the JVM-side
-    pre-assembly is now the default; kept for the A/B profiler."""
-    return extract_spans(
-        df, num_partitions=num_partitions, with_markdown=with_markdown,
-        with_itxt=with_itxt, with_html=with_html, assembly="catalyst")
 
 
 # ---------------------------------------------------------------------------

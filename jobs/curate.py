@@ -190,12 +190,6 @@ def main(argv=None, _spark: SparkSession = None) -> int:
         side_outputs["packing"] = path
 
     entry = table.write_snapshot(out, metrics=curate_metrics(out))
-    if os.environ.get("CURATE_CRASH_AFTER") == "commit":
-        # test hook (kill-mid-job e2e): die in the WORST window — the
-        # snapshot is committed but the decision set is not yet
-        # recorded, so the next run must re-decide the dropped docs
-        # without duplicating any committed keep
-        os._exit(137)
     (todo.select("doc_id")
      .write.mode("append").parquet(proc_path))
     out.unpersist()

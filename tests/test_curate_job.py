@@ -5,8 +5,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def test_curate_job_end_to_end_and_resume(spark, tmp_path, capsys):
@@ -52,25 +52,43 @@ def test_curate_job_end_to_end_and_resume(spark, tmp_path, capsys):
     assert table.read(spark).count() == st["output"]
 
 
-def _run_curate_subprocess(out_root, extra_env=None, timeout=420):
+# Runs jobs/curate.py's main(argv) with SnapshotTable.write_snapshot
+# wrapped to kill the process right after the real commit: the WORST
+# window — the snapshot is committed but the decision set is not yet
+# recorded, so the next run must re-decide the dropped docs without
+# duplicating any committed keep.
+_CRASH_AFTER_COMMIT = """
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from docling_spark.lake import SnapshotTable
+from jobs.curate import main
+
+commit = SnapshotTable.write_snapshot
+
+def commit_then_die(self, *args, **kwargs):
+    commit(self, *args, **kwargs)
+    os._exit(137)
+
+SnapshotTable.write_snapshot = commit_then_die
+raise SystemExit(main(sys.argv[2:]))
+"""
+
+
+def _run_curate_subprocess(out_root, crash_after_commit=False, timeout=420):
     """Launch jobs/curate.py in its own process (own JVM), so a crash
-    hook kills the whole driver exactly like a mid-job SIGKILL."""
+    kills the whole driver exactly like a mid-job SIGKILL."""
     import subprocess
-    env = dict(os.environ)
-    env.pop("CURATE_CRASH_AFTER", None)
-    if extra_env:
-        env.update(extra_env)
-    return subprocess.run(
-        [sys.executable, os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "jobs", "curate.py"),
-         "--input", "/root/testdata/sf0.001/documents.parquet",
-         "--output", out_root,
-         "--partitions", "4",
-         "--lang", "en",
-         "--strip-boilerplate",
-         "--split"],
-        env=env, capture_output=True, text=True, timeout=timeout)
+    args = ["--input", "/root/testdata/sf0.001/documents.parquet",
+            "--output", out_root,
+            "--partitions", "4",
+            "--lang", "en",
+            "--strip-boilerplate",
+            "--split"]
+    cmd = ([sys.executable, "-c", _CRASH_AFTER_COMMIT, ROOT]
+           if crash_after_commit
+           else [sys.executable, os.path.join(ROOT, "jobs", "curate.py")])
+    return subprocess.run(cmd + args, capture_output=True, text=True,
+                          timeout=timeout)
 
 
 def test_curate_job_kill_after_commit_then_resume(spark, tmp_path):
@@ -81,8 +99,7 @@ def test_curate_job_kill_after_commit_then_resume(spark, tmp_path):
     undecided, and a third run must be a noop."""
     out_root = str(tmp_path / "lake_kill")
 
-    p1 = _run_curate_subprocess(out_root,
-                                {"CURATE_CRASH_AFTER": "commit"})
+    p1 = _run_curate_subprocess(out_root, crash_after_commit=True)
     assert p1.returncode == 137, p1.stderr[-3000:]
     # the crash window is real: a snapshot landed, decisions did not
     from docling_spark.lake import SnapshotTable

@@ -84,13 +84,10 @@ def test_prefilters_are_catalyst_side(spark):
     out = extract_spans(corpus, allowed_kinds=["html"],
                         max_payload_chars=10_000_000)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    # the filter sits under (after in plan text) the Python map node:
-    # MapInPandas for the default assembly="catalyst", MapInArrow for
-    # the opt-in assembly="arrow"; the test accepts either
+    # the filter sits under (after in plan text) the Python map node
     assert "Filter" in plan
-    py_idx = (plan.index("MapInArrow") if "MapInArrow" in plan
-              else plan.index("MapInPandas"))
-    assert plan.index("Filter") > py_idx
+    assert "MapInPandas" in plan
+    assert plan.index("Filter") > plan.index("MapInPandas")
 
 
 def test_output_schema_stable(spark):

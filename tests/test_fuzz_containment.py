@@ -7,10 +7,10 @@ document_converter.py:303-326)."""
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from docling_spark.operators.extract import _extract_one, _load_parsers
+from docling_spark.operators.extract import _load_parsers, _parse_doc
 
 PARSERS = _load_parsers()
-KINDS = sorted(k for k, v in PARSERS.items() if v is not None)
+KINDS = sorted(PARSERS)
 
 payloads = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=400)
@@ -18,10 +18,9 @@ payloads = st.text(
 
 @settings(max_examples=60, deadline=None)
 @given(kind=st.sampled_from(KINDS), payload=payloads)
-def test_extract_one_never_raises(kind, payload):
-    spans, status, errors, _md, _itxt, _html = _extract_one(
-        [{"kind": kind, "text": payload, "media_ref": "", "offset": 0}],
-        PARSERS)
+def test_parse_doc_never_raises(kind, payload):
+    spans, status, errors, _rendered = _parse_doc(
+        kind, [payload], [], PARSERS)
     assert status in ("success", "failure", "skipped")
     if status != "success":
         assert spans == []
@@ -33,9 +32,8 @@ def test_extract_one_never_raises(kind, payload):
 @settings(max_examples=40, deadline=None)
 @given(payload=payloads)
 def test_pdf_page_payloads_contained(payload):
-    spans, status, errors, _md, _itxt, _html = _extract_one(
-        [{"kind": "pdf_page", "text": payload, "media_ref": "",
-          "offset": 0}], PARSERS)
+    spans, status, errors, _rendered = _parse_doc(
+        "pdf_page", [payload], [], PARSERS)
     assert status in ("success", "failure", "skipped")
 
 
@@ -46,9 +44,8 @@ def test_binary_container_payloads_contained(payload):
     # docx/xlsx/pptx take base64 zip containers; arbitrary bytes must
     # fail cleanly, never crash
     for kind in ("docx", "xlsx", "pptx"):
-        spans, status, errors, _md, _itxt, _html = _extract_one(
-            [{"kind": kind, "text": payload, "media_ref": "",
-              "offset": 0}], PARSERS)
+        spans, status, errors, _rendered = _parse_doc(
+            kind, [payload], [], PARSERS)
         assert status in ("success", "failure", "skipped")
         if status == "failure":
             assert errors and errors[0]["component"] == "extract"
