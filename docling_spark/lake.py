@@ -17,10 +17,13 @@ that preserves the semantics (SURVEY.md §7.0); its manifest commit is
 serialized by a flock sidecar so concurrent committers can't drop each
 other's snapshots.
 
+A snapshot is written in one pass over its frame; an empty frame
+commits nothing.
+
 Layout:
     <root>/_snapshots.json          atomic manifest (committed snapshots)
     <root>/snap-<id>/part-*.parquet data files of one snapshot
-    <root>/metrics/snap-<id>/       per-partition lineage + metrics rows
+    <root>/metrics/snap-<id>/       lineage + metrics, a row per data file
 """
 
 from __future__ import annotations
@@ -28,12 +31,16 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 import time
 import uuid
-from typing import List, Optional
+from typing import Callable, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+MetricsFn = Callable[[DataFrame], DataFrame]  # written rows → metrics
 
 
 class SnapshotTable:
@@ -83,21 +90,35 @@ class SnapshotTable:
     # -- write -------------------------------------------------------------
 
     def write_snapshot(self, df: DataFrame,
-                       metrics: Optional[DataFrame] = None,
-                       key_col: str = "doc_id") -> dict:
-        """Write df as a new snapshot; data lands first, the manifest
-        flip is the single atomic commit point. Returns the snapshot
-        entry."""
+                       metrics: Optional[MetricsFn] = None,
+                       key_col: str = "doc_id") -> Optional[dict]:
+        """Write df once as a new snapshot, counting its rows on that
+        write. At 0 rows, remove the data and return None. Otherwise
+        write ``metrics`` of the files just written (``partition_id`` =
+        each file's ``part-NNNNN`` index), then flip the manifest, the
+        single atomic commit point. Returns the entry, with ``rows``."""
         snap_id = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
         data_dir = os.path.join(self.root, f"snap-{snap_id}")
-        df.write.mode("errorifexists").parquet(data_dir)
+        obs = Observation()
+        (df.observe(obs, F.count(F.lit(1)).alias("rows"))
+         .write.mode("errorifexists").parquet(data_dir))
+        rows = obs.get["rows"]
+        if rows == 0:
+            shutil.rmtree(data_dir)
+            return None
         metrics_dir = None
         if metrics is not None:
+            written = (df.sparkSession.read.schema(df.schema)
+                       .parquet(data_dir)
+                       .withColumn("partition_id", F.regexp_extract(
+                           "_metadata.file_name", r"^part-(\d+)", 1)
+                           .cast("int")))
             metrics_dir = os.path.join(self.root, "metrics",
                                        f"snap-{snap_id}")
-            metrics.write.mode("errorifexists").parquet(metrics_dir)
+            metrics(written).write.mode("errorifexists").parquet(metrics_dir)
         entry = {"id": snap_id, "data": data_dir, "metrics": metrics_dir,
-                 "key_col": key_col, "committed_at": time.time()}
+                 "key_col": key_col, "rows": rows,
+                 "committed_at": time.time()}
         with self._commit_lock():
             manifest = self._read_manifest()
             manifest["snapshots"].append(entry)
@@ -173,11 +194,16 @@ class IcebergTable:
             df.writeTo(identifier).using("iceberg").create()
 
     def write_snapshot(self, df: DataFrame,
-                       metrics: Optional[DataFrame] = None,
+                       metrics: Optional[MetricsFn] = None,
                        key_col: str = "doc_id") -> dict:
+        """Append df, then ``metrics(df)`` to the metrics table. An
+        Iceberg append commits inside the write, so there are no
+        written-but-uncommitted files to aggregate: ``metrics`` runs
+        over the input, a second pass over it, and an empty append
+        commits like any other."""
         self._append(df, self.identifier)
         if metrics is not None:
-            self._append(metrics, self.metrics_identifier)
+            self._append(metrics(df), self.metrics_identifier)
         snaps = self.snapshots()
         return snaps[-1] if snaps else {"id": None}
 
@@ -231,19 +257,26 @@ def resume_filter(input_df: DataFrame, table,
     return input_df.join(committed, on=key_col, how="left_anti")
 
 
-def partition_metrics(output: DataFrame) -> DataFrame:
-    """Per-partition lineage + span-count/error metrics (north rule).
-    One row per task partition: doc/span/error counts + wall time."""
-    return (output
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("n_spans").alias("n_spans"),
+def partition_metrics(written: DataFrame) -> DataFrame:
+    """Per-partition lineage + span-count/error metrics (north rule):
+    a row per ``partition_id`` (from ``write_snapshot``: one per data
+    file), else per Spark partition. Doc count and doc_id range, plus
+    the span/error/wall_us sums of extract output or the n_tokens sum
+    of curate output."""
+    cols = set(written.columns)
+    if "partition_id" not in cols:
+        written = written.withColumn("partition_id", F.spark_partition_id())
+    aggs = [F.count("*").alias("n_docs")]
+    if "n_spans" in cols:
+        aggs += [F.sum("n_spans").alias("n_spans"),
                  F.sum((F.col("status") != "success").cast("long"))
                   .alias("n_errors"),
-                 F.sum("wall_us").alias("wall_us"),
-                 F.min("doc_id").alias("min_doc_id"),
-                 F.max("doc_id").alias("max_doc_id")))
+                 F.sum("wall_us").alias("wall_us")]
+    if "n_tokens" in cols:
+        aggs.append(F.sum("n_tokens").alias("n_tokens"))
+    return written.groupBy("partition_id").agg(
+        *aggs, F.min("doc_id").alias("min_doc_id"),
+        F.max("doc_id").alias("max_doc_id"))
 
 
 class BucketedTable:

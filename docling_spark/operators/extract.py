@@ -23,15 +23,20 @@ from typing import Callable, Dict, Iterator, List, Mapping, Optional
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from ..doctree import flatten
 from ..schema import (
+    ERROR_TYPE,
     OUTPUT_DDL,
+    SPAN_TYPE,
     STATUS_FAILURE,
     STATUS_PARTIAL,
     STATUS_SKIPPED,
     STATUS_SUCCESS,
 )
+
+_SPANS_TYPE = ArrayType(SPAN_TYPE)
 
 # ---------------------------------------------------------------------------
 # format registry (analogue of document_converter.py:51-162 format routing;
@@ -170,22 +175,11 @@ def extract_spans_paged(
         n_pages = F.size(F.filter(
             F.col("spans"), lambda s: s["kind"] == "pdf_page"))
         over = n_pages > max_num_pages
-        limit_fail = df.filter(over).select(
-            "doc_id",
-            F.array().cast(
-                "array<struct<kind:string,text:string,"
-                "media_ref:string,offset:int>>").alias("spans"),
-            F.lit(STATUS_FAILURE).alias("status"),
-            F.array(F.struct(
-                F.lit("extract").alias("component"),
-                F.lit("limits").alias("module"),
-                F.concat(
-                    F.lit("max_num_pages: page count "),
-                    n_pages.cast("string"),
-                    F.lit(f" > {max_num_pages}")).alias("message"),
-            )).alias("errors"),
-            F.lit(0).cast("int").alias("n_spans"),
-            F.lit(0).cast("long").alias("wall_us"))
+        limit_fail = _failure_rows(
+            df.filter(over), "limits",
+            F.concat(F.lit("max_num_pages: page count "),
+                     n_pages.cast("string"),
+                     F.lit(f" > {max_num_pages}")))
         df = df.filter(~over)
     pages = _page_rows(df, page_range, num_partitions)
     parsed = pages.mapInPandas(_page_batches, schema=PAGE_OUT_DDL)
@@ -208,9 +202,8 @@ def extract_spans_paged(
     # surviving pages' spans; else SUCCESS. Per-page error messages are
     # preserved (component='pdf_page'), wall_us is the summed per-page
     # parse time (partition-lineage requirement).
-    empty_spans = F.array().cast(
-        "array<struct<kind:string,text:string,media_ref:string,offset:int>>")
-    final_spans = F.when(all_err, empty_spans).otherwise(spans)
+    final_spans = (F.when(all_err, F.array().cast(_SPANS_TYPE))
+                   .otherwise(spans))
     errors = F.transform(
         F.filter(F.col("pages"), lambda p: p["error"].isNotNull()),
         lambda p: F.struct(
@@ -613,25 +606,45 @@ def extract_spans(
         _make_doc_batches(exports),
         schema=OUTPUT_DDL + "".join(f", {e} string" for e in exports))
     if oversize_df is not None:
-        fail = oversize_df.select(
-            "doc_id",
-            F.array().cast(
-                "array<struct<kind:string,text:string,"
-                "media_ref:string,offset:int>>").alias("spans"),
-            F.lit(STATUS_FAILURE).alias("status"),
-            F.array(F.struct(
-                F.lit("extract").alias("component"),
-                F.lit("size_gate").alias("module"),
-                F.concat(
-                    F.lit("max_file_size: payload chars "),
-                    payload_chars_col().cast("string"),
-                    F.lit(f" > {max_payload_chars}")).alias("message"),
-            )).alias("errors"),
-            F.lit(0).cast("int").alias("n_spans"),
-            F.lit(0).cast("long").alias("wall_us"),
-            *[F.lit(None).cast("string").alias(e) for e in exports])
-        out = out.unionByName(fail)
+        fail = _failure_rows(
+            oversize_df, "size_gate",
+            F.concat(F.lit("max_file_size: payload chars "),
+                     payload_chars_col().cast("string"),
+                     F.lit(f" > {max_payload_chars}")))
+        # the export columns of a failure row are NULL
+        out = out.unionByName(fail, allowMissingColumns=True)
     return out
+
+
+def _failure_rows(df: DataFrame, module: str, message) -> DataFrame:
+    """Rows of documents failed before any parse: no spans, one
+    ``extract`` error from ``module`` with ``message``, zero counts."""
+    return df.select(
+        "doc_id",
+        F.array().cast(_SPANS_TYPE).alias("spans"),
+        F.lit(STATUS_FAILURE).alias("status"),
+        F.array(F.struct(
+            F.lit("extract").alias("component"),
+            F.lit(module).alias("module"),
+            message.alias("message"))).alias("errors"),
+        F.lit(0).cast("int").alias("n_spans"),
+        F.lit(0).cast("long").alias("wall_us"))
+
+
+def _in_offset_order(spans, fields):
+    """``spans`` as structs of ``fields(span)`` + offset (NULL read as
+    0) + original index ``idx``, sorted by (offset, idx) like Python's
+    stable ``sorted``. Compares, never subtracts: no overflow."""
+    tagged = F.transform(spans, lambda s, i: F.struct(
+        *fields(s), F.coalesce(s["offset"], F.lit(0)).alias("offset"),
+        i.alias("idx")))
+    return F.array_sort(
+        tagged,
+        lambda l, r: F.when(l["offset"] < r["offset"], -1)
+                      .when(l["offset"] > r["offset"], 1)
+                      .when(l["idx"] < r["idx"], -1)
+                      .when(l["idx"] > r["idx"], 1)
+                      .otherwise(0))
 
 
 def _preassembled(df: DataFrame) -> DataFrame:
@@ -652,22 +665,9 @@ def _preassembled(df: DataFrame) -> DataFrame:
       * pages = the pdf_page texts in order, or a single element
         holding the concatenation of the first-kind spans' texts.
     """
-    tagged = F.transform(
-        "spans",
-        lambda s, i: F.struct(
-            F.coalesce(s["kind"], F.lit("")).alias("kind"),
-            F.coalesce(s["text"], F.lit("")).alias("text"),
-            F.coalesce(s["media_ref"], F.lit("")).alias("media_ref"),
-            F.coalesce(s["offset"], F.lit(0)).alias("offset"),
-            i.alias("idx")))
-    ordered = F.array_sort(
-        tagged,
-        lambda l, r: F.when(l["offset"] < r["offset"], -1)
-                      .when(l["offset"] > r["offset"], 1)
-                      .when(l["idx"] < r["idx"], -1)
-                      .when(l["idx"] > r["idx"], 1)
-                      .otherwise(0))
-    df = df.withColumn("_ord", ordered)
+    df = df.withColumn("_ord", _in_offset_order(
+        "spans", lambda s: [F.coalesce(s[c], F.lit("")).alias(c)
+                            for c in ("kind", "text", "media_ref")]))
     o = F.col("_ord")
     body = F.filter(o, lambda s: s["kind"] != "media")
     first_kind = F.try_element_at(body, F.lit(1))["kind"]
@@ -882,16 +882,15 @@ def extract_routed(
         sides.append(df.filter(route == "image").select(
             "doc_id",
             F.transform(
-                F.expr("array_sort(spans, (a, b) -> a.offset - b.offset)"),
+                _in_offset_order(
+                    "spans", lambda s: [s["media_ref"].alias("media_ref")]),
                 lambda s, i: F.struct(
                     F.lit("picture").alias("kind"),
                     F.lit("").alias("text"),
                     s["media_ref"].alias("media_ref"),
                     i.cast("int").alias("offset"))).alias("spans"),
             F.lit(STATUS_SUCCESS).alias("status"),
-            F.array().cast(
-                "array<struct<component:string,module:string,"
-                "message:string>>").alias("errors"),
+            F.array().cast(ArrayType(ERROR_TYPE)).alias("errors"),
             F.size("spans").cast("int").alias("n_spans"),
             F.lit(0).cast("long").alias("wall_us")))
     return functools.reduce(DataFrame.unionByName, sides)

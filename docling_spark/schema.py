@@ -1,5 +1,5 @@
 """Spark schemas for the extraction engine (input_hint shape from
-BASELINE.json + output/error/metrics shapes from FIXTURES.md §1-2,5)."""
+BASELINE.json + output/error shapes from FIXTURES.md §1-2)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 SPAN_TYPE = StructType([
@@ -47,16 +46,6 @@ OUTPUT_DDL = (
     "errors array<struct<component:string,module:string,message:string>>, "
     "n_spans int, wall_us long"
 )
-
-METRICS_SCHEMA = StructType([
-    StructField("run_id", StringType()),
-    StructField("partition_id", IntegerType()),
-    StructField("doc_count", LongType()),
-    StructField("span_count", LongType()),
-    StructField("error_count", LongType()),
-    StructField("wall_ms", LongType()),
-    StructField("committed_at", TimestampType()),
-])
 
 STATUS_SUCCESS = "success"
 STATUS_PARTIAL = "partial_success"

@@ -15,9 +15,11 @@ stage, snapshot commit at the end):
     read → resume anti-join → domain reputation gate → LM quality
     gate → quality/lang gates + exact & SimHash near-dup removal
     (operators/curate.curate) → cross-doc boilerplate line strip →
-    exact repeated-substring removal → train/val/test split →
-    sequence packing side-table → snapshot commit + per-partition
-    lineage metrics + one JSON summary line.
+    exact repeated-substring removal → train/val/test split → one
+    uncached snapshot write (lake.SnapshotTable.write_snapshot:
+    metrics per data file, nothing committed if every doc was dropped)
+    → packing side-table from the snapshot → processed-ids append →
+    one JSON summary line.
 
 Re-running after a kill resumes from the last committed snapshot
 (the manifest is the only commit point), same as the extract job.
@@ -49,19 +51,6 @@ def build_spark(partitions: int) -> SparkSession:
     )
 
 
-def curate_metrics(out):
-    """Per-partition lineage for the curated table (the curation
-    analogue of lake.partition_metrics — no span/status columns
-    here, doc + token counts instead)."""
-    return (out
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("n_tokens").alias("n_tokens"),
-                 F.min("doc_id").alias("min_doc_id"),
-                 F.max("doc_id").alias("max_doc_id")))
-
-
 def main(argv=None, _spark: SparkSession = None) -> int:
     # _spark: test hook — run the job inside an existing session
     # (and leave it running) instead of building/stopping one
@@ -91,7 +80,8 @@ def main(argv=None, _spark: SparkSession = None) -> int:
                     help="also write the sequence-packing side-table")
     args = ap.parse_args(argv)
 
-    from docling_spark.lake import SnapshotTable, resume_filter
+    from docling_spark.lake import (SnapshotTable, partition_metrics,
+                                    resume_filter)
     from docling_spark.operators.curate import (curate, gate_by_source,
                                                 source_reputation)
     from docling_spark.operators.textstats import tokens_col
@@ -166,37 +156,24 @@ def main(argv=None, _spark: SparkSession = None) -> int:
         from docling_spark.operators.packing import split_docs
         out = split_docs(out)
 
-    out = out.persist()
-    n_out = out.count()
+    entry = table.write_snapshot(out, metrics=partition_metrics)
     kept.unpersist()
-    if n_out == 0:
-        out.unpersist()
-        # every todo doc was dropped: record the decisions so the next
-        # run doesn't re-curate them forever
-        todo.select("doc_id").write.mode("append").parquet(proc_path)
-        print(json.dumps({"status": "committed_empty", "docs": 0,
-                          "stages": counters}))
-        if _spark is None:
-            spark.stop()
-        return 0
-    counters["output"] = n_out
-
-    if args.pack:
+    counters["output"] = entry["rows"] if entry else 0
+    if entry and args.pack:
         from docling_spark.operators.packing import pack_sequences
         path = f"{args.output}/packing"
-        (pack_sequences(out.select("doc_id", "n_tokens"),
+        committed = spark.read.parquet(entry["data"])
+        (pack_sequences(committed.select("doc_id", "n_tokens"),
                         seq_len=args.pack, n_shards=args.partitions)
          .write.mode("overwrite").parquet(path))
         side_outputs["packing"] = path
-
-    entry = table.write_snapshot(out, metrics=curate_metrics(out))
-    (todo.select("doc_id")
-     .write.mode("append").parquet(proc_path))
-    out.unpersist()
+    # record the decisions last, also when every todo doc was dropped,
+    # so the next run doesn't re-curate them forever
+    todo.select("doc_id").write.mode("append").parquet(proc_path)
 
     print(json.dumps({
-        "status": "committed",
-        "snapshot": entry["id"],
+        "status": "committed" if entry else "committed_empty",
+        "snapshot": entry["id"] if entry else None,
         "stages": counters,
         "wall_sec": round(time.monotonic() - t0, 2),
         **({"side_outputs": side_outputs} if side_outputs else {}),

@@ -12,9 +12,10 @@ Flow (SURVEY.md §7.1):
     input docs per extract_routed branch) → resume anti-join vs
     committed snapshot → routed extraction of the branches the input
     has (doc path, page-parallel path, raw-PDF path, image path) →
-    write snapshot (atomic manifest commit) + per-partition
-    lineage/metrics table → print one JSON summary line, with the
-    route counts under "routes".
+    one uncached snapshot write (lake.SnapshotTable.write_snapshot:
+    metrics per data file, atomic manifest commit, status "noop" when
+    nothing was left to do) → print one JSON summary line, with the
+    route counts under "routes". --export/--enrich read the snapshot.
 
 Re-running after a kill resumes from the last committed snapshot:
 uncommitted data directories are invisible to readers (the manifest is
@@ -105,37 +106,31 @@ def main(argv=None) -> int:
     obs = Observation("extract")
     out = out.observe(
         obs,
-        F.count(F.lit(1)).alias("docs"),
         F.sum("n_spans").alias("spans"),
         F.sum((F.col("status") != "success").cast("long")).alias("errors"))
-
-    # one pass: persist output, derive metrics from the persisted data
-    out = out.persist()
-    n_out = out.count()
-    if n_out == 0:
-        out.unpersist()
+    entry = table.write_snapshot(out, metrics=partition_metrics)
+    if entry is None:
         print(json.dumps({"status": "noop", "docs": 0,
                           "resume": "all input already committed",
                           "routes": routes}))
         spark.stop()
         return 0
-
-    metrics = partition_metrics(out)
-    entry = table.write_snapshot(out, metrics=metrics)
     counters = obs.get
 
     side_outputs = {}
+    if args.export or args.enrich:
+        committed = spark.read.parquet(entry["data"])
     if args.export:
         from docling_spark.operators import export as ex
         render = {"markdown": ex.export_markdown, "text": ex.export_text,
                   "doctags": ex.export_doctags, "html": ex.export_html}
         path = f"{args.output}/exports/{args.export}"
-        render[args.export](out).write.mode("overwrite").parquet(path)
+        render[args.export](committed).write.mode("overwrite").parquet(path)
         side_outputs["export"] = path
     if args.enrich:
         from docling_spark.operators.enrich import enrich_spans
         path = f"{args.output}/enrichment"
-        enrich_spans(out).write.mode("overwrite").parquet(path)
+        enrich_spans(committed).write.mode("overwrite").parquet(path)
         side_outputs["enrichment"] = path
     if args.main_content:
         from docling_spark.operators.maincontent import extract_main_content
@@ -143,19 +138,17 @@ def main(argv=None) -> int:
         (extract_main_content(todo, num_partitions=args.partitions)
          .write.mode("overwrite").parquet(path))
         side_outputs["main_content"] = path
-    out.unpersist()
 
     print(json.dumps({
         "status": "committed",
         "snapshot": entry["id"],
-        "docs": counters.get("docs"),
+        "docs": entry["rows"],
         "spans": counters.get("spans"),
         "errors": counters.get("errors"),
         "routes": routes,
         "wall_sec": round(time.monotonic() - t0, 2),
         "docs_per_sec": round(
-            (counters.get("docs") or 0)
-            / max(time.monotonic() - t0, 1e-9), 1),
+            entry["rows"] / max(time.monotonic() - t0, 1e-9), 1),
         **({"side_outputs": side_outputs} if side_outputs else {}),
     }))
     spark.stop()

@@ -264,3 +264,27 @@ def test_routed_rows_match_each_branch_called_directly(spark):
         "html": "success", "md": "success", "media_only": "skipped",
         "oversize": "failure", "paged": "success", "raw": "success",
         "raw_bad": "failure", "image": "success"}
+
+
+def test_routed_image_docs_with_hostile_offsets(spark):
+    """Pure-image docs whose offsets are NULL or far apart (a
+    subtracting comparator overflows on 2147483647 and -5 under ANSI)
+    each give one success row, pictures in (offset, index) order with
+    NULL read as 0."""
+    from docling_spark.operators.extract import extract_routed
+
+    rows = [("img_null", [("image", "", "img://n", None),
+                          ("image", "", "img://z", 1),
+                          ("image", "", "img://a", 0)]),
+            ("img_wide", [("image", "", "img://max", 2147483647),
+                          ("image", "", "img://neg", -5),
+                          ("image", "", "img://neg2", -5)])]
+    got = extract_routed(spark.createDataFrame(rows, schema=INPUT_SCHEMA))
+    by_id = {r["doc_id"]: r for r in got.collect()}
+    assert set(by_id) == {"img_null", "img_wide"}
+    assert {r["status"] for r in by_id.values()} == {"success"}
+    assert [s["media_ref"] for s in by_id["img_null"]["spans"]] == [
+        "img://n", "img://a", "img://z"]
+    assert [s["media_ref"] for s in by_id["img_wide"]["spans"]] == [
+        "img://neg", "img://neg2", "img://max"]
+    assert [s["offset"] for s in by_id["img_wide"]["spans"]] == [0, 1, 2]

@@ -28,7 +28,7 @@ def test_resume_skips_committed(spark, tmp_path):
 
     # run 1: commit the first half
     first = extract_spans(_corpus(spark, range(0, 5)))
-    table.write_snapshot(first, metrics=partition_metrics(first))
+    table.write_snapshot(first, metrics=partition_metrics)
     assert len(table.snapshots()) == 1
 
     # run 2: full input arrives again; resume must keep only d5..d9
@@ -37,7 +37,7 @@ def test_resume_skips_committed(spark, tmp_path):
     assert todo_ids == [f"d{i}" for i in range(5, 10)]
 
     second = extract_spans(todo)
-    table.write_snapshot(second, metrics=partition_metrics(second))
+    table.write_snapshot(second, metrics=partition_metrics)
 
     # combined table is complete, no duplicates
     all_rows = table.read(spark)
@@ -88,6 +88,73 @@ def test_partition_metrics_totals(spark):
         "partition_id", "n_docs", "n_spans", "n_errors", "wall_us"}
 
 
+def test_write_snapshot_runs_the_plan_once(spark, tmp_path):
+    """The data write is the only pass over df: the metrics come from
+    the files it wrote, so a UDF in df's plan sees each row once."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def tally(batches):
+        for b in batches:
+            seen.add(len(b))
+            yield b
+
+    out = extract_spans(_corpus(spark, range(0, 6)))
+    df = out.mapInPandas(tally, schema=out.schema)
+    entry = SnapshotTable(str(tmp_path / "lake")).write_snapshot(
+        df, metrics=partition_metrics)
+    assert entry["rows"] == 6
+    assert seen.value == 6
+
+
+def test_empty_write_commits_nothing(spark, tmp_path):
+    root = tmp_path / "lake"
+    table = SnapshotTable(str(root))
+    empty = extract_spans(_corpus(spark, []))
+    assert table.write_snapshot(empty, metrics=partition_metrics) is None
+    assert table.snapshots() == []
+    assert table.read(spark) is None
+    assert not list(root.glob("snap-*"))
+    assert not (root / "metrics").exists()
+
+
+def test_metrics_row_per_data_file(spark, tmp_path):
+    """One metrics row per non-empty data file: partition_id is the
+    file's part-NNNNN index and the counts are the file's own."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    table = SnapshotTable(str(tmp_path / "lake"))
+    # every third doc has an unknown kind: skipped, so an error row
+    rows = [(f"d{i:02d}", [("html" if i % 3 else "xyz",
+                            f"<html><body><h1>T{i}</h1></body></html>",
+                            "", 0)])
+            for i in range(12)]
+    corpus = spark.createDataFrame(rows, schema=INPUT_SCHEMA)
+    entry = table.write_snapshot(
+        extract_spans(corpus, num_partitions=5), metrics=partition_metrics)
+
+    want = {}
+    for f in sorted(os.listdir(entry["data"])):
+        if not f.startswith("part-"):
+            continue
+        t = pq.read_table(os.path.join(entry["data"], f)).to_pydict()
+        if not t["doc_id"]:
+            continue
+        pid = int(re.match(r"part-(\d+)", f).group(1))
+        want[pid] = (len(t["doc_id"]), sum(t["n_spans"]),
+                     sum(s != "success" for s in t["status"]),
+                     sum(t["wall_us"]), min(t["doc_id"]), max(t["doc_id"]))
+    assert len(want) > 1
+    assert sum(v[2] for v in want.values()) == 4
+    got = {r["partition_id"]: (r["n_docs"], r["n_spans"], r["n_errors"],
+                               r["wall_us"], r["min_doc_id"],
+                               r["max_doc_id"])
+           for r in table.read_metrics(spark).collect()}
+    assert got == want
+    assert sum(v[0] for v in got.values()) == entry["rows"] == 12
+
+
 def test_concurrent_commits_keep_all_snapshots(spark, tmp_path):
     """Two committers racing on the manifest must both land (the flock
     serializes the read-modify-replace; round-1 bug: last writer wins,
@@ -130,7 +197,7 @@ def test_iceberg_roundtrip_when_jar_present(spark, tmp_path):
     table = open_table(spark, "spark_catalog.default.lake_rt",
                        backend="iceberg")
     out = extract_spans(_corpus(spark, range(0, 4)))
-    table.write_snapshot(out, metrics=partition_metrics(out))
+    table.write_snapshot(out, metrics=partition_metrics)
     assert table.read(spark).count() == 4
     assert resume_filter(_corpus(spark, range(0, 6)), table).count() == 2
 
@@ -198,7 +265,7 @@ def test_iceberg_packages_resolution_live(tmp_path):
         assert iceberg_available(s)
         table = open_table(s, "live.db.lake_rt", backend="iceberg")
         out = extract_spans(_corpus(s, range(0, 4)))
-        table.write_snapshot(out, metrics=partition_metrics(out))
+        table.write_snapshot(out, metrics=partition_metrics)
         assert table.read(s).count() == 4
         assert resume_filter(_corpus(s, range(0, 6)), table).count() == 2
     finally:
@@ -310,7 +377,7 @@ def test_iceberg_metrics_route_to_sidecar_table():
     log = []
     fs = _FakeSpark(tables=["cat.db.tbl"])
     t = IcebergTable(fs, "cat.db.tbl")
-    t.write_snapshot(_FakeDF(log), metrics=_FakeDF(log))
+    t.write_snapshot(_FakeDF(log), metrics=lambda df: _FakeDF(log))
     assert log == [("append", "cat.db.tbl", None),
                    ("create", "cat.db.tbl_metrics", "iceberg")]
 

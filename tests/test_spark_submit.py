@@ -97,3 +97,40 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
          if ln.startswith("{")][-1])
     assert summary2["status"] == "noop"
     assert summary2["routes"] == summary["routes"]
+    # the noop run committed nothing and left no data directory behind
+    assert len(json.loads(manifest.read_text())["snapshots"]) == 1
+    assert len(list(out_dir.glob("snap-*"))) == 1
+
+
+@pytest.mark.skipif(not os.path.exists(SF_DIR), reason="testdata absent")
+@pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT),
+                    reason="spark-submit binary absent")
+def test_extract_job_export_and_enrich(tmp_path):
+    """--export and --enrich render from the committed snapshot: one
+    export row per committed doc, and the enrichment table is
+    written."""
+    out_dir = tmp_path / "lake"
+    proc = subprocess.run(
+        [SPARK_SUBMIT, "--master", "local[2]",
+         "--conf", "spark.ui.enabled=false",
+         str(ROOT / "jobs" / "extract.py"),
+         "--input", f"synth:{SF_DIR}",
+         "--output", str(out_dir),
+         "--partitions", "4",
+         "--export", "markdown", "--enrich"],
+        cwd=str(tmp_path), env={**os.environ, "PYTHONPATH": str(ROOT)},
+        capture_output=True, text=True, timeout=420)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    summary = json.loads(
+        [ln for ln in proc.stdout.strip().splitlines()
+         if ln.startswith("{")][-1])
+    assert summary["status"] == "committed"
+    snaps = json.loads((out_dir / "_snapshots.json").read_text())["snapshots"]
+    assert len(snaps) == 1
+    committed = pq.read_table(snaps[0]["data"], columns=["doc_id"])
+    exported = pq.read_table(summary["side_outputs"]["export"])
+    assert exported.num_rows == committed.num_rows == summary["docs"] > 0
+    assert (sorted(exported.column("doc_id").to_pylist())
+            == sorted(committed.column("doc_id").to_pylist()))
+    assert set(exported.column_names) == {"doc_id", "markdown"}
+    assert os.path.isdir(summary["side_outputs"]["enrichment"])
