@@ -149,29 +149,6 @@ def banded_hashes(sigs: DataFrame, *, num_hashes: int = 16,
                     F.col("b.band_hash").alias("band_hash")))
 
 
-def lsh_candidate_pairs(sh: DataFrame, *, num_hashes: int = 16,
-                        bands: int = 4,
-                        signatures=None) -> DataFrame:
-    """Candidate near-dup pairs (doc_a < doc_b) from LSH band buckets.
-    Takes the exploded-shingle table (reuse it for the verify step).
-    ``signatures`` selects the minhash construction (default: the
-    cheap a + s·b family; pass minhash_signatures_indep for the
-    independent family with the textbook P(band) = J^r recall curve —
-    see that function's docstring for why they differ)."""
-    sig_fn = signatures or minhash_signatures
-    banded = banded_hashes(sig_fn(sh, num_hashes=num_hashes),
-                           num_hashes=num_hashes, bands=bands)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (left.join(right,
-                      (F.col("l.band_id") == F.col("r.band_id"))
-                      & (F.col("l.band_hash") == F.col("r.band_hash"))
-                      & (F.col("l.doc_id") < F.col("r.doc_id")))
-            .select(F.col("l.doc_id").alias("doc_a"),
-                    F.col("r.doc_id").alias("doc_b"))
-            .distinct())
-
-
 def ngram_jaccard(sh: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact Jaccard over word n-gram shingle sets, computed only for
     the given candidate pairs: equijoin on shingle within pairs →

@@ -88,38 +88,25 @@ PAGE_OUT_DDL = ("doc_id string, page_offset int, "
 
 
 def _page_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..parsers.pdf_page import parse_page
+    from ..parsers.pdf_page import FURNITURE_LABELS, page_items, parse_page
     for pdf in batches:
         out = {"doc_id": [], "page_offset": [], "blocks": [],
                "headers": [], "footers": [], "error": [], "wall_us": []}
         for doc_id, off, payload in zip(
                 pdf["doc_id"], pdf["page_offset"], pdf["payload"]):
             t0 = time.monotonic_ns()
-            blocks: list = []
-            headers: list = []
-            footers: list = []
+            items: list = []
             err = None
             try:
-                page = parse_page(payload or "")
-                if page["labeled_blocks"]:
-                    # model-driven path: typed blocks; furniture labels
-                    # route to headers/footers (page_assemble_model.py:
-                    # 83-155 label routing; same rule as parse_pdf_pages)
-                    for kind, text in page["labeled_blocks"]:
-                        if kind == "page_header":
-                            headers.append(text)
-                        elif kind == "page_footer":
-                            footers.append(text)
-                        else:
-                            blocks.append((kind, text))
-                else:
-                    headers, footers = page["headers"], page["footers"]
-                    blocks = [("text", b) for b in page["blocks"]]
+                items = page_items(parse_page(payload or ""))
             except Exception as exc:  # per-page containment
                 err = f"{type(exc).__name__}: {exc}"[:500]
+            headers, footers = ([t for k, t in items if k == f]
+                                for f in FURNITURE_LABELS)
             out["doc_id"].append(doc_id)
             out["page_offset"].append(off)
-            out["blocks"].append(blocks)
+            out["blocks"].append(
+                [(k, t) for k, t in items if k not in FURNITURE_LABELS])
             out["headers"].append(headers)
             out["footers"].append(footers)
             out["error"].append(err)
@@ -145,6 +132,27 @@ def _page_rows(df: DataFrame, page_range: Optional[tuple],
     if num_partitions:
         pages = pages.repartition(num_partitions, "doc_id", "page_offset")
     return pages
+
+
+def _page_map(df: DataFrame, page_range: Optional[tuple],
+              num_partitions: Optional[int], ddl: str,
+              rows_of: Callable[[str], list]) -> DataFrame:
+    """One Arrow-batched pass over the page rows of ``df``: each page
+    gives the rows ``rows_of(payload)`` returns, each prefixed with its
+    (doc_id, page_no); ``ddl`` is the output schema."""
+    columns = [field.split()[0] for field in ddl.split(", ")]
+
+    def _page_rows_batches(batches: Iterator[pd.DataFrame]) \
+            -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [(doc_id, off, *row) for doc_id, off, payload in zip(
+                    pdf["doc_id"], pdf["page_offset"], pdf["payload"])
+                 for row in rows_of(payload)],
+                columns=columns)
+
+    return _page_rows(df, page_range, num_partitions).mapInPandas(
+        _page_rows_batches, schema=ddl)
 
 
 def extract_spans_paged(
@@ -257,39 +265,19 @@ PAGE_CELLS_DDL = ("doc_id string, page_no int, cell_index int, "
                   "text string, l double, t double, r double, b double")
 
 
-def _make_page_cells_batches(merge: bool):
-    def _page_cells_batches(batches: Iterator[pd.DataFrame]) \
-            -> Iterator[pd.DataFrame]:
-        import json
-
-        from ..parsers.pdf_page import Cell, merge_horizontal_cells
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "page_no", "cell_index",
-                                   "text", "l", "t", "r", "b")}
-            for doc_id, off, payload in zip(
-                    pdf["doc_id"], pdf["page_offset"], pdf["payload"]):
-                try:
-                    page = json.loads(payload or "{}")
-                    cells = [Cell(int(c.get("index", i)), c.get("text", ""),
-                                  float(c["l"]), float(c["t"]),
-                                  float(c["r"]), float(c["b"]))
-                             for i, c in enumerate(page.get("cells", []))]
-                except Exception:
-                    cells = []
-                cells.sort(key=lambda c: c.index)
-                if merge:
-                    cells = merge_horizontal_cells(cells)
-                for c in cells:
-                    out["doc_id"].append(doc_id)
-                    out["page_no"].append(off)
-                    out["cell_index"].append(c.index)
-                    out["text"].append(c.text)
-                    out["l"].append(c.l)
-                    out["t"].append(c.t)
-                    out["r"].append(c.r)
-                    out["b"].append(c.b)
-            yield pd.DataFrame(out)
-    return _page_cells_batches
+def _cell_rows(payload: Optional[str], merge: bool) -> list:
+    """(cell_index, text, l, t, r, b) of a page's cells in index order,
+    sub-word merged when ``merge``; none for a page that does not
+    decode."""
+    from ..parsers.pdf_page import decode_page, merge_horizontal_cells
+    try:
+        cells = sorted(decode_page(payload or "{}").cells,
+                       key=lambda c: c.index)
+        if merge:
+            cells = merge_horizontal_cells(cells)
+    except Exception:
+        return []
+    return [(c.index, c.text, c.l, c.t, c.r, c.b) for c in cells]
 
 
 def page_cells(
@@ -311,9 +299,8 @@ def page_cells(
     parity test drives the real ``*.pages.json`` corpus through.
     Output: (doc_id, page_no, cell_index, text, l, t, r, b),
     page-parallel end-to-end — no doc-level shuffle."""
-    pages = _page_rows(df, page_range, num_partitions)
-    return pages.mapInPandas(_make_page_cells_batches(merge),
-                             schema=PAGE_CELLS_DDL)
+    return _page_map(df, page_range, num_partitions, PAGE_CELLS_DDL,
+                     functools.partial(_cell_rows, merge=merge))
 
 
 def text_in_rect(cells: DataFrame, rects: DataFrame) -> DataFrame:
@@ -377,48 +364,26 @@ _NO_TEXT_LABELS = {"picture", "table", "document_index", "form",
                    "key_value_region"}
 
 
-def _page_elements_batches(batches: Iterator[pd.DataFrame]) \
-        -> Iterator[pd.DataFrame]:
-    import json
+def _page_layout(payload: Optional[str]) -> list:
+    """A page's stored layout predictions through the full
+    postprocessor (parsers/layout_post.py) over its cells as stored
+    (unsorted, unmerged): the surviving clusters in order, none for a
+    page that does not decode or postprocess."""
+    from ..parsers.layout_post import postprocess_layout
+    from ..parsers.pdf_page import decode_page
+    try:
+        page = decode_page(payload or "{}")
+        return postprocess_layout(page.cells, page.clusters,
+                                  (page.width, page.height))
+    except Exception:
+        return []
 
-    from ..parsers.layout_post import LayoutCluster, postprocess_layout
-    from ..parsers.pdf_page import Cell, sanitize_text
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "page_no", "elem_index",
-                               "label", "text")}
-        for doc_id, off, payload in zip(
-                pdf["doc_id"], pdf["page_offset"], pdf["payload"]):
-            try:
-                page = json.loads(payload or "{}")
-                cells = [Cell(int(c.get("index", i)), c.get("text", ""),
-                              float(c["l"]), float(c["t"]),
-                              float(c["r"]), float(c["b"]))
-                         for i, c in enumerate(page.get("cells", []))]
-                preds = [LayoutCluster(
-                    id=int(cl.get("id", i)),
-                    label=str(cl.get("label", "text")),
-                    bbox=(float(cl["l"]), float(cl["t"]),
-                          float(cl["r"]), float(cl["b"])),
-                    confidence=float(cl.get("confidence", 1.0)))
-                    for i, cl in enumerate(page.get("clusters") or [])]
-                size = (float(page.get("width", 612.0)),
-                        float(page.get("height", 792.0)))
-                ordered = postprocess_layout(cells, preds, size)
-            except Exception:
-                ordered = []
-            for i, cluster in enumerate(ordered):
-                if cluster.label in _NO_TEXT_LABELS:
-                    text = ""
-                else:
-                    lines = [c.text.replace("\x02", "-").strip()
-                             for c in cluster.cells if c.text.strip()]
-                    text = sanitize_text(lines) if lines else ""
-                out["doc_id"].append(doc_id)
-                out["page_no"].append(off)
-                out["elem_index"].append(i)
-                out["label"].append(cluster.label)
-                out["text"].append(text)
-        yield pd.DataFrame(out)
+
+def _element_rows(payload: Optional[str]) -> list:
+    from ..parsers.pdf_page import cell_text
+    return [(i, cl.label,
+             "" if cl.label in _NO_TEXT_LABELS else cell_text(cl.cells))
+            for i, cl in enumerate(_page_layout(payload))]
 
 
 def page_elements(
@@ -440,9 +405,8 @@ def page_elements(
     fixture (tests/test_real_pdf.py + the pdf_real_assembled oracle).
     Output: (doc_id, page_no, elem_index, label, text); page-parallel,
     zero shuffles."""
-    pages = _page_rows(df, page_range, num_partitions)
-    return pages.mapInPandas(_page_elements_batches,
-                             schema=PAGE_ELEMENTS_DDL)
+    return _page_map(df, page_range, num_partitions, PAGE_ELEMENTS_DDL,
+                     _element_rows)
 
 
 PAGE_CLUSTERS_DDL = ("doc_id string, page_no int, cluster_rank int, "
@@ -450,48 +414,10 @@ PAGE_CLUSTERS_DDL = ("doc_id string, page_no int, cluster_rank int, "
                      "n_cells int, text string")
 
 
-def _page_clusters_batches(batches: Iterator[pd.DataFrame]) \
-        -> Iterator[pd.DataFrame]:
-    import json
-
-    from ..parsers.layout_post import LayoutCluster, postprocess_layout
-    from ..parsers.pdf_page import Cell
-    cols = ("doc_id", "page_no", "cluster_rank", "label",
-            "l", "t", "r", "b", "n_cells", "text")
-    for pdf in batches:
-        out = {k: [] for k in cols}
-        for doc_id, off, payload in zip(
-                pdf["doc_id"], pdf["page_offset"], pdf["payload"]):
-            try:
-                page = json.loads(payload or "{}")
-                cells = [Cell(int(c.get("index", i)), c.get("text", ""),
-                              float(c["l"]), float(c["t"]),
-                              float(c["r"]), float(c["b"]))
-                         for i, c in enumerate(page.get("cells", []))]
-                preds = [LayoutCluster(
-                    id=int(cl.get("id", i)),
-                    label=str(cl.get("label", "text")),
-                    bbox=(float(cl["l"]), float(cl["t"]),
-                          float(cl["r"]), float(cl["b"])),
-                    confidence=float(cl.get("confidence", 1.0)))
-                    for i, cl in enumerate(page.get("clusters") or [])]
-                size = (float(page.get("width", 612.0)),
-                        float(page.get("height", 792.0)))
-                ordered = postprocess_layout(cells, preds, size)
-            except Exception:
-                ordered = []
-            for i, cl in enumerate(ordered):
-                out["doc_id"].append(doc_id)
-                out["page_no"].append(off)
-                out["cluster_rank"].append(i)
-                out["label"].append(cl.label)
-                out["l"].append(int(round(cl.bbox[0])))
-                out["t"].append(int(round(cl.bbox[1])))
-                out["r"].append(int(round(cl.bbox[2])))
-                out["b"].append(int(round(cl.bbox[3])))
-                out["n_cells"].append(len(cl.cells))
-                out["text"].append(" ".join(c.text for c in cl.cells))
-        yield pd.DataFrame(out)
+def _cluster_rows(payload: Optional[str]) -> list:
+    return [(i, cl.label, *(int(round(v)) for v in cl.bbox),
+             len(cl.cells), " ".join(c.text for c in cl.cells))
+            for i, cl in enumerate(_page_layout(payload))]
 
 
 def page_clusters(
@@ -518,9 +444,8 @@ def page_clusters(
     page-local geometry (n≈10² clusters/page), zero shuffles beyond
     the optional doc/page repartition; page-parallel at 10^12 pages.
     """
-    pages = _page_rows(df, page_range, num_partitions)
-    return pages.mapInPandas(_page_clusters_batches,
-                             schema=PAGE_CLUSTERS_DDL)
+    return _page_map(df, page_range, num_partitions, PAGE_CLUSTERS_DDL,
+                     _cluster_rows)
 
 
 # ---------------------------------------------------------------------------
@@ -543,7 +468,6 @@ def extract_spans(
     with_markdown: bool = False,
     with_itxt: bool = False,
     with_html: bool = False,
-    oversize: str = "drop",
 ) -> DataFrame:
     """(doc_id, spans) → (doc_id, spans, status, errors, n_spans, wall_us
     [, markdown] [, itxt] [, html]).
@@ -566,19 +490,16 @@ def extract_spans(
     against a plain-Python statement of the assembly rules on
     adversarial and random inputs.
 
-    ``oversize`` controls what happens to documents over
-    ``max_payload_chars``: ``"drop"`` (default) filters them before the
-    UDF — the cheap shape for bulk pipelines; ``"fail"`` reports each
-    as a status='failure' row with a max_file_size error, matching the
-    reference's contract (InputDocument size gate →
-    ConversionStatus.FAILURE, datamodel/document.py:130-143,
-    tests/test_invalid_input.py:38-40). The failure rows are built with
-    pure Catalyst — oversize payloads never reach Python.
-
-    Catalyst prefilters (size gate, allowed kinds) run before the UDF.
-    Partitioning is hash(doc_id) — one doc per row, so doc-hash balance
-    is the right default; skewed mega-PDFs use the page-parallel path
-    (extract_spans_paged) instead.
+    The pre-parse gates (``_gated``: allowed kinds, size gate) are
+    Catalyst predicates before the UDF; a document over
+    ``max_payload_chars`` becomes a status='failure' row with a
+    max_file_size error, the reference's contract (InputDocument size
+    gate → ConversionStatus.FAILURE, datamodel/document.py:130-143,
+    tests/test_invalid_input.py:38-40), built with pure Catalyst —
+    oversize payloads never reach Python. Partitioning is hash(doc_id)
+    — one doc per row, so doc-hash balance is the right default;
+    skewed mega-PDFs use the page-parallel path (extract_spans_paged)
+    instead.
 
     ``with_markdown`` adds a docling-dialect markdown rendering of the
     parse tree (byte-parity with the reference's export_to_markdown
@@ -591,29 +512,37 @@ def extract_spans(
     exports = tuple(name for name, on in (("markdown", with_markdown),
                                           ("itxt", with_itxt),
                                           ("html", with_html)) if on)
-    if allowed_kinds is not None:
-        df = df.filter(
-            F.exists("spans", lambda s: s["kind"].isin(list(allowed_kinds))))
-    oversize_df = None
-    if max_payload_chars is not None:
-        fits = payload_chars_col() <= F.lit(max_payload_chars)
-        if oversize == "fail":
-            oversize_df = df.filter(~fits)
-        df = df.filter(fits)
+    df, failed = _gated(df, allowed_kinds, max_payload_chars)
     if num_partitions:
         df = df.repartition(num_partitions, "doc_id")
     out = _preassembled(df).mapInPandas(
         _make_doc_batches(exports),
         schema=OUTPUT_DDL + "".join(f", {e} string" for e in exports))
-    if oversize_df is not None:
-        fail = _failure_rows(
-            oversize_df, "size_gate",
-            F.concat(F.lit("max_file_size: payload chars "),
-                     payload_chars_col().cast("string"),
-                     F.lit(f" > {max_payload_chars}")))
+    if failed is not None:
         # the export columns of a failure row are NULL
-        out = out.unionByName(fail, allowMissingColumns=True)
+        out = out.unionByName(failed, allowMissingColumns=True)
     return out
+
+
+def _gated(df: DataFrame, allowed_kinds: Optional[List[str]],
+           max_payload_chars: Optional[int]) -> tuple:
+    """The pre-parse gates as Catalyst predicates: a document with no
+    span of ``allowed_kinds`` is left out (the allowed-format filter,
+    document_converter.py:307-309); a document over
+    ``max_payload_chars`` becomes a size_gate failure row. Returns
+    (documents that pass, failure rows or None); a gate that is None
+    adds no plan node."""
+    if allowed_kinds is not None:
+        df = df.filter(
+            F.exists("spans", lambda s: s["kind"].isin(list(allowed_kinds))))
+    if max_payload_chars is None:
+        return df, None
+    chars = payload_chars_col()
+    failed = _failure_rows(
+        df.filter(chars > max_payload_chars), "size_gate",
+        F.concat(F.lit("max_file_size: payload chars "),
+                 chars.cast("string"), F.lit(f" > {max_payload_chars}")))
+    return df.filter(chars <= max_payload_chars), failed
 
 
 def _failure_rows(df: DataFrame, module: str, message) -> DataFrame:
@@ -813,7 +742,6 @@ def extract_routed(
     num_partitions: Optional[int] = None,
     allowed_kinds: Optional[List[str]] = None,
     max_payload_chars: Optional[int] = None,
-    oversize: str = "drop",
     routes: Optional[Mapping[str, int]] = None,
 ) -> DataFrame:
     """Production entry: paginated documents (pdf_page spans) take the
@@ -821,6 +749,12 @@ def extract_routed(
     takes the one-doc-one-task path. Both run from the same input scan;
     results union to one output table. ``route_col`` decides each
     document's branch.
+
+    The pre-parse gates (``allowed_kinds``, ``max_payload_chars``; see
+    ``extract_spans``) apply to the whole input before routing, so
+    every route passes them: a document of no allowed kind is left
+    out, and an oversize one always becomes a size_gate failure row,
+    whatever its route.
 
     ``routes`` (route → document count, as ``route_counts`` returns)
     decides which branches are planned at all: a branch without
@@ -853,17 +787,15 @@ def extract_routed(
     pdf_page corpora. One extra zero-shuffle Arrow stage; the page
     explode after it keeps mega-PDF skew structural, not salted."""
     from .pdfnative import pdf_to_page_spans
+    df, failed = _gated(df, allowed_kinds, max_payload_chars)
     if routes is None:
         routes = route_counts(df)
     planned = {r for r in ROUTES if routes.get(r)} or {"doc"}
     route = route_col()
-    sides = []
+    sides = [] if failed is None else [failed]
     if "doc" in planned:
-        sides.append(extract_spans(
-            df.filter(route == "doc"),
-            allowed_kinds=allowed_kinds,
-            max_payload_chars=max_payload_chars,
-            num_partitions=num_partitions, oversize=oversize))
+        sides.append(extract_spans(df.filter(route == "doc"),
+                                   num_partitions=num_partitions))
     paged_in = []
     if "paged" in planned:
         paged_in.append(df.filter(route == "paged").select("doc_id", "spans"))

@@ -69,56 +69,45 @@ def pdf_to_page_spans(df: DataFrame) -> DataFrame:
     bridge from raw PDF bytes to the engine's page-parallel pipeline.
     pdfio parses each document's bytes into per-page line cells and
     each page becomes one span whose text is the structured-page JSON
-    payload parse_pdf_pages consumes (parsers/pdf_page.py:333) — so
-    raw bytes → native parse → merge/layout/assembly/reading-order is
+    payload (parsers/pdf_page.encode_page) parse_pdf_pages consumes —
+    so raw bytes → native parse → merge/layout/assembly/reading-order is
     a complete in-repo path with no native library. Zero-shuffle Arrow
     stage; downstream extract_spans_paged explodes pages itself.
 
     Corrupt or page-less documents emit ONE sentinel pdf_page span
-    whose payload carries a ``pdfio_error`` field; parse_page raises
+    (parsers/pdf_page.error_page) carrying the error; parse_page raises
     on it, so the paged path's existing per-page error containment
     converts the document to a FAILURE row with the real message —
     same Arrow stage, no second parse pass, nothing silently dropped
     (mirrors the reference's ConversionStatus.FAILURE on backend
     parse errors, datamodel/document.py:130-165)."""
-    import json
-
+    from docling_spark.parsers.pdf_page import encode_page, error_page
     from docling_spark.parsers.pdfio import extract_pdf_cells
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = {"doc_id": [], "spans": []}
             for doc_id, blob in zip(pdf["doc_id"], pdf["pdf"]):
-                spans = []
                 err = None
                 try:
                     pages = extract_pdf_cells(bytes(blob))
                     if not pages:
                         err = "no pages parsed"
                 except Exception as exc:
-                    pages = []
                     err = f"{type(exc).__name__}: {exc}"[:300]
-                if err is not None:
-                    out["doc_id"].append(doc_id)
-                    out["spans"].append([(
-                        "pdf_page",
-                        json.dumps({"page_no": 0, "pdfio_error": err}),
-                        "", 0)])
-                    continue
-                for off, page in enumerate(pages):
-                    payload = json.dumps({
-                        "page_no": off,
-                        "width": page["width"],
-                        "height": page["height"],
-                        "cells": [
-                            {"index": i, "text": c["text"],
-                             "l": c["x0"], "t": c["y0"],
-                             "r": c["x1"], "b": c["y1"]}
-                            for i, c in enumerate(page["cells"])],
-                    })
-                    spans.append(("pdf_page", payload, "", off))
                 out["doc_id"].append(doc_id)
-                out["spans"].append(spans)
+                if err is not None:
+                    out["spans"].append(
+                        [("pdf_page", error_page(err), "", 0)])
+                    continue
+                out["spans"].append([
+                    ("pdf_page",
+                     encode_page(off, page["width"], page["height"],
+                                 ((i, c["text"], c["x0"], c["y0"],
+                                   c["x1"], c["y1"])
+                                  for i, c in enumerate(page["cells"]))),
+                     "", off)
+                    for off, page in enumerate(pages)])
             yield pd.DataFrame(out)
 
     return df.mapInPandas(

@@ -26,7 +26,7 @@ Probe rules (deterministic, documented):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 CSV_DELIMS = [",", ";", "\t", "|"]
@@ -68,11 +68,6 @@ def format_col(payload: Column) -> Column:
               F.lit("md"))
         .when(csv_hit, F.lit("csv"))
         .otherwise(F.lit("text")))
-
-
-def with_sniffed_format(df: DataFrame,
-                        payload_col: str = "payload") -> DataFrame:
-    return df.withColumn("format", format_col(F.col(payload_col)))
 
 
 def sha256_col(payload: Column) -> Column:

@@ -170,15 +170,6 @@ def _next_tag_siblings(node: Union[Element, TextNode]) -> List[Element]:
     return [s for s in sibs[idx + 1:] if isinstance(s, Element)]
 
 
-def next_sibling(node: Union[Element, TextNode]):
-    # same Element/TextNode-only contract as _next_tag_siblings
-    if node.parent is None:
-        return None
-    sibs = node.parent.children
-    idx = sibs.index(node)
-    return sibs[idx + 1] if idx + 1 < len(sibs) else None
-
-
 class _TreeBuilder(HTMLParser):
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)

@@ -2,9 +2,17 @@
 pre-extracted text cells (SURVEY.md §2.3-2.4, FIXTURES.md `pdf_page`).
 
 Input: one payload per page, JSON
-``{page_no, width, height, cells: [{index, text, l, t, r, b}]}``
+``{page_no, width, height, cells: [{index, text, l, t, r, b}]
+[, clusters: [{id, label, confidence, l, t, r, b}]]
+[, bitmap_rects: [{l, t, r, b}]]}``
 (top-left origin, the TextCell model of
-/root/reference/docling/backend/pypdfium2_backend.py:74-107).
+/root/reference/docling/backend/pypdfium2_backend.py:74-107; clusters
+are stored layout-model predictions). A document the byte parser could
+not read is one sentinel page ``{page_no, pdfio_error}``. This module
+owns that format: ``encode_page`` and ``error_page`` write it
+(operators/pdfnative.py, sources/realpdf.py) and ``decode_page`` is
+its only reader (``parse_page`` here, the page operators of
+operators/extract.py).
 
 Algorithmic layers, ported from the reference where it implements them
 in-repo (the NN stages — layout model, TableFormer, OCR — are replaced
@@ -34,9 +42,16 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Dict, List, Optional
+from typing import Dict, List, NamedTuple, Tuple
 
-from ..doctree import DocTree, TableCell, TableData, serialize_table
+from ..doctree import (
+    BODY,
+    FURNITURE,
+    DocTree,
+    TableCell,
+    TableData,
+    serialize_table,
+)
 
 # deviation-documented heuristic knobs
 HEADER_MARGIN_FRAC = 0.05
@@ -60,6 +75,72 @@ class Cell:
     @property
     def height(self) -> float:
         return self.b - self.t
+
+
+# ---------------------------------------------------------------------------
+# the payload format
+
+
+class Page(NamedTuple):
+    page_no: int
+    width: float
+    height: float
+    cells: List[Cell]      # payload order
+    clusters: List         # layout_post.LayoutCluster, payload order
+    bitmap_rects: List[Tuple[float, float, float, float]]
+
+
+def encode_page(page_no, width, height, cells, clusters=None) -> str:
+    """One page → its payload. ``cells`` are (index, text, l, t, r, b)
+    tuples in backend order, ``clusters`` (id, label, confidence, l, t,
+    r, b) tuples of stored layout predictions, written only when there
+    are any. Values are written as given."""
+    page = {"page_no": page_no, "width": width, "height": height,
+            "cells": [{"index": i, "text": text,
+                       "l": l, "t": t, "r": r, "b": b}
+                      for i, text, l, t, r, b in cells]}
+    if clusters:
+        page["clusters"] = [{"id": i, "label": label, "confidence": conf,
+                             "l": l, "t": t, "r": r, "b": b}
+                            for i, label, conf, l, t, r, b in clusters]
+    return json.dumps(page)
+
+
+def error_page(message: str) -> str:
+    """The sentinel page of a document the byte parser could not read;
+    ``decode_page`` raises ``message`` for it."""
+    return json.dumps({"page_no": 0, "pdfio_error": message})
+
+
+def decode_page(payload: str) -> Page:
+    """A payload → its ``Page``; a missing width/height reads as US
+    Letter. Raises on a payload that is not a page (including the
+    empty string) and, with the recorded message, on the error sentinel
+    — the paged path's per-page containment turns that into the
+    document's FAILURE/PARTIAL status."""
+    page = json.loads(payload)
+    if isinstance(page, dict) and "pdfio_error" in page:
+        raise ValueError(page["pdfio_error"])
+    width = float(page.get("width", 612.0))
+    height = float(page.get("height", 792.0))
+    cells = [Cell(int(c.get("index", i)), c.get("text", ""),
+                  float(c["l"]), float(c["t"]), float(c["r"]), float(c["b"]))
+             for i, c in enumerate(page.get("cells", []))]
+    clusters: List = []
+    if page.get("clusters"):
+        from .layout_post import LayoutCluster
+        clusters = [
+            LayoutCluster(
+                id=int(cl.get("id", i)),
+                label=str(cl.get("label", "text")),
+                bbox=(float(cl["l"]), float(cl["t"]),
+                      float(cl["r"]), float(cl["b"])),
+                confidence=float(cl.get("confidence", 1.0)))
+            for i, cl in enumerate(page["clusters"])]
+    bitmaps = [(float(r["l"]), float(r["t"]), float(r["r"]), float(r["b"]))
+               for r in page.get("bitmap_rects", [])]
+    return Page(int(page.get("page_no", 0)), width, height, cells,
+                clusters, bitmaps)
 
 
 # ---------------------------------------------------------------------------
@@ -152,6 +233,15 @@ def sanitize_text(lines: List[str]) -> str:
                  ("”", '"'), ("•", "·")):
         sanitized = sanitized.replace(a, b)
     return sanitized.strip()
+
+
+def cell_text(cells: List[Cell]) -> str:
+    """Text of a block or cluster: its cells' texts in order, soft
+    hyphens \\x02 as '-', through ``sanitize_text``; '' when no cell
+    has text."""
+    lines = [c.text.replace("\x02", "-").strip() for c in cells
+             if c.text.strip()]
+    return sanitize_text(lines) if lines else ""
 
 
 # ---------------------------------------------------------------------------
@@ -399,60 +489,36 @@ def _bind_captions(clusters: List) -> List:
 def parse_page(payload: str) -> Dict:
     """One structured-page payload → dict with body block texts and
     furniture (header/footer) texts, in reading order."""
-    page = json.loads(payload)
-    if isinstance(page, dict) and "pdfio_error" in page:
-        # sentinel recorded by the native byte parser
-        # (operators/pdfnative.py): surface it as this page's error so
-        # the paged path's per-page containment turns it into
-        # FAILURE/PARTIAL status with the real message.
-        raise ValueError(page["pdfio_error"])
-    width = float(page.get("width", 612.0))
-    height = float(page.get("height", 792.0))
-    cells = [Cell(int(c.get("index", i)), c.get("text", ""),
-                  float(c["l"]), float(c["t"]), float(c["r"]), float(c["b"]))
-             for i, c in enumerate(page.get("cells", []))]
-    cells.sort(key=lambda c: c.index)
-    merged = merge_horizontal_cells(cells)
+    page = decode_page(payload)
+    merged = merge_horizontal_cells(sorted(page.cells, key=lambda c: c.index))
 
-    headers = [c for c in merged if c.b <= HEADER_MARGIN_FRAC * height]
-    footers = [c for c in merged if c.t >= (1 - FOOTER_MARGIN_FRAC) * height]
+    headers = [c for c in merged if c.b <= HEADER_MARGIN_FRAC * page.height]
+    footers = [c for c in merged
+               if c.t >= (1 - FOOTER_MARGIN_FRAC) * page.height]
     body = [c for c in merged if c not in headers and c not in footers]
 
     blocks: List[str] = []
-    for column in _split_columns(body, width):
+    for column in _split_columns(body, page.width):
         for block in _split_blocks(column):
-            lines = [c.text.replace("\x02", "-").strip() for c in block
-                     if c.text.strip()]
-            if lines:
-                blocks.append(sanitize_text(lines))
+            text = cell_text(block)
+            if text:
+                blocks.append(text)
 
     def _furn(cs: List[Cell]) -> List[str]:
-        out = []
-        for c in sorted(cs, key=lambda c: (c.t, c.l)):
-            t = c.text.replace("\x02", "-").strip()
-            if t:
-                out.append(sanitize_text([t]))
-        return out
+        texts = (cell_text([c]) for c in sorted(cs, key=lambda c: (c.t, c.l)))
+        return [t for t in texts if t]
 
     # Model-driven branch: when the payload carries layout-model
     # cluster predictions, the full reference postprocessing pipeline
     # runs (layout_postprocessor.py) and blocks come out labeled; the
     # geometric column/block heuristic above remains the model-free
     # default. Output: (label, text) pairs in reading order, furniture
-    # labels included (page assembly routes them,
-    # page_assemble_model.py:83-155).
+    # labels included (page_items routes them).
     labeled_blocks: List = []
-    if page.get("clusters"):
-        from .layout_post import LayoutCluster, postprocess_layout
-        predictions = [
-            LayoutCluster(
-                id=int(cl.get("id", i)),
-                label=str(cl.get("label", "text")),
-                bbox=(float(cl["l"]), float(cl["t"]),
-                      float(cl["r"]), float(cl["b"])),
-                confidence=float(cl.get("confidence", 1.0)))
-            for i, cl in enumerate(page["clusters"])]
-        ordered = postprocess_layout(merged, predictions, (width, height))
+    if page.clusters:
+        from .layout_post import postprocess_layout
+        ordered = postprocess_layout(merged, page.clusters,
+                                     (page.width, page.height))
         ordered = _bind_captions(_cluster_reading_order(ordered))
         for cluster in ordered:
             if cluster.label == "table":
@@ -461,9 +527,7 @@ def parse_page(payload: str) -> Dict:
                 labeled_blocks.append(
                     ("table", serialize_table(grid)))
                 continue
-            lines = [c.text.replace("\x02", "-").strip()
-                     for c in cluster.cells if c.text.strip()]
-            text = sanitize_text(lines) if lines else ""
+            text = cell_text(cluster.cells)
             if text or cluster.label == "picture":
                 labeled_blocks.append((cluster.label, text))
 
@@ -471,15 +535,14 @@ def parse_page(payload: str) -> Dict:
     # (base_ocr_model.py:36-106); running an actual OCR engine over them
     # is a pluggable UDF slot (no engines in this environment). Planned
     # regions ride along so a downstream OCR pass needs no re-parse.
-    bitmaps = [(float(r["l"]), float(r["t"]), float(r["r"]), float(r["b"]))
-               for r in page.get("bitmap_rects", [])]
     ocr_regions: List = []
-    if bitmaps:
+    if page.bitmap_rects:
         from .ocr_plan import plan_ocr_regions
-        ocr_regions = plan_ocr_regions(width, height, bitmaps)
+        ocr_regions = plan_ocr_regions(page.width, page.height,
+                                       page.bitmap_rects)
 
     return {
-        "page_no": int(page.get("page_no", 0)),
+        "page_no": page.page_no,
         "blocks": blocks,
         "headers": _furn(headers),
         "footers": _furn(footers),
@@ -488,28 +551,31 @@ def parse_page(payload: str) -> Dict:
     }
 
 
+# labels of page furniture: kept out of the body span sequence, like
+# the reference's furniture layer (readingorder_model.py:332-334)
+FURNITURE_LABELS = ("page_header", "page_footer")
+
+
+def page_items(page: Dict) -> List[Tuple[str, str]]:
+    """(label, text) pairs of one ``parse_page`` result in page order.
+    A page with labeled blocks keeps their labels (page_assemble_model.py:
+    83-155 label routing); a geometric page gives its headers as
+    page_header, its blocks as text and its footers as page_footer.
+    Items labeled in FURNITURE_LABELS are page furniture."""
+    if page["labeled_blocks"]:
+        return page["labeled_blocks"]
+    return ([("page_header", t) for t in page["headers"]]
+            + [("text", t) for t in page["blocks"]]
+            + [("page_footer", t) for t in page["footers"]])
+
+
 def parse_pdf_pages(page_payloads: List[str]) -> DocTree:
-    """All pages of a document (offset order) → DocTree. Furniture
-    headers/footers attach as furniture-layer items (excluded from the
-    body span sequence, like the reference's page furniture,
-    readingorder_model.py:332-334)."""
+    """All pages of a document (offset order) → DocTree, furniture
+    items in the furniture layer (excluded from the body span
+    sequence)."""
     tree = DocTree()
     for payload in page_payloads:
-        page = parse_page(payload)
-        if page["labeled_blocks"]:
-            # model-driven path: label routing per
-            # page_assemble_model.py:83-155 — furniture labels go to
-            # the furniture layer, everything else keeps its label
-            for label, text in page["labeled_blocks"]:
-                if label in ("page_header", "page_footer"):
-                    tree.add_text(label, text, layer="furniture")
-                else:
-                    tree.add_text(label, text)
-            continue
-        for text in page["headers"]:
-            tree.add_text("page_header", text, layer="furniture")
-        for text in page["blocks"]:
-            tree.add_text("text", text)
-        for text in page["footers"]:
-            tree.add_text("page_footer", text, layer="furniture")
+        for label, text in page_items(parse_page(payload)):
+            tree.add_text(label, text, layer=(
+                FURNITURE if label in FURNITURE_LABELS else BODY))
     return tree

@@ -922,10 +922,6 @@ def _mat_mul(a, b):
             a[4] * b[1] + a[5] * b[3] + b[5])
 
 
-def _apply(m, x, y):
-    return (m[0] * x + m[2] * y + m[4], m[1] * x + m[3] * y + m[5])
-
-
 _ID = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 
 

@@ -35,6 +35,8 @@ from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..parsers.pdf_page import encode_page
+
 REAL_PAGES_GLOB = (
     "/root/reference/tests/data/groundtruth/docling_v2/*.pages.json")
 
@@ -48,32 +50,21 @@ def quad_to_bbox(rect: dict) -> Tuple[float, float, float, float]:
 
 
 def page_payload(page: dict) -> str:
-    """One fixture Page → the engine's structured-page payload JSON:
-    {page_no, width, height, cells[{index,text,l,t,r,b}],
-    clusters[{id,label,confidence,l,t,r,b}]}. Cells keep the file
-    (backend) order; clusters keep the stored prediction order."""
-    cells = []
-    for i, c in enumerate(page.get("cells", [])):
-        l, t, r, b = quad_to_bbox(c["rect"])
-        cells.append({"index": int(c.get("index", i)),
-                      "text": c.get("text", ""),
-                      "l": l, "t": t, "r": r, "b": b})
-    clusters = []
+    """One fixture Page → the engine's structured-page payload
+    (parsers/pdf_page.encode_page). Cells keep the file (backend)
+    order; clusters keep the stored prediction order."""
+    cells = [(int(c.get("index", i)), c.get("text", ""),
+              *quad_to_bbox(c["rect"]))
+             for i, c in enumerate(page.get("cells", []))]
     layout = (page.get("predictions") or {}).get("layout") or {}
-    for i, cl in enumerate(layout.get("clusters") or []):
-        bb = cl["bbox"]
-        clusters.append({"id": int(cl.get("id", i)),
-                         "label": str(cl.get("label", "text")),
-                         "confidence": float(cl.get("confidence", 1.0)),
-                         "l": bb["l"], "t": bb["t"],
-                         "r": bb["r"], "b": bb["b"]})
-    payload = {"page_no": int(page.get("page_no", 0)),
-               "width": float(page["size"]["width"]),
-               "height": float(page["size"]["height"]),
-               "cells": cells}
-    if clusters:
-        payload["clusters"] = clusters
-    return json.dumps(payload)
+    clusters = [(int(cl.get("id", i)), str(cl.get("label", "text")),
+                 float(cl.get("confidence", 1.0)),
+                 cl["bbox"]["l"], cl["bbox"]["t"],
+                 cl["bbox"]["r"], cl["bbox"]["b"])
+                for i, cl in enumerate(layout.get("clusters") or [])]
+    return encode_page(int(page.get("page_no", 0)),
+                       float(page["size"]["width"]),
+                       float(page["size"]["height"]), cells, clusters)
 
 
 def fixture_docs(pattern: str = REAL_PAGES_GLOB) -> List[tuple]:

@@ -7,6 +7,10 @@
         --output <snapshot-table root> \
         [--partitions N] [--max-payload-chars N] [--allowed-kinds html,csv,...]
 
+--max-payload-chars and --allowed-kinds gate every route before
+extraction: an oversize doc commits as a status=failure row (module
+size_gate), a doc with no span of an allowed kind is not extracted.
+
 Flow (SURVEY.md §7.1):
     read corpus → route count (one aggregate over the span kinds:
     input docs per extract_routed branch) → resume anti-join vs
@@ -63,10 +67,9 @@ def main(argv=None) -> int:
                     help="snapshot-table root (checkpoint location)")
     ap.add_argument("--partitions", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--max-payload-chars", type=int, default=None)
-    ap.add_argument("--oversize", default="drop", choices=["drop", "fail"],
-                    help="oversize docs: drop before the UDF, or report "
-                         "as status=failure rows (reference contract)")
+    ap.add_argument("--max-payload-chars", type=int, default=None,
+                    help="size gate: a doc whose span texts exceed N "
+                         "chars commits as a status=failure row")
     ap.add_argument("--allowed-kinds", type=str, default=None,
                     help="comma-separated input kinds filter")
     ap.add_argument("--export", default=None,
@@ -101,7 +104,7 @@ def main(argv=None) -> int:
     out = extract_routed(todo, num_partitions=args.partitions,
                          allowed_kinds=allowed,
                          max_payload_chars=args.max_payload_chars,
-                         oversize=args.oversize, routes=routes)
+                         routes=routes)
 
     obs = Observation("extract")
     out = out.observe(

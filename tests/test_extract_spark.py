@@ -98,10 +98,9 @@ def test_output_schema_stable(spark):
 
 def test_oversize_modes(spark):
     """Reference size-gate contract (datamodel/document.py:130-143,
-    tests/test_invalid_input.py:38-44): oversize="fail" reports the
-    doc as a failure row with a max_file_size error; the default drops
-    it before the UDF. The failure rows are Catalyst-built — the
-    payload never reaches Python."""
+    tests/test_invalid_input.py:38-44): an oversize doc is reported
+    as a failure row with a max_file_size error. The failure rows are
+    Catalyst-built — the payload never reaches Python."""
     from docling_spark.schema import INPUT_SCHEMA
     rows = [("small", [("html", "<html><body><h1>T</h1></body></html>",
                         "", 0)]),
@@ -109,10 +108,7 @@ def test_oversize_modes(spark):
                       + "</p></body></html>", "", 0)])]
     df = spark.createDataFrame(rows, schema=INPUT_SCHEMA)
 
-    dropped = extract_spans(df, max_payload_chars=1000)
-    assert [r.doc_id for r in dropped.collect()] == ["small"]
-
-    failed = extract_spans(df, max_payload_chars=1000, oversize="fail")
+    failed = extract_spans(df, max_payload_chars=1000)
     by_id = {r.doc_id: r for r in failed.collect()}
     assert by_id["small"].status == "success"
     assert by_id["big"].status == "failure"
@@ -239,16 +235,18 @@ def test_routed_rows_match_each_branch_called_directly(spark):
            for d, b in raw_rows],
         schema=INPUT_SCHEMA)
 
-    got = _rows_by_id(extract_routed(corpus, max_payload_chars=1000,
-                                     oversize="fail"))
+    got = _rows_by_id(extract_routed(corpus, max_payload_chars=1000))
 
     want = _rows_by_id(extract_spans(
         spark.createDataFrame(doc_rows, schema=INPUT_SCHEMA),
-        max_payload_chars=1000, oversize="fail"))
+        max_payload_chars=1000))
     want.update(_rows_by_id(extract_spans_paged(
         spark.createDataFrame(paged_rows, schema=INPUT_SCHEMA))))
     want.update(_rows_by_id(extract_spans_paged(pdf_to_page_spans(
         spark.createDataFrame(raw_rows, "doc_id string, pdf binary")))))
+    # the size gate runs before routing: raw's 1,184 base64 chars are
+    # over the limit, so it fails like an oversize doc-path doc
+    want["raw"] = _size_gate_row("raw", 1184, 1000)
     want["image"] = {
         "doc_id": "image",
         "spans": [{"kind": "picture", "text": "", "media_ref": "img://a",
@@ -262,8 +260,55 @@ def test_routed_rows_match_each_branch_called_directly(spark):
     assert got == want
     assert {d: r["status"] for d, r in got.items()} == {
         "html": "success", "md": "success", "media_only": "skipped",
-        "oversize": "failure", "paged": "success", "raw": "success",
+        "oversize": "failure", "paged": "success", "raw": "failure",
         "raw_bad": "failure", "image": "success"}
+
+
+def _size_gate_row(doc_id, chars, limit):
+    return {"doc_id": doc_id, "spans": [], "status": "failure",
+            "errors": [{"component": "extract", "module": "size_gate",
+                        "message": f"max_file_size: payload chars {chars}"
+                                   f" > {limit}"}],
+            "n_spans": 0}
+
+
+def test_routed_gates_apply_to_every_route(spark):
+    """The size gate and the allowed-kinds filter see every route, not
+    only the doc path: oversize pdf_raw, pdf_page and image docs become
+    size_gate failure rows, and a kind outside allowed_kinds is left
+    out whatever its route."""
+    import base64
+    import json
+
+    from docling_spark.operators.extract import extract_routed
+    from docling_spark.sources.pdfsynth import synth_pdf_pages
+
+    raw = base64.b64encode(synth_pdf_pages(
+        [["alpha", "beta"], ["gamma"]])).decode("ascii")
+    page = json.dumps({"page_no": 0, "width": 612.0, "height": 792.0,
+                       "cells": [{"index": 0, "text": "w" * 1500, "l": 50,
+                                  "t": 100, "r": 400, "b": 110}]})
+    corpus = spark.createDataFrame(
+        [("html", [("html", "<html><body><p>x</p></body></html>", "",
+                    0)]),
+         ("raw", [("pdf_raw", raw, "", 0)]),
+         ("paged", [("pdf_page", page, "", 0)]),
+         ("image", [("image", "i" * 5000, "img://a", 0)])],
+        schema=INPUT_SCHEMA)
+    limit = 1000
+    got = _rows_by_id(extract_routed(corpus, max_payload_chars=limit))
+    assert got["html"]["status"] == "success"
+    for doc_id, chars in (("raw", len(raw)), ("paged", len(page)),
+                          ("image", 5000)):
+        assert chars > limit
+        assert got[doc_id] == _size_gate_row(doc_id, chars, limit)
+
+    only_html = extract_routed(corpus, allowed_kinds=["html"])
+    assert [r["doc_id"] for r in only_html.collect()] == ["html"]
+    only_pages = extract_routed(corpus, allowed_kinds=["pdf_page"],
+                                routes={"paged": 1})
+    assert [(r["doc_id"], r["status"]) for r in only_pages.collect()] == [
+        ("paged", "success")]
 
 
 def test_routed_image_docs_with_hostile_offsets(spark):
