@@ -453,10 +453,12 @@ def page_clusters(
 def payload_chars_col():
     """Catalyst expression: total payload size of a document (pre-parse
     size gate, analogue of DocumentLimits max_file_size,
-    datamodel/document.py:130-143). Pure JVM-side."""
-    return F.aggregate(
+    datamodel/document.py:130-143). Pure JVM-side; NULL spans or texts
+    count 0, so the size gate never drops a document silently."""
+    return F.coalesce(F.aggregate(
         "spans", F.lit(0),
-        lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)))
+        lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0))),
+        F.lit(0))
 
 
 def extract_spans(

@@ -293,11 +293,14 @@ def test_routed_gates_apply_to_every_route(spark):
                     0)]),
          ("raw", [("pdf_raw", raw, "", 0)]),
          ("paged", [("pdf_page", page, "", 0)]),
-         ("image", [("image", "i" * 5000, "img://a", 0)])],
+         ("image", [("image", "i" * 5000, "img://a", 0)]),
+         ("null_spans", None)],
         schema=INPUT_SCHEMA)
     limit = 1000
     got = _rows_by_id(extract_routed(corpus, max_payload_chars=limit))
     assert got["html"]["status"] == "success"
+    # NULL spans weigh 0 chars: the doc is not lost between the gates
+    assert got["null_spans"]["status"] == "skipped"
     for doc_id, chars in (("raw", len(raw)), ("paged", len(page)),
                           ("image", 5000)):
         assert chars > limit
