@@ -6,7 +6,7 @@ Input: one payload per page, JSON
 [, clusters: [{id, label, confidence, l, t, r, b}]]
 [, bitmap_rects: [{l, t, r, b}]]}``
 (top-left origin, the TextCell model of
-/root/reference/docling/backend/pypdfium2_backend.py:74-107; clusters
+docling/backend/pypdfium2_backend.py:74-107 in the reference; clusters
 are stored layout-model predictions). A document the byte parser could
 not read is one sentinel page ``{page_no, pdfio_error}``. This module
 owns that format: ``encode_page`` and ``error_page`` write it
