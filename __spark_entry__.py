@@ -1953,7 +1953,7 @@ def q_curate_corpus(spark, sf_dir):
              .select((F.col("doc_id") + 2000000).alias("doc_id"), "text"))
     corpus = (docs.select("doc_id", "text")
               .unionByName(near).unionByName(exact))
-    return curate(corpus)
+    return curate(corpus).select("doc_id", "n_tokens", "fingerprint")
 
 
 def _source_corpus(docs: DataFrame) -> DataFrame:

@@ -37,10 +37,11 @@ def curate(docs: DataFrame, *, lang: str = "en",
            min_tokens: int = 10, max_tokens: int = 100_000,
            bits: int = 32, bands: int = 4,
            max_hamming: int = 3) -> DataFrame:
-    """(doc_id, text) → curated (doc_id, n_tokens, fingerprint):
+    """(doc_id, text) → curated (doc_id, text, n_tokens, fingerprint):
     documents that pass the token-count quality gate, are identified as
     ``lang``, and survive exact + SimHash near-duplicate removal (the
-    lowest doc_id of each duplicate group/pair is kept)."""
+    lowest doc_id of each duplicate group/pair is kept), with their
+    text as given."""
     # staged projections: tokenize/normalize ONCE, score languages off
     # the materialized array, argmax off the materialized scores (the
     # inline lang_pred_col() spelling re-tokenizes per score reference
@@ -77,7 +78,7 @@ def curate(docs: DataFrame, *, lang: str = "en",
                           bits=bits, bands=bands, max_hamming=max_hamming)
     dropped = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     return (reps.join(dropped, "doc_id", "left_anti")
-            .select("doc_id", "n_tokens", "fingerprint"))
+            .select("doc_id", "text", "n_tokens", "fingerprint"))
 
 
 def source_reputation(docs: DataFrame, *,

@@ -16,7 +16,6 @@ bitmaps fits the buffer, the same sizing note as operators/pdfnative).
 
 from __future__ import annotations
 
-import json
 from typing import Iterator
 
 import pandas as pd
@@ -35,8 +34,10 @@ def render_pages(df: DataFrame, dpi: float = 72.0) -> DataFrame:
     """(doc_id, spans[kind=pdf_page]) → one row per page:
     (doc_id, page_no, width_px, height_px, n_cells, n_glyphs,
     png:binary). Real PNG bytes (verifiable with any reader, including
-    operators/multimodal.parse_image_header). Zero-shuffle Arrow
-    stage; ``dpi`` mirrors the reference's ``images_scale``."""
+    operators/multimodal.parse_image_header). A page that does not
+    decode (parsers/pdf_page.decode_page) gives no row. Zero-shuffle
+    Arrow stage; ``dpi`` mirrors the reference's ``images_scale``."""
+    from docling_spark.parsers.pdf_page import decode_page
     from docling_spark.parsers.raster import png_encode, render_page
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -48,17 +49,19 @@ def render_pages(df: DataFrame, dpi: float = 72.0) -> DataFrame:
                 for span in spans:
                     if span["kind"] != "pdf_page":
                         continue
-                    page = json.loads(span["text"])
-                    cells = page.get("cells") or []
+                    try:
+                        page = decode_page(span["text"])
+                    except Exception:
+                        continue
                     img, drawn = render_page(
-                        float(page.get("width", 612.0)),
-                        float(page.get("height", 792.0)),
-                        cells, dpi=dpi)
+                        page.width, page.height,
+                        [{"text": c.text, "l": c.l, "t": c.t}
+                         for c in page.cells], dpi=dpi)
                     out["doc_id"].append(doc_id)
-                    out["page_no"].append(int(page.get("page_no", 0)))
+                    out["page_no"].append(page.page_no)
                     out["height_px"].append(img.shape[0])
                     out["width_px"].append(img.shape[1])
-                    out["n_cells"].append(len(cells))
+                    out["n_cells"].append(len(page.cells))
                     out["n_glyphs"].append(drawn)
                     out["png"].append(png_encode(img))
             yield pd.DataFrame(out)

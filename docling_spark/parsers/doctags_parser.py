@@ -92,9 +92,6 @@ class _Parser:
 
     # -- token helpers ----------------------------------------------------
 
-    def _peek(self) -> Optional[str]:
-        return self.toks[self.i][0] if self.i < len(self.toks) else None
-
     def _next(self) -> Tuple[str, int, int]:
         t = self.toks[self.i]
         self.i += 1

@@ -149,25 +149,11 @@ class Element:
             # (script/style/comment/decl) — excluded from .text
         return "".join(parts)
 
-    def next_tag_siblings(self) -> List["Element"]:
-        return _next_tag_siblings(self)
-
     def replace_child(self, old, new) -> None:
         idx = self.children.index(old)
         if new.__class__ is not str:
             new.parent = self
         self.children[idx] = new
-
-
-def _next_tag_siblings(node: Union[Element, TextNode]) -> List[Element]:
-    # must be called with Element/TextNode nodes only: list.index uses
-    # __eq__, so a bare-str argument would match the first EQUAL
-    # string sibling, not the identical node
-    if node.parent is None:
-        return []
-    sibs = node.parent.children
-    idx = sibs.index(node)
-    return [s for s in sibs[idx + 1:] if isinstance(s, Element)]
 
 
 class _TreeBuilder(HTMLParser):

@@ -937,12 +937,6 @@ class TextRun:
         self.font = font
         self.size = size
 
-    def to_dict(self) -> dict:
-        return {"text": self.text, "x0": self.x0, "y0": self.y0,
-                "x1": self.x1, "y1": self.y1,
-                "baseline": self.baseline, "font": self.font,
-                "size": self.size}
-
 
 class _TextState:
     __slots__ = ("font", "font_name", "size", "char_spacing",

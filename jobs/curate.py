@@ -9,20 +9,19 @@ into one spark-submit pipeline with snapshot commit + resume:
         [--strip-boilerplate] [--strip-substrings K]
         [--split] [--pack SEQ_LEN] [--partitions N]
 
-Stage order (each optional, all declarative — one logical plan per
-stage, snapshot commit at the end):
+Stages, in one logical plan (gates, strips, split and pack optional):
 
     read → resume anti-join → domain reputation gate → LM quality
-    gate → quality/lang gates + exact & SimHash near-dup removal
-    (operators/curate.curate) → cross-doc boilerplate line strip →
-    exact repeated-substring removal → train/val/test split → one
-    uncached snapshot write (lake.SnapshotTable.write_snapshot:
-    metrics per data file, nothing committed if every doc was dropped)
-    → packing side-table from the snapshot → processed-ids append →
-    one JSON summary line.
+    gate → operators/curate.curate (quality/lang gates, exact and
+    SimHash near-dup removal; keeps the text) → cross-doc boilerplate
+    line strip → repeated-substring removal → train/val/test split →
+    one snapshot write (lake.SnapshotTable.write_snapshot) → packing
+    side-table → processed-ids append → one JSON summary line.
 
-Re-running after a kill resumes from the last committed snapshot
-(the manifest is the only commit point), same as the extract job.
+Default flags run the input count, the snapshot write and the
+processed append, and cache nothing of their own. A re-run after a
+kill resumes from the last committed snapshot (the manifest is the
+only commit point), same as the extract job.
 """
 
 from __future__ import annotations
@@ -35,7 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -82,8 +81,8 @@ def main(argv=None, _spark: SparkSession = None) -> int:
 
     from docling_spark.lake import (SnapshotTable, partition_metrics,
                                     resume_filter)
-    from docling_spark.operators.curate import (curate, gate_by_source,
-                                                source_reputation)
+    from docling_spark.operators.curate import (
+        curate, dedup_boilerplate_lines, gate_by_source, source_reputation)
     from docling_spark.operators.textstats import tokens_col
 
     spark = _spark or build_spark(args.partitions)
@@ -96,15 +95,16 @@ def main(argv=None, _spark: SparkSession = None) -> int:
     # the resume set is everything not yet decided — the snapshot only
     # holds keeps, and re-curating previously-dropped docs without
     # their dup partners would resurrect them. The processed-ids side
-    # table records decisions; a kill between snapshot commit and the
-    # processed append re-admits some dropped docs on the next run
-    # (conservative: extra work, never a lost keep).
+    # table records every decision, taken before the gates; a kill
+    # between commit and that append re-decides some dropped docs on
+    # the next run (extra work, never a lost keep).
     proc_path = f"{args.output}/processed"
     todo = resume_filter(docs, table)
     if os.path.isdir(proc_path):
         done = spark.read.parquet(proc_path).select("doc_id")
         todo = todo.join(done, "doc_id", "left_anti")
     todo = todo.repartition(args.partitions, "doc_id")
+    decided = todo.select("doc_id")
     counters = {"input": todo.count()}
     side_outputs = {}
     if counters["input"] == 0:
@@ -131,24 +131,20 @@ def main(argv=None, _spark: SparkSession = None) -> int:
         todo = todo.join(keep, "doc_id", "left_semi")
         counters["after_lm_gate"] = todo.count()
 
-    curated = curate(todo, lang=args.lang,
-                     min_tokens=args.min_tokens,
-                     max_tokens=args.max_tokens)
-    # curate() returns ids + stats; re-attach text for the strip
-    # stages (co-partitioned equijoin on doc_id). Persisted so the
-    # SimHash band self-join runs once, not once per action.
-    kept = curated.select("doc_id").join(
-        todo.select("doc_id", "text"), "doc_id").persist()
-    counters["after_curate"] = kept.count()
-    out = kept
-
+    kept = Observation()
+    curated = (curate(todo, lang=args.lang, min_tokens=args.min_tokens,
+                      max_tokens=args.max_tokens)
+               .observe(kept, F.count(F.lit(1)).alias("rows"))
+               .select("doc_id", "text"))
+    # both strip stages read their input more than once in one plan;
+    # uncached, the SimHash band join under it runs once per read
+    strip = args.strip_boilerplate or args.strip_substrings
+    out = curated.persist() if strip else curated
     if args.strip_boilerplate:
-        from docling_spark.operators.curate import dedup_boilerplate_lines
-        out = dedup_boilerplate_lines(out).select("doc_id", "text")
+        out = dedup_boilerplate_lines(out)
     if args.strip_substrings:
         from docling_spark.operators.substring import dedup_substrings
-        out = (dedup_substrings(out, k=args.strip_substrings)
-               .select("doc_id", "text"))
+        out = dedup_substrings(out, k=args.strip_substrings)
 
     out = out.select("doc_id", "text",
                      F.size(tokens_col()).cast("int").alias("n_tokens"))
@@ -157,7 +153,11 @@ def main(argv=None, _spark: SparkSession = None) -> int:
         out = split_docs(out)
 
     entry = table.write_snapshot(out, metrics=partition_metrics)
-    kept.unpersist()
+    if strip:
+        curated.unpersist()
+    # the strip stages keep every doc, so an empty write means curate()
+    # kept none; AQE may then prune the observation under the strips
+    counters["after_curate"] = kept.get["rows"] if entry else 0
     counters["output"] = entry["rows"] if entry else 0
     if entry and args.pack:
         from docling_spark.operators.packing import pack_sequences
@@ -167,9 +167,8 @@ def main(argv=None, _spark: SparkSession = None) -> int:
                         seq_len=args.pack, n_shards=args.partitions)
          .write.mode("overwrite").parquet(path))
         side_outputs["packing"] = path
-    # record the decisions last, also when every todo doc was dropped,
-    # so the next run doesn't re-curate them forever
-    todo.select("doc_id").write.mode("append").parquet(proc_path)
+    # last, and also when every doc was dropped (see the resume note)
+    decided.write.mode("append").parquet(proc_path)
 
     print(json.dumps({
         "status": "committed" if entry else "committed_empty",

@@ -150,3 +150,108 @@ def test_curate_job_kill_after_commit_then_resume(spark, tmp_path):
          if ln.startswith("{")][-1])
     assert summary3["status"] == "noop"
     assert len(table.snapshots()) == n_snaps
+
+
+DOCS = "/root/testdata/sf0.001/documents.parquet"
+
+
+def _summary(capsys):
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_curate_job_records_gate_drops(spark, tmp_path, capsys):
+    """Docs the source and LM gates drop are decisions too: here the
+    gates drop every doc, so run 1 commits nothing and records all 500
+    ids, and run 2 has nothing left to decide."""
+    from jobs.curate import main
+
+    out_root = str(tmp_path / "lake_gated")
+    argv = ["--input", DOCS, "--output", out_root, "--partitions", "4",
+            "--source-gate", "--lm-gate-nll-e6", "3300000"]
+    assert main(argv, _spark=spark) == 0
+    first = _summary(capsys)
+    assert first["status"] == "committed_empty"
+    assert first["stages"]["input"] == 500
+    assert main(argv, _spark=spark) == 0
+    assert _summary(capsys)["status"] == "noop"
+    processed = spark.read.parquet(os.path.join(out_root, "processed"))
+    assert processed.select("doc_id").distinct().count() == 500
+
+
+def test_curate_job_strip_stages_after_curate_keeps_nothing(
+        spark, tmp_path, capsys):
+    """With both strip stages on and no doc in the language asked
+    for, the run commits nothing and reports 0 docs after curate."""
+    from jobs.curate import main
+
+    argv = ["--input", DOCS, "--output", str(tmp_path / "lake_none"),
+            "--partitions", "4", "--lang", "zz",
+            "--strip-boilerplate", "--strip-substrings", "8"]
+    assert main(argv, _spark=spark) == 0
+    summary = _summary(capsys)
+    assert summary["status"] == "committed_empty"
+    assert summary["stages"] == {"input": 500, "after_curate": 0,
+                                 "output": 0}
+
+
+def _executed_plans(spark, run):
+    """The executed physical plans of every SQL execution ``run()``
+    makes, flattened by the benchmark's plan walker."""
+    from pyspark.java_gateway import ensure_callback_server_started
+    from test_benchmark_hooks import _planmetrics
+
+    pm = _planmetrics()
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    seen = []
+
+    class Listener:
+        def onSuccess(self, func_name, qe, duration_ns):
+            seen.append(qe)
+
+        def onFailure(self, func_name, qe, exc):
+            seen.append(qe)
+
+        class Java:
+            implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+    listener = Listener()
+    manager = spark._jsparkSession.listenerManager()
+    manager.register(listener)
+    try:
+        run()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        manager.unregister(listener)
+    return [pm.walk_plan(qe.executedPlan()) for qe in seen]
+
+
+def test_curate_job_runs_the_band_join_once(spark, tmp_path, capsys):
+    """One curate run executes the SimHash band join once, with
+    default flags and with each strip stage: both read their input
+    more than once in one plan. Every doc carries one shared footer
+    line, so the boilerplate and shared-substring branches are not
+    empty and stay in the executed plan. A node counts once per
+    distinct set of metric ids, so a cached join read by several
+    executions counts once."""
+    from pyspark.sql import functions as F
+
+    from jobs.curate import main
+
+    docs = str(tmp_path / "docs")
+    (spark.read.parquet(DOCS)
+     .withColumn("text", F.concat(
+         "text", F.lit("\nCookie settings and privacy policy")))
+     .write.parquet(docs))
+    for name, flags in (("default", []),
+                        ("boilerplate", ["--strip-boilerplate"]),
+                        ("substrings", ["--strip-substrings", "4"])):
+        argv = ["--input", docs, "--output", str(tmp_path / name),
+                "--partitions", "4", *flags]
+        plans = _executed_plans(
+            spark, lambda: main(argv, _spark=spark))
+        assert _summary(capsys)["status"] == "committed"
+        joins = {tuple(sorted(m[0] for m in n["metrics"].values()))
+                 for nodes in plans for n in nodes
+                 if "Join" in n["name"] and "band#" in n["desc"]
+                 and "bit_count" in n["desc"]}
+        assert len(joins) == 1, (name, len(joins))

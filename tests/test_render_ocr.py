@@ -189,3 +189,22 @@ def test_roundtrip_fuzz_random_gaps_same_line():
         rec = ocr_page(img)
         got_lines = [c["text"].replace(" ", "") for c in rec]
         assert got_lines == [s for s in per_line if s]
+
+
+def test_render_pages_skips_pages_that_do_not_decode(spark):
+    """A page payload that does not decode gives no row, and the task
+    goes on to render the next doc's page."""
+    from docling_spark.operators.render import render_pages
+    payload = {"page_no": 2, "width": 306.0, "height": 396.0,
+               "cells": [{"index": 0, "text": "abc", "l": 10.0,
+                          "t": 10.0, "r": 100.0, "b": 20.0}]}
+    df = spark.createDataFrame(
+        [("bad", [("pdf_page", "not json", "", 0)]),
+         ("good", [("pdf_page", json.dumps(payload), "", 0)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>").coalesce(1)
+    rows = render_pages(df).collect()
+    assert [(r.doc_id, r.page_no, r.n_cells, r.n_glyphs)
+            for r in rows] == [("good", 2, 1, 3)]
+    img, _ = render_page(306.0, 396.0, payload["cells"])
+    assert bytes(rows[0].png) == png_encode(img)
