@@ -694,3 +694,57 @@ def test_cms_heavy_hitters_bounds(spark):
                              width=64, k=10).collect()
     assert [(r["token"], r["cnt"]) for r in out2] \
         == [(r["token"], r["cnt"]) for r in out]
+
+
+def test_reservoir_sample_deterministic_and_weighted(spark):
+    from docling_spark.operators.sampling import \
+        reservoir_sample_per_source
+    rows = [(f"d{i:03d}", "a", 1 if i < 90 else 1000)
+            for i in range(100)]
+    docs = spark.createDataFrame(
+        rows, "doc_id string, source string, w long")
+    got1 = sorted(r["doc_id"] for r in reservoir_sample_per_source(
+        docs, k=10, weight_col="w").collect())
+    got2 = sorted(r["doc_id"] for r in reservoir_sample_per_source(
+        docs, k=10, weight_col="w").collect())
+    assert got1 == got2 and len(got1) == 10          # deterministic
+    # the 10 heavy docs (w=1000, 10% of rows) must dominate the sample
+    heavy = sum(1 for d in got1 if int(d[1:]) >= 90)
+    assert heavy >= 7
+    # different salt → different draw (k=5 of the 10 heavy docs, so
+    # the chosen subset varies with the salt)
+    got_a = sorted(r["doc_id"] for r in reservoir_sample_per_source(
+        docs, k=5, weight_col="w").collect())
+    got_b = sorted(r["doc_id"] for r in reservoir_sample_per_source(
+        docs, k=5, weight_col="w", salt="s2").collect())
+    assert got_a != got_b
+
+
+def test_reservoir_sample_uniform_without_weight(spark):
+    from docling_spark.operators.sampling import \
+        reservoir_sample_per_source
+    docs = spark.createDataFrame(
+        [(f"d{i}", "s") for i in range(50)],
+        "doc_id string, source string")
+    out = reservoir_sample_per_source(docs, k=5).collect()
+    assert len(out) == 5
+    assert [r["rank"] for r in sorted(out, key=lambda r: r["rank"])] \
+        == [1, 2, 3, 4, 5]
+
+
+def test_stratified_split_stable_and_proportional(spark):
+    from docling_spark.operators.sampling import stratified_split
+    docs = spark.createDataFrame(
+        [(f"d{i}", "s") for i in range(2000)],
+        "doc_id string, source string")
+    out = {r["doc_id"]: r["split"]
+           for r in stratified_split(docs).collect()}
+    frac_train = sum(1 for v in out.values() if v == "train") / 2000
+    assert 0.96 <= frac_train <= 0.995
+    # growth stability: adding docs never reassigns existing ones
+    grown = spark.createDataFrame(
+        [(f"d{i}", "s") for i in range(3000)],
+        "doc_id string, source string")
+    out2 = {r["doc_id"]: r["split"]
+            for r in stratified_split(grown).collect()}
+    assert all(out2[k] == v for k, v in out.items())

@@ -64,3 +64,33 @@ def test_custom_enricher_slot(spark):
         ["classified"] * len(pdf), index=pdf.index)}
     out = enrich_spans(df, custom).collect()
     assert [r["enrichment"] for r in out] == ["classified"]
+
+
+def test_omml_equations_bare_root_and_order(spark):
+    from docling_spark.operators.enrich import omml_equations
+    ns = 'xmlns:m="http://schemas.openxmlformats.org/officeDocument/2006/math"'
+    bare = (f"<m:oMath {ns}><m:f><m:num><m:r><m:t>1</m:t></m:r></m:num>"
+            "<m:den><m:r><m:t>2</m:t></m:r></m:den></m:f></m:oMath>")
+    para = (f"<m:oMathPara {ns}>"
+            "<m:oMath><m:r><m:t>first</m:t></m:r></m:oMath>"
+            "<m:oMath><m:sSup><m:e><m:r><m:t>z</m:t></m:r></m:e>"
+            "<m:sup><m:r><m:t>2</m:t></m:r></m:sup></m:sSup></m:oMath>"
+            f"</m:oMathPara>")
+    df = spark.createDataFrame([("a", bare), ("b", para)],
+                               "doc_id string, omml string")
+    rows = sorted(omml_equations(df).collect(),
+                  key=lambda r: (r["doc_id"], r["eq_no"]))
+    assert [(r["doc_id"], r["eq_no"], r["latex"]) for r in rows] == [
+        ("a", 0, "\\frac{1}{2}"),
+        ("b", 0, "first"),
+        ("b", 1, "z^{2}"),
+    ]
+
+
+def test_omml_equations_malformed_xml_sentinel(spark):
+    from docling_spark.operators.enrich import omml_equations
+    df = spark.createDataFrame([("bad", "<m:oMath><unclosed")],
+                               "doc_id string, omml string")
+    rows = omml_equations(df).collect()
+    assert [(r["doc_id"], r["eq_no"], r["latex"]) for r in rows] == [
+        ("bad", -1, None)]

@@ -324,3 +324,21 @@ def test_spark_operator_matches_pure_python(spark, name):
         assert g["text"] == e["text"]
         assert list(g["doc_items"]) == e["doc_items"]
         assert g["n_tokens"] == e["n_tokens"]
+
+
+def test_heading_outline_title_resets_trail(spark):
+    from docling_spark.operators.outline import heading_outline
+
+    def sp(kind, text, off):
+        return {"kind": kind, "text": text, "media_ref": "",
+                "offset": off}
+
+    df = spark.createDataFrame(
+        [("d", [sp("title", "T", 0), sp("section_header", "A", 1),
+                sp("title", "T2", 2), sp("section_header", "B", 3)])],
+        "doc_id string, spans array<struct<kind string, text string, "
+        "media_ref string, offset int>>")
+    rows = sorted(heading_outline(df).collect(),
+                  key=lambda r: r["span_offset"])
+    assert [(r["title"], r["path"]) for r in rows] == [
+        ("T", "T"), ("A", "T > A"), ("T2", "T2"), ("B", "T2 > B")]

@@ -324,3 +324,68 @@ def test_max_num_pages_gate(spark):
     assert "Union" in plan
     failed = {r["doc_id"]: r for r in out.collect()}
     assert all(r["status"] == "failure" for r in failed.values())
+
+
+def _cells(spark, rows):
+    return spark.createDataFrame(
+        rows, "doc_id string, page_no int, cell_index int, "
+              "text string, l double, t double, r double, b double")
+
+
+def test_text_in_rect_half_overlap_threshold(spark):
+    from docling_spark.operators.extract import text_in_rect
+    cells = _cells(spark, [
+        ("d", 0, 0, "in", 0.0, 0.0, 10.0, 10.0),       # fully inside
+        ("d", 0, 1, "edge", 5.0, 0.0, 15.0, 10.0),     # exactly half
+        ("d", 0, 2, "mostly", 4.0, 0.0, 14.0, 10.0),   # 60% inside
+        ("d", 0, 3, "out", 20.0, 0.0, 30.0, 10.0),
+    ])
+    rects = spark.createDataFrame(
+        [(0, "d", 0, 0.0, 0.0, 10.0, 10.0)],
+        "rect_id int, doc_id string, page_no int, "
+        "l double, t double, r double, b double")
+    out = text_in_rect(cells, rects).collect()
+    # reference rule is STRICTLY more than half the cell's area:
+    # the exactly-half cell is excluded, cell order is preserved
+    assert [(r["rect_id"], r["text"]) for r in out] == [(0, "in mostly")]
+
+
+def test_text_in_rect_empty_rect_row_present(spark):
+    from docling_spark.operators.extract import text_in_rect
+    cells = _cells(spark, [("d", 0, 0, "x", 0.0, 0.0, 1.0, 1.0)])
+    rects = spark.createDataFrame(
+        [(7, "d", 0, 50.0, 50.0, 60.0, 60.0),
+         (8, "other", 0, 0.0, 0.0, 9.0, 9.0)],
+        "rect_id int, doc_id string, page_no int, "
+        "l double, t double, r double, b double")
+    got = {r["rect_id"]: r["text"]
+           for r in text_in_rect(cells, rects).collect()}
+    assert got == {7: "", 8: ""}
+
+
+def test_table_grid_with_spans_merged_header():
+    from docling_spark.parsers.pdf_page import Cell, table_grid_with_spans
+    cells = [Cell(0, "H", 0, 0, 100, 10),
+             Cell(1, "a", 0, 20, 30, 30), Cell(2, "b", 35, 20, 65, 30),
+             Cell(3, "c", 70, 20, 100, 30),
+             Cell(4, "d", 0, 40, 65, 50), Cell(5, "e", 70, 40, 100, 50)]
+    data = table_grid_with_spans(cells)
+    assert (data.num_rows, data.num_cols) == (3, 3)
+    by = {(c.start_row, c.start_col): c for c in data.cells}
+    assert by[(0, 0)].col_span == 3 and by[(0, 0)].column_header
+    assert by[(2, 0)].col_span == 2 and by[(2, 0)].row_span == 1
+    assert by[(1, 1)].col_span == 1
+    assert (2, 1) not in by          # covered by the d span
+
+
+def test_table_grid_with_spans_vertical_merge():
+    from docling_spark.parsers.pdf_page import Cell, table_grid_with_spans
+    # V bridges rows 1-2 on the right; anchor-based rows survive the
+    # bridged gutter (projection-gap rows would collapse to one row)
+    cells = [Cell(0, "a", 0, 20, 30, 30), Cell(1, "v", 70, 20, 100, 50),
+             Cell(2, "d", 0, 40, 30, 50)]
+    data = table_grid_with_spans(cells)
+    assert data.num_rows == 2
+    by = {(c.start_row, c.start_col): c for c in data.cells}
+    assert by[(0, 1)].row_span == 2
+    assert by[(1, 0)].row_span == 1

@@ -566,3 +566,153 @@ def test_routed_plans_only_the_routes_present(spark):
     assert len(mixed.collect()) == 3
     assert _python_udfs(mixed) == ["_extract_batches", "_page_batches",
                                    "batches"]
+
+
+def _docs(spark):
+    return spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet")
+
+
+def test_html_metadata_single_arrow_pass_no_shuffle(spark):
+    from docling_spark.operators.metadata import html_metadata
+    df = _docs(spark).select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.concat(F.lit("<html><head><title>t</title></head>"
+                       "<body>"), F.col("text"),
+                 F.lit("</body></html>")).alias("html"))
+    plan = _plan(html_metadata(df))
+    assert "Exchange" not in plan
+    assert "Join" not in plan
+    assert plan.count("ArrowEvalPython") == 1  # ONE parse per doc
+
+
+def test_noindex_gate_rides_the_same_projection(spark):
+    from docling_spark.operators.metadata import noindex_gate
+    df = _docs(spark).select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.lit("<html><head></head><body>x</body></html>")
+        .alias("html"))
+    plan = _plan(noindex_gate(df))
+    assert "Exchange" not in plan
+    assert "Join" not in plan
+
+
+def test_feed_urls_single_arrow_pass(spark):
+    from docling_spark.operators.feeds import feed_urls
+    df = _docs(spark).select(
+        F.col("doc_id").cast("string").alias("feed_id"),
+        F.lit("<rss><channel></channel></rss>").alias("xml"))
+    plan = _plan(feed_urls(df))
+    assert "Exchange" not in plan
+    # evaluate-once pattern: the generate's pruning predicate must
+    # not clone the Arrow UDF below the explode
+    assert plan.count("ArrowEvalPython") == 1
+
+
+def test_robots_sitemaps_zero_shuffle_no_window(spark):
+    from docling_spark.operators.weburl import robots_sitemaps
+    df = _docs(spark).select(
+        F.col("source").alias("host"),
+        F.lit("Sitemap: https://e.com/a.xml").alias("robots_txt"))
+    plan = _plan(robots_sitemaps(df))
+    assert "Exchange" not in plan
+    assert "Window" not in plan
+    assert "BatchEvalPython" not in plan  # pure Catalyst, no UDF
+
+
+def test_url_path_templates_one_partial_agg(spark):
+    from docling_spark.operators.weburl import url_path_templates
+    df = _docs(spark).select(
+        F.concat(F.lit("https://h.example.com/p/"),
+                 F.col("doc_id").cast("string")).alias("url"))
+    plan = _plan(url_path_templates(df))
+    # exactly one shuffle, with a map-side partial phase before it
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "partial_count" in plan
+
+
+def test_dup_ngram_fraction_no_cartesian(spark):
+    from docling_spark.operators.dedup import (dup_ngram_fraction,
+                                               exploded_shingles)
+    out = dup_ngram_fraction(exploded_shingles(
+        _docs(spark).select("doc_id", "text"), n=3))
+    plan = _plan(out)
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_curriculum_order_no_global_window(spark):
+    from docling_spark.operators.curate import curriculum_order
+    out = curriculum_order(
+        _docs(spark).select("doc_id", "source",
+                            (F.col("doc_id") % 7).alias("score")),
+        score_col="score")
+    plan = _plan(out)
+    # the window partitions by source — a global (empty-partition)
+    # window would print "Window [...], []" single-partition specs
+    assert "Exchange SinglePartition" not in plan
+    assert "BroadcastHashJoin" in plan  # per-source counts broadcast
+
+
+def test_mean_pool_single_doc_shuffle(spark):
+    from docling_spark.operators.vectorize import mean_pool_embeddings
+    emb = spark.read.parquet(
+        "/root/testdata/sf0.001/embeddings.parquet").select(
+        (F.col("vec_id") / 4).cast("long").alias("doc_id"),
+        (F.col("vec_id") % 4).cast("int").alias("chunk_idx"),
+        "embedding")
+    plan = _plan(mean_pool_embeddings(emb))
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "BatchEvalPython" not in plan  # the fold is codegen'd
+    assert "ArrowEvalPython" not in plan
+
+
+def test_pdf_outline_and_links_zero_shuffle(spark):
+    from docling_spark.operators.pdfnative import (pdf_links,
+                                                   pdf_outline,
+                                                   synth_pdf_link_docs,
+                                                   synth_pdf_outline_docs)
+    d = F.col("doc_id").cast("string")
+    pages = F.array(F.array(d), F.array(d))
+    ol = F.array(F.struct(F.lit(0).alias("level"), d.alias("title"),
+                          F.lit(0).alias("page_idx")))
+    lk = F.array(F.struct(F.lit(0).alias("page_idx"),
+                          d.alias("url")))
+    docs = _docs(spark)
+    p1 = _plan(pdf_outline(synth_pdf_outline_docs(
+        docs.select(d.alias("doc_id"), pages.alias("pages"),
+                    ol.alias("outline")))))
+    p2 = _plan(pdf_links(synth_pdf_link_docs(
+        docs.select(d.alias("doc_id"), pages.alias("pages"),
+                    lk.alias("links")))))
+    for plan in (p1, p2):
+        assert "Exchange" not in plan
+        assert "Join" not in plan
+
+
+def test_warc_revisit_dedup_equijoin_only(spark):
+    from docling_spark.operators.warc import warc_revisit_dedup
+    recs = spark.createDataFrame(
+        [("d", "revisit", "<u:2>", "u", -1, "", "<u:1>", "p", "x")],
+        "doc_id string, warc_type string, record_id string, "
+        "target_uri string, http_status int, body_text string, "
+        "refers_to string, profile string, payload_digest string")
+    plan = _plan(warc_revisit_dedup(recs))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_cms_heavy_hitters_broadcast_sketch(spark):
+    from docling_spark.operators.sketch import cms_heavy_hitters
+    terms = _docs(spark).select(
+        F.explode(F.split("text", " ")).alias("token"))
+    plan = _plan(cms_heavy_hitters(terms, value_col="token",
+                                   width=64, k=5))
+    # the depth×width sketch joins back as a broadcast — the
+    # vocabulary-sized probe table must never sort-merge
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert "CartesianProduct" not in plan
+    # top-k is the salted two-phase pattern, not a global single
+    # partition over the vocabulary
+    assert plan.count("Exchange SinglePartition") <= 1  # final k rows

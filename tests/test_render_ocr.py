@@ -208,3 +208,72 @@ def test_render_pages_skips_pages_that_do_not_decode(spark):
             for r in rows] == [("good", 2, 1, 3)]
     img, _ = render_page(306.0, 396.0, payload["cells"])
     assert bytes(rows[0].png) == png_encode(img)
+
+
+def _plan_src(spark, rows):
+    return spark.createDataFrame(
+        rows, "doc_id string, width double, height double, "
+              "rects array<struct<l double, t double, r double, "
+              "b double>>")
+
+
+def test_plan_ocr_empty_rects_sentinel(spark):
+    from docling_spark.operators.render import plan_ocr
+    out = plan_ocr(_plan_src(spark, [("d", 100.0, 100.0, [])])).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert (r["region_id"], r["n_regions"], r["coverage_e4"]) == (-1, 0, 0)
+
+
+def test_plan_ocr_three_decisions(spark):
+    from docling_spark.operators.render import plan_ocr
+    out = plan_ocr(_plan_src(spark, [
+        # full-page: coverage 1.0 > 0.75
+        ("full", 100.0, 100.0, [(0.0, 0.0, 99.0, 99.0)]),
+        # component boxes: one 30x30 rect dilated to 49x49 on 200x200
+        # (dilation reach: -10 rows/cols before, +9 after)
+        ("comp", 200.0, 200.0, [(50.0, 50.0, 79.0, 79.0)]),
+        # below area threshold: 2x2 rect dilated to 21x21 on 300x300
+        ("none", 300.0, 300.0, [(150.0, 150.0, 151.0, 151.0)]),
+    ])).collect()
+    by_doc = {}
+    for r in out:
+        by_doc.setdefault(r["doc_id"], []).append(r)
+    full, = by_doc["full"]
+    assert (full["l"], full["t"], full["r"], full["b"]) == (0, 0, 100, 100)
+    assert full["coverage_e4"] == 10000
+    comp, = by_doc["comp"]
+    assert (comp["l"], comp["t"], comp["r"], comp["b"]) == (40, 40, 88, 88)
+    assert comp["n_regions"] == 1
+    none, = by_doc["none"]
+    assert none["region_id"] == -1 and none["n_regions"] == 0
+    # 21x21 dilated px on 90000 → 49 e4-units
+    assert none["coverage_e4"] == 49
+
+
+def _rec_src(spark, rows):
+    cell_t = ("array<struct<l double, t double, r double, b double, "
+              "text string>>")
+    return spark.createDataFrame(
+        rows, f"doc_id string, prog {cell_t}, ocr {cell_t}")
+
+
+def test_reconcile_ocr_no_programmatic_keeps_all(spark):
+    from docling_spark.operators.render import reconcile_ocr
+    ocr = [(0.0, 0.0, 5.0, 5.0, "a"), (10.0, 10.0, 15.0, 15.0, "b")]
+    out = reconcile_ocr(_rec_src(spark, [("d", [], ocr)])).collect()
+    assert [(r["cell_rank"], r["origin"], r["text"]) for r in
+            sorted(out, key=lambda r: r["cell_rank"])] == [
+        (0, "ocr", "a"), (1, "ocr", "b")]
+
+
+def test_reconcile_ocr_touching_edges_intersect(spark):
+    from docling_spark.operators.render import reconcile_ocr
+    # shares only the x=10 edge with prog → still dropped (<=, not <)
+    out = reconcile_ocr(_rec_src(spark, [
+        ("d", [(0.0, 0.0, 10.0, 10.0, "P")],
+         [(10.0, 0.0, 20.0, 10.0, "edge"),
+          (10.1, 0.0, 20.0, 10.0, "clear")]),
+    ])).collect()
+    texts = [r["text"] for r in sorted(out, key=lambda r: r["cell_rank"])]
+    assert texts == ["P", "clear"]

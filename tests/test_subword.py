@@ -97,3 +97,55 @@ def test_unigram_unk_and_edges(spark):
     assert got[1] == [UNK]
     assert got[2] == ["ab", UNK, "ab", "ab"]
     assert got[3] == []
+
+
+def test_bpe_train_greedy_disjoint_and_order(spark):
+    from docling_spark.operators.bpe import bpe_train
+    df = spark.createDataFrame(
+        [(["a", "b", "a", "b"],), (["a", "b", "a", "b", "a", "b"],)],
+        "tokens array<string>")
+    merges = bpe_train(df, rounds=5)
+    # r1: "a b" count 2+3=5 ; r2: "ab ab" 1+2=3 (greedy: [ab]*3 →
+    # [abab, ab], never [ab, abab]) ; r3: "abab ab" on the odd doc;
+    # r4: no adjacent pairs remain → early stop
+    assert merges == [("a b", 5), ("ab ab", 3), ("abab ab", 1)]
+
+
+def test_bpe_train_tie_breaks_lexicographic(spark):
+    from docling_spark.operators.bpe import bpe_train
+    df = spark.createDataFrame([(["b", "c"],), (["a", "b"],)],
+                               "tokens array<string>")
+    merges = bpe_train(df, rounds=1)
+    assert merges == [("a b", 1)]
+
+
+def test_bpe_train_stops_when_no_pairs(spark):
+    from docling_spark.operators.bpe import bpe_train
+    df = spark.createDataFrame([(["x"],), ([],)], "tokens array<string>")
+    assert bpe_train(df, rounds=3) == []
+
+
+def test_bpe_encode_applies_in_rank_order(spark):
+    from docling_spark.operators.bpe import bpe_encode, bpe_train
+    df = spark.createDataFrame(
+        [(["a", "b", "a", "b"],), (["a", "b", "a", "b", "a", "b"],),
+         (["a", "c", "b"],)],
+        "tokens array<string>")
+    merges = bpe_train(df.limit(2), rounds=3)
+    out = {tuple(r["tokens"]): r["bpe_tokens"]
+           for r in bpe_encode(df, merges).collect()}
+    assert out[("a", "b", "a", "b")] == ["abab"]
+    # merge 3 ("abab ab") then coalesces the greedy leftover
+    assert out[("a", "b", "a", "b", "a", "b")] == ["ababab"]
+    # merges only fire on ADJACENT learned pairs — 'c' blocks them
+    assert out[("a", "c", "b")] == ["a", "c", "b"]
+
+
+def test_bpe_train_drops_null_and_empty_symbols(spark):
+    from docling_spark.operators.bpe import bpe_train
+    df = spark.createDataFrame(
+        [(["a", None, "", "b"],), (["a", "b"],)],
+        "tokens array<string>")
+    # post-filter both docs are [a, b]: one merge, count 2 — a NULL
+    # pair key must never win the argmax and crash pair.split
+    assert bpe_train(df, rounds=2) == [("a b", 2)]

@@ -42,3 +42,49 @@ def test_round_trips_through_extraction(spark):
     got = {(r["row_idx"], r["col_idx"]): r["text"] for r in rows}
     assert got[(0, 0)] == "k" and got[(0, 1)] == "v"
     assert got[(1, 0)] == "chars" and got[(1, 1)].isdigit()
+
+
+def test_html_table_cells_nested_table_skipped(spark):
+    from docling_spark.operators.tables import html_table_cells
+    html = ("<html><body>"
+            "<table><tr><td><table><tr><td>inner</td></tr></table>"
+            "</td></tr></table>"               # nested → outer skipped
+            "<table><tr><td>solo</td></tr></table>"
+            "</body></html>")
+    df = spark.createDataFrame(
+        [("d", [{"kind": "html", "text": html, "media_ref": "",
+                 "offset": 0}])],
+        "doc_id string, spans array<struct<kind string, text string, "
+        "media_ref string, offset int>>")
+    rows = html_table_cells(df).collect()
+    # the nested-outer table is skipped like the reference
+    # (html_backend.py:376-379); the INNER standalone grid and the
+    # second table still parse
+    texts = sorted(r["text"] for r in rows)
+    assert texts == ["inner", "solo"]
+    assert all(r["num_rows"] == 1 and r["num_cols"] == 1 for r in rows)
+
+
+def _tcell(l, t, r, b, text):
+    return (float(l), float(t), float(r), float(b), text)
+
+
+def _struct_src(spark, rows):
+    cell_t = ("array<struct<l double, t double, r double, b double, "
+              "text string>>")
+    return spark.createDataFrame(rows, f"doc_id string, cells {cell_t}")
+
+
+def test_pdf_table_structure_operator(spark):
+    from docling_spark.operators.tables import pdf_table_structure
+    rows = [("d", [_tcell(0, 0, 100, 10, "H"),
+                   _tcell(0, 20, 30, 30, "a"),
+                   _tcell(35, 20, 65, 30, "b")])]
+    out = pdf_table_structure(_struct_src(spark, rows)).collect()
+    got = {(r["start_row"], r["start_col"]):
+           (r["row_span"], r["col_span"], r["column_header"], r["text"])
+           for r in out}
+    assert got[(0, 0)] == (1, 2, 1, "H")
+    assert got[(1, 0)] == (1, 1, 0, "a")
+    assert got[(1, 1)] == (1, 1, 0, "b")
+    assert all(r["num_rows"] == 2 and r["num_cols"] == 2 for r in out)

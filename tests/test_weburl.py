@@ -146,3 +146,42 @@ def test_bitext_candidates(spark):
     assert (5, 6) not in got                      # length-ratio gate
     assert all(a != 4 and b != 4 for a, b in got)
     assert (1, 6) not in got     # shares skeleton, fails ratio (285)
+
+
+def test_robots_gate_longest_match_and_default_allow(spark):
+    from docling_spark.operators.weburl import robots_gate
+    docs = spark.createDataFrame(
+        [("1", "https://a.com/private/x"),
+         ("2", "https://a.com/private/ok/x"),   # re-allowed subtree
+         ("3", "https://a.com/pub"),            # no matching rule
+         ("4", "https://b.com/private/x"),      # unruled host
+         ("5", "https://A.COM:443/private/y")], # host normalization
+        "doc_id string, url string")
+    rules = spark.createDataFrame(
+        [("a.com", "/private", 0), ("a.com", "/private/ok", 1)],
+        "host string, path_prefix string, allow int")
+    kept = {r["doc_id"] for r in robots_gate(docs, rules).collect()}
+    assert kept == {"2", "3", "4"}
+
+
+def test_robots_gate_tie_breaks_toward_allow(spark):
+    from docling_spark.operators.weburl import robots_gate
+    docs = spark.createDataFrame(
+        [("1", "https://a.com/p/x")], "doc_id string, url string")
+    rules = spark.createDataFrame(
+        [("a.com", "/p", 0), ("a.com", "/p", 1)],
+        "host string, path_prefix string, allow int")
+    assert robots_gate(docs, rules).count() == 1
+
+
+def test_domain_mix_report_shares_sum(spark):
+    from docling_spark.operators.weburl import domain_mix_report
+    docs = spark.createDataFrame(
+        [("1", "https://x.a.com/p", "one two"),
+         ("2", "https://a.com/q", "three"),
+         ("3", "https://b.org/r", "four five six")],
+        "doc_id string, url string, text string")
+    out = {r["domain"]: r for r in domain_mix_report(docs).collect()}
+    assert out["a.com"]["n_docs"] == 2
+    assert out["a.com"]["n_tokens"] == 3
+    assert out["b.org"]["token_share_e4"] == 5000

@@ -1,7 +1,7 @@
 """Local replica of the driver's correctness gate: run every
 ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB at
 sf0.01, compare row count, column names, and an order-insensitive
-value hash.
+value hash. A query where both engines return 0 rows is a FAIL.
 
 Usage: python tools/check_oracles.py [sf_dir] [only_query]
 Queries run ORACLE_JOBS at a time (default 4) — Spark's scheduler
@@ -150,6 +150,9 @@ def main():
             problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
         if sorted(scols) != sorted(ocols):
             problems.append(f"schema spark={scols} oracle={ocols}")
+        if not srows and not orows:
+            # two empty results hash equal and prove nothing
+            problems.append("both engines returned 0 rows")
         if not problems:
             hs = value_hash(srows, scols)
             ho = value_hash(orows, ocols)
