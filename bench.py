@@ -64,12 +64,18 @@ def time_query(fn, spark, sf_dir: str) -> tuple:
     projected columns, so pure-projection queries (the export
     renderers, format_sniff) would time only their upstream scan.
     bit_xor (not sum) because summing 64-bit hashes overflows long
-    under ANSI mode."""
+    under ANSI mode.
+
+    The cache is cleared before every rep: an operator that persists
+    would otherwise serve reps 2+ from what rep 1 cached (the cache
+    manager matches the rebuilt plan), timing the cache, not the
+    query."""
     from pyspark.sql import functions as F
 
     best = None
     n = 0
     for _ in range(BENCH_REPS):
+        spark.catalog.clearCache()
         t0 = time.monotonic()
         df = fn(spark, sf_dir)
         row = df.agg(

@@ -24,6 +24,7 @@ Layout:
     <root>/_snapshots.json          atomic manifest (committed snapshots)
     <root>/snap-<id>/part-*.parquet data files of one snapshot
     <root>/metrics/snap-<id>/       lineage + metrics, a row per data file
+    <root>/<name>/snap-<id>/        a job's side output of one snapshot
 """
 
 from __future__ import annotations
@@ -124,6 +125,22 @@ class SnapshotTable:
             manifest["snapshots"].append(entry)
             self._commit_manifest(manifest)
         return entry
+
+    def write_side_output(self, spark: SparkSession, name: str,
+                          render: Callable[[DataFrame], DataFrame]
+                          ) -> dict:
+        """Write ``render`` of each committed snapshot's rows to
+        ``<root>/<name>/snap-<id>`` unless a finished write is there, so
+        a run killed after its commit leaves it to the next run.
+        Returns {snapshot id: directory}."""
+        dirs = {}
+        for s in self.snapshots():
+            path = os.path.join(self.root, name, f"snap-{s['id']}")
+            if not os.path.exists(os.path.join(path, "_SUCCESS")):
+                (render(spark.read.parquet(s["data"]))
+                 .write.mode("overwrite").parquet(path))
+            dirs[s["id"]] = path
+        return dirs
 
     # -- read --------------------------------------------------------------
 

@@ -257,8 +257,7 @@ def minhash_jaccard_est(sigs: DataFrame, pairs: DataFrame, *,
 
 
 def winnow_overlap_pairs(fps: DataFrame, *, min_shared: int = 2,
-                         max_df: int = 20,
-                         storage: str = "memory_and_disk") -> DataFrame:
+                         max_df: int = 20) -> DataFrame:
     """MOSS-style content-overlap candidates from winnowing
     fingerprints (textstats.winnow_fingerprints): docs sharing ≥
     min_shared selected fingerprints. Guaranteed to catch any shared
@@ -275,11 +274,10 @@ def winnow_overlap_pairs(fps: DataFrame, *, min_shared: int = 2,
     otherwise each re-run the Arrow winnower — exchange reuse never
     fires across Python-UDF subtrees (PythonUDF expr-ids break plan
     canonicalization), so without the persist the most expensive step
-    executes 4×. Pass storage="none" to trade recompute for zero
-    cache pressure."""
+    executes 4×. An input the caller already cached is used as is."""
     from pyspark import StorageLevel
 
-    if storage != "none" and fps.storageLevel == StorageLevel.NONE:
+    if fps.storageLevel == StorageLevel.NONE:
         fps = fps.persist(StorageLevel.MEMORY_AND_DISK)
     df_tbl = fps.groupBy("fp").agg(F.count("*").alias("df"))
     rare = fps.join(df_tbl.filter(F.col("df") <= max_df), "fp")
@@ -301,8 +299,7 @@ def winnow_overlap_pairs(fps: DataFrame, *, min_shared: int = 2,
                     .cast("long").alias("overlap_e4")))
 
 
-def ngram_novelty(sh: DataFrame, *,
-                  storage: str = "memory_and_disk") -> DataFrame:
+def ngram_novelty(sh: DataFrame) -> DataFrame:
     """Per-doc n-gram novelty (memorization/repetition analysis à la
     Carlini et al.): the fraction of a doc's distinct shingles whose
     FIRST occurrence (min doc_id) is this doc. Near-0 novelty = the doc
@@ -319,12 +316,10 @@ def ngram_novelty(sh: DataFrame, *,
     shuffle of sh on shingle, one map-side-combined count of sh on
     doc_id, then a doc-cardinality join. The shingle table is
     persisted (memory_and_disk, like minhash_dedup) so the two
-    consumers share ONE shingler pass; pass storage="none" at corpus
-    scales where recompute beats cache pressure."""
+    consumers share ONE shingler pass."""
     from pyspark import StorageLevel
 
-    if storage != "none":
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     first = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = (first.groupBy("first_doc")
              .agg(F.count("*").alias("n_novel")))
@@ -435,8 +430,6 @@ def bloom_membership(seen: DataFrame, probes: DataFrame, *,
 def minhash_dedup(docs: DataFrame, *, n: int = 3, num_hashes: int = 16,
                   bands: int = 4, threshold: float = 0.7,
                   num_partitions: int = 0,
-                  shingle_storage: str = "memory_and_disk",
-                  deterministic_output: bool = False,
                   hash_family: str = "cw") -> DataFrame:
     """Full near-dup pipeline, one-shuffle construction: per-shingle
     48-bit md5 hashes → ONE groupBy(doc_id) producing both the k
@@ -459,15 +452,15 @@ def minhash_dedup(docs: DataFrame, *, n: int = 3, num_hashes: int = 16,
     immaterial), and the SQL oracle replays the SAME hashed-set rule,
     so both engines agree bit-for-bit by construction.
 
-    ``shingle_storage`` now controls the per-doc signature+set table
-    (num_hashes longs + the hash set per doc — far smaller than the
-    exploded shingle table it replaced); it feeds three consumers
-    (band explode, both verify sides). Pass "none" to recompute.
+    The per-doc signature+set table (num_hashes longs + the hash set
+    per doc — far smaller than the exploded shingle table it replaced)
+    is persisted (memory_and_disk); it feeds three consumers (band
+    explode, both verify sides).
 
-    Output order is NOT deterministic by default: a global sort of the
-    pair table is a range-shuffle that buys nothing for downstream
-    consumers (joins/writes are order-insensitive). Pass
-    ``deterministic_output=True`` only when a stable listing is needed.
+    Output order is NOT deterministic: a global sort of the pair table
+    is a range-shuffle that buys nothing for downstream consumers
+    (joins/writes are order-insensitive); sort at the reader when a
+    stable listing is needed.
     """
     from pyspark import StorageLevel
 
@@ -495,9 +488,7 @@ def minhash_dedup(docs: DataFrame, *, n: int = 3, num_hashes: int = 16,
                     .alias(f"h{s}") for s in range(num_hashes)]
     per_doc = mixed.groupBy("doc_id").agg(
         *sig_aggs, F.sort_array(F.collect_set("ha")).alias("_hs"))
-    if shingle_storage != "none":
-        per_doc = per_doc.persist(
-            getattr(StorageLevel, shingle_storage.upper()))
+    per_doc = per_doc.persist(StorageLevel.MEMORY_AND_DISK)
 
     banded = banded_hashes(per_doc.drop("_hs"),
                            num_hashes=num_hashes, bands=bands)
@@ -518,8 +509,7 @@ def minhash_dedup(docs: DataFrame, *, n: int = 3, num_hashes: int = 16,
               .join(sets.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
               .join(sets.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
               .select("doc_a", "doc_b", (inter / union).alias("jaccard")))
-    out = scored.filter(F.col("jaccard") >= threshold)
-    return out.orderBy("doc_a", "doc_b") if deterministic_output else out
+    return scored.filter(F.col("jaccard") >= threshold)
 
 
 def dedup_components(pairs: DataFrame, *,
@@ -691,16 +681,12 @@ def simhash_pairs(docs: DataFrame, *, n: int = 3, bits: int = 32,
 
     Scale note: bucket size is corpus/2^(bits/bands) per band value, so
     at 10^12 docs use the widest signature the engine offers (two
-    32-bit columns) and more bands; the plan shape is unchanged."""
-    from pyspark import StorageLevel
+    32-bit columns) and more bands; the plan shape is unchanged.
 
-    # persist the per-doc signature (2 longs/doc): the banded
-    # self-join's two branches would otherwise each re-run the whole
-    # signature lineage — shingle UDF + vote aggregation — because
-    # exchange reuse never fires across Python-UDF subtrees.
-    sig = (simhash_bits(docs, n=n, bits=bits,
-                        num_partitions=num_partitions)
-           .persist(StorageLevel.MEMORY_AND_DISK))
+    Nothing is cached: both join sides read one signature exchange,
+    which Spark reuses (the executed plan holds one ArrowEvalPython and
+    a ReusedExchange, with AQE on or off), so the shingle UDF runs once."""
+    sig = simhash_bits(docs, n=n, bits=bits, num_partitions=num_partitions)
     width = bits // bands
     mask = (1 << width) - 1
     banded = sig.select(
@@ -758,8 +744,7 @@ def canonical_representatives(components: DataFrame, scores: DataFrame,
                  F.max(score_col).alias(f"best_{score_col}")))
 
 
-def dup_ngram_fraction(sh: DataFrame, *, min_df: int = 2,
-                       storage: str = "memory_and_disk") -> DataFrame:
+def dup_ngram_fraction(sh: DataFrame, *, min_df: int = 2) -> DataFrame:
     """Per-doc duplicated-n-gram fraction (the corpus-overlap /
     memorization-risk profile of Lee et al. 2021 §5): for each doc,
     the share of its distinct shingles that also occur in ≥ ``min_df``
@@ -779,8 +764,7 @@ def dup_ngram_fraction(sh: DataFrame, *, min_df: int = 2,
     doc-key count. Output: (doc_id, n_grams, n_dup, dup_frac_e4)."""
     from pyspark import StorageLevel
 
-    if storage != "none":
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     common = (sh.groupBy("shingle")
               .agg(F.count(F.lit(1)).alias("_df"))
               .filter(F.col("_df") >= min_df)

@@ -281,8 +281,7 @@ def ahash_udf(col: Column, hash_size: int = 8) -> Column:
 
 def phash_near_dup(hashed: DataFrame, *, id_col: str = "media_ref",
                    hash_col: str = "ahash", bands: int = 4,
-                   max_hamming: int = 3,
-                   storage: str = "memory_and_disk") -> DataFrame:
+                   max_hamming: int = 3) -> DataFrame:
     """Perceptual near-duplicate pairs by banded hamming LSH over a
     64-bit hash column: split the hash into ``bands`` equal bit-bands,
     bucket-join on (band, band_key), then verify candidates with
@@ -302,19 +301,14 @@ def phash_near_dup(hashed: DataFrame, *, id_col: str = "media_ref",
     Python/Arrow UDF (PythonUDF expr-ids break plan canonicalization),
     so when the caller's ``hashed`` embeds the decode UDF it would
     re-decode every asset — the hash table is persisted at the branch
-    point (16 B/asset; ``storage="none"`` opts out). The cache lives
-    until the session drops it: a caller looping many invocations in
-    one session (bench reps) should unpersist between rounds via
-    ``spark.catalog.clearCache()`` or pass storage="none"."""
+    point (16 B/asset, memory_and_disk) unless the caller already
+    cached it. The cache lives until the session drops it: a caller
+    looping many invocations in one session (bench reps) should
+    unpersist between rounds via ``spark.catalog.clearCache()``."""
     from pyspark import StorageLevel
-    levels = {"memory_and_disk": StorageLevel.MEMORY_AND_DISK,
-              "memory_only": StorageLevel.MEMORY_ONLY,
-              "disk_only": StorageLevel.DISK_ONLY, "none": None}
-    if storage not in levels:
-        raise ValueError(f"storage must be one of {sorted(levels)}")
-    level = levels[storage]
-    if level is not None and hashed.storageLevel == StorageLevel.NONE:
-        hashed = hashed.persist(level)
+
+    if hashed.storageLevel == StorageLevel.NONE:
+        hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
     band_w = 64 // bands
     mask = (1 << band_w) - 1
     h = F.col(hash_col)

@@ -16,12 +16,13 @@ Stages, in one logical plan (gates, strips, split and pack optional):
     SimHash near-dup removal; keeps the text) → cross-doc boilerplate
     line strip → repeated-substring removal → train/val/test split →
     one snapshot write (lake.SnapshotTable.write_snapshot) → packing
-    side-table → processed-ids append → one JSON summary line.
+    side-table of each snapshot that lacks one (<output>/packing/
+    snap-<id>) → processed-ids append → one JSON summary line.
 
 Default flags run the input count, the snapshot write and the
-processed append, and cache nothing of their own. A re-run after a
-kill resumes from the last committed snapshot (the manifest is the
-only commit point), same as the extract job.
+processed append, and cache nothing. A re-run after a kill resumes
+from the last committed snapshot (the manifest is the only commit
+point), same as the extract job.
 """
 
 from __future__ import annotations
@@ -107,7 +108,15 @@ def main(argv=None, _spark: SparkSession = None) -> int:
     decided = todo.select("doc_id")
     counters = {"input": todo.count()}
     side_outputs = {}
+
+    def pack(committed):
+        from docling_spark.operators.packing import pack_sequences
+        return pack_sequences(committed.select("doc_id", "n_tokens"),
+                              seq_len=args.pack, n_shards=args.partitions)
+
     if counters["input"] == 0:
+        if args.pack:  # a snapshot whose run died before packing it
+            table.write_side_output(spark, "packing", pack)
         print(json.dumps({"status": "noop", "docs": 0,
                           "resume": "all input already decided"}))
         if _spark is None:
@@ -159,14 +168,11 @@ def main(argv=None, _spark: SparkSession = None) -> int:
     # kept none; AQE may then prune the observation under the strips
     counters["after_curate"] = kept.get["rows"] if entry else 0
     counters["output"] = entry["rows"] if entry else 0
-    if entry and args.pack:
-        from docling_spark.operators.packing import pack_sequences
-        path = f"{args.output}/packing"
-        committed = spark.read.parquet(entry["data"])
-        (pack_sequences(committed.select("doc_id", "n_tokens"),
-                        seq_len=args.pack, n_shards=args.partitions)
-         .write.mode("overwrite").parquet(path))
-        side_outputs["packing"] = path
+    if args.pack:
+        # every committed snapshot without one, this run's included
+        dirs = table.write_side_output(spark, "packing", pack)
+        if entry:
+            side_outputs["packing"] = dirs[entry["id"]]
     # last, and also when every doc was dropped (see the resume note)
     decided.write.mode("append").parquet(proc_path)
 

@@ -19,7 +19,9 @@ Flow (SURVEY.md §7.1):
     one uncached snapshot write (lake.SnapshotTable.write_snapshot:
     metrics per data file, atomic manifest commit, status "noop" when
     nothing was left to do) → print one JSON summary line, with the
-    route counts under "routes". --export/--enrich read the snapshot.
+    route counts under "routes". --export/--enrich render each committed
+    snapshot that has no such side output yet, under
+    <output>/<name>/snap-<id>.
 
 Re-running after a kill resumes from the last committed snapshot:
 uncommitted data directories are invisible to readers (the manifest is
@@ -77,9 +79,6 @@ def main(argv=None) -> int:
                     help="also render spans to this sink format")
     ap.add_argument("--enrich", action="store_true",
                     help="also write the enrichment side-table")
-    ap.add_argument("--main-content", action="store_true",
-                    help="also write the DOM-boilerplate-stripped "
-                         "main-content side-table for html docs")
     args = ap.parse_args(argv)
 
     from docling_spark.lake import (
@@ -112,6 +111,21 @@ def main(argv=None) -> int:
         F.sum("n_spans").alias("spans"),
         F.sum((F.col("status") != "success").cast("long")).alias("errors"))
     entry = table.write_snapshot(out, metrics=partition_metrics)
+
+    # side outputs render every committed snapshot that lacks one, so
+    # a run killed after its commit is covered here, even by a noop
+    written = {}
+    if args.export:
+        from docling_spark.operators import export as ex
+        render = {"markdown": ex.export_markdown, "text": ex.export_text,
+                  "doctags": ex.export_doctags, "html": ex.export_html}
+        written["export"] = table.write_side_output(
+            spark, f"exports/{args.export}", render[args.export])
+    if args.enrich:
+        from docling_spark.operators.enrich import enrich_spans
+        written["enrichment"] = table.write_side_output(
+            spark, "enrichment", enrich_spans)
+
     if entry is None:
         print(json.dumps({"status": "noop", "docs": 0,
                           "resume": "all input already committed",
@@ -119,28 +133,7 @@ def main(argv=None) -> int:
         spark.stop()
         return 0
     counters = obs.get
-
-    side_outputs = {}
-    if args.export or args.enrich:
-        committed = spark.read.parquet(entry["data"])
-    if args.export:
-        from docling_spark.operators import export as ex
-        render = {"markdown": ex.export_markdown, "text": ex.export_text,
-                  "doctags": ex.export_doctags, "html": ex.export_html}
-        path = f"{args.output}/exports/{args.export}"
-        render[args.export](committed).write.mode("overwrite").parquet(path)
-        side_outputs["export"] = path
-    if args.enrich:
-        from docling_spark.operators.enrich import enrich_spans
-        path = f"{args.output}/enrichment"
-        enrich_spans(committed).write.mode("overwrite").parquet(path)
-        side_outputs["enrichment"] = path
-    if args.main_content:
-        from docling_spark.operators.maincontent import extract_main_content
-        path = f"{args.output}/main_content"
-        (extract_main_content(todo, num_partitions=args.partitions)
-         .write.mode("overwrite").parquet(path))
-        side_outputs["main_content"] = path
+    side_outputs = {key: dirs[entry["id"]] for key, dirs in written.items()}
 
     print(json.dumps({
         "status": "committed",

@@ -83,7 +83,8 @@ def _run_curate_subprocess(out_root, crash_after_commit=False, timeout=420):
             "--partitions", "4",
             "--lang", "en",
             "--strip-boilerplate",
-            "--split"]
+            "--split",
+            "--pack", "64"]
     cmd = ([sys.executable, "-c", _CRASH_AFTER_COMMIT, ROOT]
            if crash_after_commit
            else [sys.executable, os.path.join(ROOT, "jobs", "curate.py")])
@@ -95,8 +96,9 @@ def test_curate_job_kill_after_commit_then_resume(spark, tmp_path):
     """Kill-mid-job e2e (the curation twin of the extract job's
     commit+resume spark-submit test): run 1 dies in the worst window —
     snapshot committed, decision set NOT yet recorded. Run 2 must
-    finish the job with no doc_id duplicated and no input doc left
-    undecided, and a third run must be a noop."""
+    finish the job with no doc_id duplicated, no input doc left
+    undecided and every snapshot packed, and a third run must be a
+    noop."""
     out_root = str(tmp_path / "lake_kill")
 
     p1 = _run_curate_subprocess(out_root, crash_after_commit=True)
@@ -123,6 +125,14 @@ def test_curate_job_kill_after_commit_then_resume(spark, tmp_path):
 
     # no dupes: every committed doc_id appears exactly once
     assert snap.count() == snap.select("doc_id").distinct().count()
+
+    # side outputs cover every snapshot: run 1 died before packing its
+    # snapshot, so run 2 packed it along with its own
+    packed = spark.read.parquet(*[
+        os.path.join(out_root, "packing", f"snap-{s['id']}")
+        for s in table.snapshots()])
+    assert (sorted(r["doc_id"] for r in packed.select("doc_id").collect())
+            == sorted(r["doc_id"] for r in snap.select("doc_id").collect()))
 
     # no gaps: every input doc is decided — committed or recorded drop
     decided = snap.select("doc_id").union(

@@ -128,6 +128,11 @@ def test_extract_job_export_and_enrich(tmp_path):
     snaps = json.loads((out_dir / "_snapshots.json").read_text())["snapshots"]
     assert len(snaps) == 1
     committed = pq.read_table(snaps[0]["data"], columns=["doc_id"])
+    # one directory per snapshot, so a resumed run keeps earlier ones
+    snap_dir = f"snap-{summary['snapshot']}"
+    assert summary["side_outputs"] == {
+        "export": str(out_dir / "exports" / "markdown" / snap_dir),
+        "enrichment": str(out_dir / "enrichment" / snap_dir)}
     exported = pq.read_table(summary["side_outputs"]["export"])
     assert exported.num_rows == committed.num_rows == summary["docs"] > 0
     assert (sorted(exported.column("doc_id").to_pylist())
