@@ -495,6 +495,9 @@ def q_extract_pdf_raw_routed(spark, sf_dir):
             F.base64("pdf").alias("text"),
             F.lit("").alias("media_ref"),
             F.lit(0).cast("int").alias("offset"))).alias("spans"))
+    # extract_routed counts the routes, then reads the corpus once per
+    # path; persist it so the PDF synthesis (a mapInPandas) runs once
+    # (sf0.1 on 4 cores: 5.3 s with the persist, 6.7-6.9 s without)
     corpus = html.unionByName(raw).persist()
     out = extract_routed(corpus, num_partitions=_par(spark))
     ex = out.select("doc_id", "status", F.explode("spans").alias("s"))
@@ -3906,8 +3909,8 @@ def q_dup_ngram_fraction(spark, sf_dir):
     """Per-doc duplicated-n-gram fraction (operators/dedup.py::
     dup_ngram_fraction) — the order-free corpus-overlap profile:
     exact clones (doc_id+1000000) and their originals must both score
-    dup_frac_e4 = 10000; one gram-key shuffle + one semi-join of the
-    common-gram set."""
+    dup_frac_e4 = 10000; one window count over the gram key, then one
+    groupBy(doc_id), over a single read of the shingle table."""
     from docling_spark.operators.dedup import (dup_ngram_fraction,
                                                exploded_shingles)
     corpus = _clone_corpus_exact(_docs(spark, sf_dir))

@@ -91,8 +91,7 @@ class SnapshotTable:
     # -- write -------------------------------------------------------------
 
     def write_snapshot(self, df: DataFrame,
-                       metrics: Optional[MetricsFn] = None,
-                       key_col: str = "doc_id") -> Optional[dict]:
+                       metrics: Optional[MetricsFn] = None) -> Optional[dict]:
         """Write df once as a new snapshot, counting its rows on that
         write. At 0 rows, remove the data and return None. Otherwise
         write ``metrics`` of the files just written (``partition_id`` =
@@ -118,7 +117,7 @@ class SnapshotTable:
                                        f"snap-{snap_id}")
             metrics(written).write.mode("errorifexists").parquet(metrics_dir)
         entry = {"id": snap_id, "data": data_dir, "metrics": metrics_dir,
-                 "key_col": key_col, "rows": rows,
+                 "key_col": "doc_id", "rows": rows,
                  "committed_at": time.time()}
         with self._commit_lock():
             manifest = self._read_manifest()
@@ -167,10 +166,9 @@ class SnapshotTable:
             return None
         return spark.read.parquet(*dirs)
 
-    def committed_keys(self, spark: SparkSession,
-                       key_col: str = "doc_id") -> Optional[DataFrame]:
+    def committed_keys(self, spark: SparkSession) -> Optional[DataFrame]:
         df = self.read(spark)
-        return None if df is None else df.select(key_col)
+        return None if df is None else df.select("doc_id")
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -211,8 +209,7 @@ class IcebergTable:
             df.writeTo(identifier).using("iceberg").create()
 
     def write_snapshot(self, df: DataFrame,
-                       metrics: Optional[MetricsFn] = None,
-                       key_col: str = "doc_id") -> dict:
+                       metrics: Optional[MetricsFn] = None) -> dict:
         """Append df, then ``metrics(df)`` to the metrics table. An
         Iceberg append commits inside the write, so there are no
         written-but-uncommitted files to aggregate: ``metrics`` runs
@@ -243,10 +240,9 @@ class IcebergTable:
             return None
         return spark.read.table(self.metrics_identifier)
 
-    def committed_keys(self, spark: SparkSession,
-                       key_col: str = "doc_id") -> Optional[DataFrame]:
+    def committed_keys(self, spark: SparkSession) -> Optional[DataFrame]:
         df = self.read(spark)
-        return None if df is None else df.select(key_col)
+        return None if df is None else df.select("doc_id")
 
 
 def open_table(spark: SparkSession, location: str, *,
@@ -261,17 +257,16 @@ def open_table(spark: SparkSession, location: str, *,
     return SnapshotTable(location)
 
 
-def resume_filter(input_df: DataFrame, table,
-                  key_col: str = "doc_id") -> DataFrame:
-    """Drop rows whose key is already committed (the resume anti-join).
-    At scale the committed-keys side is a column-pruned parquet scan of
-    just the key column; AQE broadcasts it when small. A key committed
-    in several snapshots needs no dedup first: an anti-join only asks
-    whether a match exists."""
-    committed = table.committed_keys(input_df.sparkSession, key_col)
+def resume_filter(input_df: DataFrame, table) -> DataFrame:
+    """Drop rows whose doc_id is already committed (the resume
+    anti-join). At scale the committed-keys side is a column-pruned
+    parquet scan of just the doc_id column; AQE broadcasts it when
+    small. A key committed in several snapshots needs no dedup first:
+    an anti-join only asks whether a match exists."""
+    committed = table.committed_keys(input_df.sparkSession)
     if committed is None:
         return input_df
-    return input_df.join(committed, on=key_col, how="left_anti")
+    return input_df.join(committed, on="doc_id", how="left_anti")
 
 
 def partition_metrics(written: DataFrame) -> DataFrame:

@@ -52,18 +52,16 @@ def _assign_udf(cents: np.ndarray):
 
 
 def kmeans_fit_assign(embeddings: DataFrame, *, k: int = KMEANS_K,
-                      iters: int = KMEANS_ITERS,
-                      persist: bool = True) -> DataFrame:
+                      iters: int = KMEANS_ITERS) -> DataFrame:
     """(vec_id, embedding) → (vec_id, embedding, cluster) after
     ``iters`` Lloyd iterations from the deterministic first-k
     initialization. The projected input is persisted across the
     UPDATE-step actions (the MLlib idiom) so the loop reads the
     source exactly once — without it each ``collect`` of the k×dim
     means re-runs the full upstream lineage, an extra corpus scan per
-    iteration (hours at 100 TB). Pass ``persist=False`` when the
-    caller already holds a materialized frame."""
+    iteration (hours at 100 TB)."""
     e = _as_double(embeddings).select("vec_id", "embedding")
-    if persist and iters > 1:
+    if iters > 1:
         e = e.persist()
     ids, init = _collect_matrix(e, limit=k)
     if len(ids) < k:

@@ -269,33 +269,30 @@ def winnow_overlap_pairs(fps: DataFrame, *, min_shared: int = 2,
     every plagiarism detector applies); the remaining self-equijoin on
     fp emits only co-bucketed pairs, never a doc×doc product.
 
-    The fingerprint table is persisted (memory_and_disk): its four
-    consumers (df cap, per-doc sizes, both self-join sides) would
-    otherwise each re-run the Arrow winnower — exchange reuse never
-    fires across Python-UDF subtrees (PythonUDF expr-ids break plan
-    canonicalization), so without the persist the most expensive step
-    executes 4×. An input the caller already cached is used as is."""
-    from pyspark import StorageLevel
-
-    if fps.storageLevel == StorageLevel.NONE:
-        fps = fps.persist(StorageLevel.MEMORY_AND_DISK)
-    df_tbl = fps.groupBy("fp").agg(F.count("*").alias("df"))
-    rare = fps.join(df_tbl.filter(F.col("df") <= max_df), "fp")
-    sizes = fps.groupBy("doc_id").agg(F.count("*").alias("n_fp"))
-    a = rare.alias("a")
-    b = rare.alias("b")
-    pairs = (a.join(b, (F.col("a.fp") == F.col("b.fp"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .groupBy(F.col("a.doc_id").alias("doc_a"),
-                      F.col("b.doc_id").alias("doc_b"))
-             .agg(F.count("*").alias("n_shared"))
-             .filter(F.col("n_shared") >= min_shared))
-    return (pairs
-            .join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-            .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+    Plan shape: the per-doc fingerprint count (a window over doc_id)
+    and the df (a window over fp) are computed on ``fps`` itself, so
+    the df cap, the self-join sides and the overlap denominator all
+    read ONE frame: the Arrow winnower runs once per input row and the
+    second self-join side reuses the fp exchange."""
+    counted = (fps
+               .withColumn("_n_fp", F.count(F.lit(1)).over(
+                   Window.partitionBy("doc_id")))
+               .withColumn("_df", F.count(F.lit(1)).over(
+                   Window.partitionBy("fp")))
+               .filter(F.col("_df") <= max_df))
+    a = counted.alias("a")
+    b = counted.alias("b")
+    return (a.join(b, (F.col("a.fp") == F.col("b.fp"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .groupBy(F.col("a.doc_id").alias("doc_a"),
+                     F.col("b.doc_id").alias("doc_b"),
+                     F.col("a._n_fp").alias("_na"),
+                     F.col("b._n_fp").alias("_nb"))
+            .agg(F.count("*").alias("n_shared"))
+            .filter(F.col("n_shared") >= min_shared)
             .select("doc_a", "doc_b", "n_shared",
                     F.floor(F.col("n_shared") * 10000
-                            / F.least(F.col("sa.n_fp"), F.col("sb.n_fp")))
+                            / F.least(F.col("_na"), F.col("_nb")))
                     .cast("long").alias("overlap_e4")))
 
 
@@ -306,33 +303,21 @@ def ngram_novelty(sh: DataFrame) -> DataFrame:
     is assembled from already-seen text; the corpus-level novelty curve
     is the dedup-effectiveness report.
 
-    Plan shape: the novel count per doc is derived from the min-agg
-    OUTPUT (first-occurrence table → groupBy(first_doc)), NOT by
-    joining the first-occurrence table back onto the full shingle
-    table — the rejoin spelling re-shuffles the whole shingle table on
-    the string key a second time AND (because exchange reuse never
-    fires across Python-UDF subtrees: PythonUDF expr-ids break plan
-    canonicalization) re-runs the Arrow shingler per branch. Here: one
-    shuffle of sh on shingle, one map-side-combined count of sh on
-    doc_id, then a doc-cardinality join. The shingle table is
-    persisted (memory_and_disk, like minhash_dedup) so the two
-    consumers share ONE shingler pass."""
-    from pyspark import StorageLevel
-
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    first = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
-    novel = (first.groupBy("first_doc")
-             .agg(F.count("*").alias("n_novel")))
-    totals = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    return (totals.join(novel,
-                        totals["doc_id"] == novel["first_doc"], "left")
-            .select(
-                "doc_id", "n_shingles",
-                F.coalesce(F.col("n_novel"), F.lit(0)).cast("long")
-                 .alias("n_novel"),
-                F.floor(F.coalesce(F.col("n_novel"), F.lit(0)) * 10000
-                        / F.col("n_shingles"))
-                 .cast("long").alias("novelty_e4")))
+    Plan shape: the first owner of each shingle is a window min over
+    the shingle key, and ONE groupBy(doc_id) counts both the doc's
+    shingles and the ones it owns, so the shingle table (and the Arrow
+    shingler under it) is read once. A NULL doc_id never owns a
+    shingle, so its group reads n_novel 0."""
+    first = F.min("doc_id").over(Window.partitionBy("shingle"))
+    per_doc = (sh.withColumn("_first", first)
+               .groupBy("doc_id")
+               .agg(F.count(F.lit(1)).alias("n_shingles"),
+                    F.count(F.when(F.col("doc_id") == F.col("_first"),
+                                   True)).alias("n_novel")))
+    return per_doc.select(
+        "doc_id", "n_shingles", "n_novel",
+        F.floor(F.col("n_novel") * 10000 / F.col("n_shingles"))
+         .cast("long").alias("novelty_e4"))
 
 
 def pair_eval(pred: DataFrame, truth: DataFrame) -> DataFrame:
@@ -452,10 +437,12 @@ def minhash_dedup(docs: DataFrame, *, n: int = 3, num_hashes: int = 16,
     immaterial), and the SQL oracle replays the SAME hashed-set rule,
     so both engines agree bit-for-bit by construction.
 
-    The per-doc signature+set table (num_hashes longs + the hash set
-    per doc — far smaller than the exploded shingle table it replaced)
-    is persisted (memory_and_disk); it feeds three consumers (band
-    explode, both verify sides).
+    The per-doc signature+set table is persisted (memory_and_disk).
+    Its band side and its hash-set side prune it to different
+    aggregates, so without the cache the executed plan runs the Arrow
+    shingler twice per doc, once under the min components and once
+    under the hash set (sf0.1 on 4 cores: ``dedup_minhash_lsh_indep``
+    2.0-2.5 s cached, 2.4-3.5 s without).
 
     Output order is NOT deterministic: a global sort of the pair table
     is a range-shuffle that buys nothing for downstream consumers
@@ -755,28 +742,22 @@ def dup_ngram_fraction(sh: DataFrame, *, min_df: int = 2) -> DataFrame:
     but original pages from templated mirrors, and the per-doc view of
     how much substring-level dedup would remove.
 
-    Plan shape: ONE shuffle of the shingle table on the gram key for
-    the df hash-aggregate; the common-gram set (df ≥ min_df — far
-    smaller than the gram vocabulary for any real min_df) is
-    semi-joined back onto the persisted shingle table (second gram-key
-    shuffle; exchange reuse can't fire across Arrow-UDF subtrees, so
-    the persist is what keeps the shingler at one pass), then one
-    doc-key count. Output: (doc_id, n_grams, n_dup, dup_frac_e4)."""
-    from pyspark import StorageLevel
-
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    common = (sh.groupBy("shingle")
-              .agg(F.count(F.lit(1)).alias("_df"))
-              .filter(F.col("_df") >= min_df)
-              .select("shingle"))
-    dup = (sh.join(common, "shingle", "left_semi")
-           .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_dup")))
-    totals = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    return (totals.join(dup, "doc_id", "left")
-            .select(
-                "doc_id", "n_grams",
-                F.coalesce(F.col("n_dup"), F.lit(0)).cast("long")
-                 .alias("n_dup"),
-                F.floor(F.coalesce(F.col("n_dup"), F.lit(0)) * 10000
-                        / F.col("n_grams"))
-                 .cast("long").alias("dup_frac_e4")))
+    Plan shape: the df is a window count over the gram key, and ONE
+    groupBy(doc_id) counts both the doc's grams and its common ones,
+    so the shingle table (and the Arrow shingler under it) is read
+    once. A NULL shingle is never common, and the NULL doc_id group
+    reads n_dup 0.
+    Output: (doc_id, n_grams, n_dup, dup_frac_e4)."""
+    common = ((F.count(F.lit(1)).over(Window.partitionBy("shingle"))
+               >= min_df)
+              & F.col("shingle").isNotNull()
+              & F.col("doc_id").isNotNull())
+    per_doc = (sh.withColumn("_common", common)
+               .groupBy("doc_id")
+               .agg(F.count(F.lit(1)).alias("n_grams"),
+                    F.count(F.when(F.col("_common"), True))
+                    .alias("n_dup")))
+    return per_doc.select(
+        "doc_id", "n_grams", "n_dup",
+        F.floor(F.col("n_dup") * 10000 / F.col("n_grams"))
+         .cast("long").alias("dup_frac_e4"))

@@ -83,17 +83,9 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, *, k: int = 10,
     # terms no query asks about (measured 16.7 s → ~2 s at sf0.1)
     exploded = docs.select("doc_id", F.size(toks).alias("dl"),
                            F.explode(toks).alias("term"))
-    # doc_terms feeds BOTH the df count and the score join — persist
-    # the (doc, query-term) candidate table so the corpus explode runs
-    # once, not twice (measured ~2× the query wall at sf0.1). Size is
-    # bounded by matches against the query vocabulary; MEMORY_AND_DISK
-    # spills rather than thrashing when a stop-wordy query matches
-    # everything.
-    from pyspark import StorageLevel
     doc_terms = (exploded.join(F.broadcast(vocab), "term")
                  .groupBy("doc_id", "term", "dl")
-                 .agg(F.count("*").alias("tf"))
-                 .persist(StorageLevel.MEMORY_AND_DISK))
+                 .agg(F.count("*").alias("tf")))
 
     stats = docs.select(
         F.count("*").alias("n_docs"),

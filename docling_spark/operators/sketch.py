@@ -271,11 +271,6 @@ def cms_heavy_hitters(df: DataFrame, *, value_col: str,
         "val", "cnt", "seed",
         (F.conv(F.substring(h, 1, 12), 16, 10).cast("long") % width)
         .alias("bucket"))
-    # tb feeds BOTH the sketch build and the probe side of the join;
-    # persist at the branch point so the vocabulary aggregation runs
-    # once, not once per consumer (same branch-point rule as the
-    # phash self-join in multimodal.py)
-    tb = tb.persist()
     cms = tb.groupBy("seed", "bucket").agg(
         F.sum("cnt").alias("bsum"))            # ≤ depth·width rows
     est = (tb.join(F.broadcast(cms), ["seed", "bucket"])

@@ -115,11 +115,17 @@ def test_ngram_novelty_clone_scores_zero(spark):
          (2, "alpha beta gamma delta epsilon"),     # exact clone
          (3, "totally fresh shingle content here")],
         "doc_id long, text string")
-    out = {r["doc_id"]: r for r in
-           ngram_novelty(exploded_shingles(docs, n=3)).collect()}
+    nulls = spark.createDataFrame([(None, "alpha beta gamma"), (3, None)],
+                                  "doc_id long, shingle string")
+    sh = exploded_shingles(docs, n=3).unionByName(nulls)
+    out = {r["doc_id"]: r for r in ngram_novelty(sh).collect()}
     assert out[1]["novelty_e4"] == 10000
     assert out[2]["novelty_e4"] == 0
     assert out[3]["novelty_e4"] == 10000
+    # the NULL shingle is one more shingle, owned by its only doc;
+    # the NULL doc_id group owns nothing
+    assert tuple(out[3]) == (3, 4, 4, 10000)
+    assert tuple(out[None]) == (None, 1, 0, 0)
 
 
 def test_idf_rarity_orders_rare_above_common(spark):

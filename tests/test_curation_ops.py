@@ -750,32 +750,71 @@ def test_stratified_split_stable_and_proportional(spark):
     assert all(out2[k] == v for k, v in out.items())
 
 
+def _held(spark):
+    """Ids of the RDDs the session holds persisted right now."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_curate_path_leaves_no_cache_held(spark, tmp_path, capsys):
     """curate(), simhash_pairs() and the curate job (default flags and
     with its one strip-stage cache) end holding no persisted RDD they
     did not release. RDDs that earlier tests in this shared session
-    localCheckpointed stay listed after clearCache, so the check is
-    against the set held before these runs. With their old persists,
-    curate() left 2 RDDs held and simhash_pairs() 1."""
+    localCheckpointed stay listed after clearCache, and the context
+    cleaner may release some of them meanwhile, so the check is that
+    no id outside the set held before these runs is held after them.
+    With their old persists, curate() left 2 RDDs held and
+    simhash_pairs() 1."""
     from docling_spark.operators.curate import curate
     from docling_spark.operators.dedup import simhash_pairs
     from jobs.curate import main
 
-    def held():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
     docs_path = "/root/testdata/sf0.001/documents.parquet"
     docs = spark.read.parquet(docs_path).select("doc_id", "text")
     spark.catalog.clearCache()
-    before = held()
+    before = _held(spark)
     assert curate(docs).count() > 0
-    assert held() == before
+    assert _held(spark) - before == set()
     assert simhash_pairs(docs).count() > 0
-    assert held() == before
+    assert _held(spark) - before == set()
     for name, flags in (("default", []),
                         ("boilerplate", ["--strip-boilerplate"])):
         argv = ["--input", docs_path, "--output", str(tmp_path / name),
                 "--partitions", "4", *flags]
         assert main(argv, _spark=spark) == 0
         assert "committed" in capsys.readouterr().out
-        assert held() == before, name
+        assert _held(spark) - before == set(), name
+
+
+def test_corpus_operators_leave_no_cache_held(spark):
+    """One action on each of these corpus operators leaves no new RDD
+    persisted: an operator that caches a frame for a single action has
+    no point at which to release it."""
+    from docling_spark.operators.dedup import (dup_ngram_fraction,
+                                               exploded_shingles,
+                                               ngram_novelty,
+                                               winnow_overlap_pairs)
+    from docling_spark.operators.retrieval import bm25_topk
+    from docling_spark.operators.sketch import cms_heavy_hitters
+    from docling_spark.operators.textstats import (tokens_col,
+                                                   winnow_fingerprints)
+
+    docs = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
+    queries = spark.createDataFrame([(1, "data report")],
+                                    "query_id long, qtext string")
+    runs = {
+        "winnow_overlap_pairs": lambda: winnow_overlap_pairs(
+            winnow_fingerprints(docs)),
+        "ngram_novelty": lambda: ngram_novelty(exploded_shingles(docs)),
+        "dup_ngram_fraction": lambda: dup_ngram_fraction(
+            exploded_shingles(docs)),
+        "bm25_topk": lambda: bm25_topk(docs, queries),
+        "cms_heavy_hitters": lambda: cms_heavy_hitters(
+            docs.select(F.explode(tokens_col()).alias("token")),
+            value_col="token"),
+    }
+    spark.catalog.clearCache()
+    before = _held(spark)
+    for name, run in runs.items():
+        run().count()
+        assert _held(spark) - before == set(), name

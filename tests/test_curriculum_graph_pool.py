@@ -13,12 +13,19 @@ def test_dup_ngram_fraction_clone_and_unique(spark):
          (2, "alpha beta gamma delta"),        # exact clone of 1
          (3, "wholly original text here")],
         "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           dup_ngram_fraction(exploded_shingles(docs, n=3)).collect()}
+    nulls = spark.createDataFrame([(None, "alpha beta gamma"), (3, None)],
+                                  "doc_id long, shingle string")
+    sh = exploded_shingles(docs, n=3).unionByName(nulls)
+    out = {r.doc_id: r for r in dup_ngram_fraction(sh).collect()}
     assert out[1].dup_frac_e4 == 10000
     assert out[2].dup_frac_e4 == 10000
     assert out[3].dup_frac_e4 == 0 and out[3].n_dup == 0
-    assert out[3].n_grams == 2  # 4 tokens -> two 3-gram shingles
+    # 4 tokens -> two 3-gram shingles, plus the NULL shingle, which
+    # is never common
+    assert out[3].n_grams == 3
+    # the NULL doc_id group reads no common gram, though its one gram
+    # occurs in three docs
+    assert tuple(out[None]) == (None, 1, 0, 0)
 
 
 def test_hits_star_graph(spark):
