@@ -23,7 +23,6 @@ from docling_spark.operators.dedup import (
 from docling_spark.operators.extract import extract_spans
 from docling_spark.operators.similarity import knn_bruteforce, knn_lsh
 from docling_spark.operators.textstats import (
-    norm_text,
     tokens_col,
     with_fingerprint,
     with_language_id,
@@ -38,7 +37,7 @@ from docling_spark.sources.corpus import corpus_from_documents
 NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
 # word-3-gram shingles over the normalized text (matches
-# docling_spark.operators.dedup.shingles_col with n=3)
+# docling_spark.operators.dedup.exploded_shingles with n=3)
 SHINGLE_CTE = """
 norm AS (SELECT doc_id, {norm} AS nt FROM corpus),
 toks AS (SELECT doc_id, nt, string_split(nt, ' ') AS t FROM norm),
@@ -559,8 +558,7 @@ def q_near_dup_eval(spark, sf_dir):
     10000 (every planted clone found); precision measures band noise."""
     from docling_spark.operators.dedup import pair_eval, simhash_pairs
     corpus = _clone_corpus_near(_docs(spark, sf_dir))
-    pred = (simhash_pairs(corpus, n=3, bits=32, bands=4, max_hamming=3)
-            .select("doc_a", "doc_b"))
+    pred = simhash_pairs(corpus).select("doc_a", "doc_b")
     truth = (_docs(spark, sf_dir).filter(F.col("doc_id") < 30)
              .select(F.col("doc_id").alias("doc_a"),
                      (F.col("doc_id") + 1000000).alias("doc_b")))
@@ -988,9 +986,9 @@ def q_quality_classifier(spark, sf_dir):
     RedPajama gate): Naive-Bayes token-LLR model trained curated-vs-
     raw (doc_id%10==0 as the curated slice, %10==5 as the raw slice),
     every doc scored by integer-quantized mean LLR and gated at 0 —
-    the NB decision boundary. Training = two vocabulary aggregations
-    (broadcastable, `broadcast_model` knob); scoring = one explode +
-    broadcast join + one groupBy (operators/classify.py)."""
+    the NB decision boundary. Training = two vocabulary aggregations;
+    scoring = one explode + broadcast join + one groupBy
+    (operators/classify.py)."""
     from docling_spark.operators.classify import quality_classify
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
     pos = docs.filter(F.col("doc_id") % 10 == 0)
@@ -2017,7 +2015,7 @@ def q_dedup_simhash_pairs(spark, sf_dir):
     as MinHash LSH."""
     from docling_spark.operators.dedup import simhash_pairs
     corpus = _clone_corpus_near(_docs(spark, sf_dir))
-    return simhash_pairs(corpus, n=3, bits=32, bands=4, max_hamming=3)
+    return simhash_pairs(corpus)
 
 
 def q_dedup_components(spark, sf_dir):
@@ -2027,7 +2025,7 @@ def q_dedup_components(spark, sf_dir):
     the oracle computes the same components with a recursive CTE."""
     from docling_spark.operators.dedup import dedup_components, simhash_pairs
     corpus = _clone_corpus_near(_docs(spark, sf_dir))
-    pairs = simhash_pairs(corpus, n=3, bits=32, bands=4, max_hamming=3)
+    pairs = simhash_pairs(corpus)
     return dedup_components(pairs)
 
 
@@ -2042,7 +2040,7 @@ def q_dedup_canonical(spark, sf_dir):
                                                simhash_pairs)
     from docling_spark.operators.textstats import tokens_col
     corpus = _clone_corpus_near(_docs(spark, sf_dir))
-    pairs = simhash_pairs(corpus, n=3, bits=32, bands=4, max_hamming=3)
+    pairs = simhash_pairs(corpus)
     comp = dedup_components(pairs)
     scores = corpus.select("doc_id",
                            F.size(tokens_col()).alias("n_tokens"))
@@ -2415,15 +2413,13 @@ def q_lm_quality_buckets(spark, sf_dir):
     (Wenzek et al. 2020 §4.4): every doc scored by integer-quantized
     mean NLL under the doc_id%10==0 reference model, then tertiled
     WITHIN its language by exact rank (doc_id tiebreak). The oracle
-    replays model training, scoring, and the rank bucketing; the
-    sketch-threshold scale path (no per-language total order) is
-    parity-tested in tests/test_lm_buckets.py
+    replays model training, scoring, and the rank bucketing
     (operators/lmscore.py:lm_buckets)."""
     from docling_spark.operators.lmscore import lm_buckets
     docs = _read(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text")
     ref = docs.filter(F.col("doc_id") % 10 == 0)
-    return lm_buckets(docs, ref, thresholds="exact")
+    return lm_buckets(docs, ref)
 
 
 def q_dsir_weights(spark, sf_dir):

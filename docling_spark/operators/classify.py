@@ -23,11 +23,11 @@ so this is the same model family fastText fits by SGD — swap in real
 fastText weights by replacing the model table; the scoring plan is
 unchanged.
 
-Scale shape: training aggregates each slice to a vocabulary table
-(bounded by vocabulary, not corpus — broadcastable; ``broadcast_model``
-knob for web-scale vocabularies per Heaps' law); scoring is one token
-explode + one join + ONE groupBy(doc_id) with algebraic aggregates
-(map-side partial). No windows, no sorts, no driver collect.
+Plan shape: training aggregates each slice to a vocabulary table
+(bounded by vocabulary, not corpus); scoring is one token explode +
+one broadcast join against that table + ONE groupBy(doc_id) with
+algebraic aggregates (map-side partial). No windows, no sorts, no
+driver collect.
 """
 
 from __future__ import annotations
@@ -81,8 +81,7 @@ def nb_model_table(pos: DataFrame, neg: DataFrame, *,
 
 def quality_classify(docs: DataFrame, pos: DataFrame, neg: DataFrame,
                      *, alpha: float = NB_ALPHA,
-                     min_mean_llr_e6: int | None = None,
-                     broadcast_model: bool = True) -> DataFrame:
+                     min_mean_llr_e6: int | None = None) -> DataFrame:
     """(doc_id, text) → (doc_id, n_tokens, mean_llr_e6[, keep]) —
     mean token log-likelihood ratio (×1e6, floored) of each document
     under the NB model trained on the ``pos`` (curated) vs ``neg``
@@ -91,16 +90,12 @@ def quality_classify(docs: DataFrame, pos: DataFrame, neg: DataFrame,
     column (class priors cancel into the threshold, so the gate is
     exactly the NB decision rule with an adjustable bias).
 
-    ``broadcast_model`` pins the model join broadcast — right when the
-    training slices are curated corpora (vocabulary in the millions).
-    Disable it when a slice is itself web-scale: the join falls back
-    to a hash shuffle on token, still one pass."""
+    The model table is broadcast into the token join, so the document
+    token stream never shuffles before the per-doc aggregate."""
     model, unseen = nb_model_table(pos, neg, alpha=alpha)
-    if broadcast_model:
-        model = F.broadcast(model)
     toks = docs.select("doc_id", F.explode(tokens_col()).alias("token"))
     scored = (toks
-              .join(model, "token", "left")
+              .join(F.broadcast(model), "token", "left")
               .crossJoin(F.broadcast(
                   unseen.select(F.col("llr_e6").alias("_u"))))
               .select("doc_id",

@@ -35,14 +35,12 @@ PMI_SCALE = 1_000_000
 
 
 def cooccurrence_pmi(docs: DataFrame, *, window: int = 4,
-                     min_count: int = 2,
-                     broadcast_unigrams: bool = True) -> DataFrame:
+                     min_count: int = 2) -> DataFrame:
     """(doc_id, text) → (x, y, c_xy, c_x, c_y, pmi_e6) for every
     unordered token pair co-occurring within ``window`` tokens at
-    least ``min_count`` times. ``broadcast_unigrams`` pins the two
-    vocabulary joins broadcast (right up to ~1e8-token vocabularies);
-    disable for Heaps-law web vocabularies to fall back to hash joins
-    on the pair-count table, still one pass."""
+    least ``min_count`` times. The unigram table is broadcast into
+    both vocabulary joins, so the pair-count table never shuffles
+    after its own aggregate."""
     staged = docs.select(F.split(norm_text(), " ").alias("_t"))
     pairs = F.flatten(F.transform(
         F.col("_t"),
@@ -67,8 +65,7 @@ def cooccurrence_pmi(docs: DataFrame, *, window: int = 4,
                        (F.size("_t") - 1) * F.size("_t") / 2)
               .otherwise(F.lit(window * (window + 1) / 2))
               ).cast("long").alias("_p")))
-    if broadcast_unigrams:
-        uni = F.broadcast(uni)
+    uni = F.broadcast(uni)
     ux = uni.select(F.col("token").alias("x"), F.col("c").alias("c_x"))
     uy = uni.select(F.col("token").alias("y"), F.col("c").alias("c_y"))
     out = (pair_counts.join(ux, "x").join(uy, "y")

@@ -41,18 +41,17 @@ from .textstats import (EN_STOPWORDS, LANG_ORDER, _pred_from_scores,
 
 
 def curate(docs: DataFrame, *, lang: str = "en",
-           min_tokens: int = 10, max_tokens: int = 100_000,
-           bits: int = 32, bands: int = 4,
-           max_hamming: int = 3) -> DataFrame:
+           min_tokens: int = 10, max_tokens: int = 100_000) -> DataFrame:
     """(doc_id, text) → curated (doc_id, text, n_tokens, fingerprint):
     documents that pass the token-count quality gate, are identified as
     ``lang``, and survive exact + SimHash near-duplicate removal (the
     lowest doc_id of each duplicate group/pair is kept), with their
     text as given."""
     # staged projections: tokenize/normalize ONCE, score languages off
-    # the materialized array, argmax off the materialized scores (the
-    # inline lang_pred_col() spelling re-tokenizes per score reference
-    # in the interpreted-HOF path — measured 4× on this pipeline)
+    # the materialized array, argmax off the materialized scores (an
+    # inline per-language tokens_col() spelling re-tokenizes per score
+    # reference in the interpreted-HOF path — measured 4× on this
+    # pipeline)
     scored = _staged(docs).select(
         "doc_id", "text",
         F.size("_toks").alias("n_tokens"),
@@ -74,8 +73,7 @@ def curate(docs: DataFrame, *, lang: str = "en",
             .filter(F.col("rn") == 1)
             .drop("rn", "lang_pred"))
 
-    pairs = simhash_pairs(reps.select("doc_id", "text"),
-                          bits=bits, bands=bands, max_hamming=max_hamming)
+    pairs = simhash_pairs(reps.select("doc_id", "text"))
     dropped = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     return (reps.join(dropped, "doc_id", "left_anti")
             .select("doc_id", "text", "n_tokens", "fingerprint"))
@@ -84,8 +82,7 @@ def curate(docs: DataFrame, *, lang: str = "en",
 def source_reputation(docs: DataFrame, *,
                       max_dup_ratio_e4: int = 2500,
                       min_avg_tokens_e4: int = 100_000,
-                      min_stop_ratio_e4: int = 500,
-                      exact_distinct: bool = True) -> DataFrame:
+                      min_stop_ratio_e4: int = 500) -> DataFrame:
     """Per-source (domain) reputation — the CCNet/RefinedWeb-style
     domain-level curation pass: aggregate quality signals per
     ``source`` and flag sources worth keeping, so a whole bad domain
@@ -104,22 +101,18 @@ def source_reputation(docs: DataFrame, *,
 
     Scale shape: one projection over the scan (normalize + tokenize,
     staged once), then ONE groupBy(source) whose aggregates are all
-    algebraic (count/sum partial-agg map-side). The exact duplicate
-    count is count(DISTINCT md5) — a two-phase expand keyed on
-    (source, fingerprint); at 100 TB flip ``exact_distinct=False`` for
-    one-pass HyperLogLog (`approx_count_distinct`), the standard
-    trade on domains with billions of pages."""
+    algebraic (count/sum partial-agg map-side). The duplicate count is
+    the exact count(DISTINCT md5) — a two-phase expand keyed on
+    (source, fingerprint)."""
     staged = _staged(docs).select(
         "source",
         F.size("_toks").alias("_nt_toks"),
         F.size(F.filter(F.col("_toks"),
                         lambda t: t.isin(EN_STOPWORDS))).alias("_stop"),
         F.md5("_nt").alias("_fp"))
-    n_uniq = (F.count_distinct("_fp") if exact_distinct
-              else F.approx_count_distinct("_fp"))
     agg = staged.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        n_uniq.alias("_n_uniq"),
+        F.count_distinct("_fp").alias("_n_uniq"),
         F.sum("_nt_toks").alias("_sum_toks"),
         F.sum("_stop").alias("_sum_stop"))
     dup_ratio = F.floor(F.lit(10000.0) * (F.col("n_docs") - F.col("_n_uniq"))

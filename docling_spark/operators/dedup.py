@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import norm_text, tokens_col
+from .textstats import norm_text
 
 
 def dedup_exact(docs: DataFrame) -> DataFrame:
@@ -37,21 +37,6 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
                         (F.col("doc_id") != F.col("canonical_id"))
                         .cast("int"))
             .select("doc_id", "fingerprint", "canonical_id", "is_dup"))
-
-
-def shingles_col(n: int = 3) -> Column:
-    """Word n-gram shingles of the normalized text (pure-Catalyst
-    spelling — kept as the SQL-shaped reference of the semantics; the
-    hot path uses the Arrow shingler below). Documents shorter than n
-    tokens contribute their whole normalized text as the single
-    shingle (so tiny docs still dedup)."""
-    toks = tokens_col()
-    k = F.size(toks) - (n - 1)
-    return F.when(
-        k >= 1,
-        F.transform(F.sequence(F.lit(1), k),
-                    lambda i: F.array_join(F.slice(toks, i, n), " ")),
-    ).otherwise(F.array(norm_text()))
 
 
 # Java \s (non-unicode): the exact class regexp_replace(\s+) matches,
@@ -86,12 +71,15 @@ def exploded_shingles(docs: DataFrame, *, n: int = 3) -> DataFrame:
 
     This is THE scale-bearing representation: every downstream MinHash /
     Jaccard step is a codegen-friendly hash aggregate or equi-join over
-    it. Shingle construction runs as an Arrow-batched pandas UDF: the
-    Catalyst higher-order spelling (transform+slice+array_join) builds
+    it. Shingle construction runs as an Arrow-batched pandas UDF (a
+    Catalyst higher-order spelling, transform+slice+array_join, builds
     an interpreted expression tree per element and measured 8× slower
-    AND GC-bound (it stopped scaling past ~8 local cores); the Python
-    loop is byte-identical in output (same Java-\\s normalization) and
-    the DuckDB oracle replays the Catalyst/SQL spelling to prove it."""
+    AND GC-bound). The reference spelling of the semantics is the
+    DuckDB ``SHINGLE_CTE`` in ``__spark_entry__``: distinct word
+    n-grams of the normalized text, and a document shorter than n
+    tokens contributes its whole normalized text as its one shingle.
+    The Python loop normalizes with the same Java-\\s class, so the
+    oracles replay it byte for byte."""
     # explode_OUTER + null-guard, not plain explode: the inner
     # generate's inferred pruning predicate (size>0 AND isnotnull)
     # embeds the UDF expression and gets pushed below the generate —
@@ -414,7 +402,6 @@ def bloom_membership(seen: DataFrame, probes: DataFrame, *,
 
 def minhash_dedup(docs: DataFrame, *, n: int = 3, num_hashes: int = 16,
                   bands: int = 4, threshold: float = 0.7,
-                  num_partitions: int = 0,
                   hash_family: str = "cw") -> DataFrame:
     """Full near-dup pipeline, one-shuffle construction: per-shingle
     48-bit md5 hashes → ONE groupBy(doc_id) producing both the k
@@ -451,8 +438,6 @@ def minhash_dedup(docs: DataFrame, *, n: int = 3, num_hashes: int = 16,
     """
     from pyspark import StorageLevel
 
-    if num_partitions:
-        docs = docs.repartition(num_partitions, "doc_id")
     sh = exploded_shingles(docs, n=n)
     digest = F.md5("shingle")
     mixed = sh.select(
@@ -611,8 +596,8 @@ def embedding_dedup(embeddings: DataFrame, *, threshold: float = 0.98,
                      .cast("long").alias("score_e4")))
 
 
-def simhash_bits(docs: DataFrame, *, n: int = 3, bits: int = 16,
-                 num_partitions: int = 0) -> DataFrame:
+def simhash_bits(docs: DataFrame, *, n: int = 3,
+                 bits: int = 16) -> DataFrame:
     """``bits``-wide SimHash (16 or 32) over word n-gram shingles with
     portable md5 bits: bit i of the shingle's md5 votes +1/−1; the sign
     of the vote-sum forms the document hash. Bits are drawn from md5's
@@ -625,8 +610,6 @@ def simhash_bits(docs: DataFrame, *, n: int = 3, bits: int = 16,
     ANSI long arithmetic doesn't give for bit 63 — at that width use
     two 32-bit signature columns instead."""
     assert bits in (16, 32)
-    if num_partitions:
-        docs = docs.repartition(num_partitions, "doc_id")
     sh = exploded_shingles(docs, n=n)
     chunks = [
         F.conv(F.substring(F.md5("shingle"), 1 + 4 * c, 4), 16, 10)
@@ -649,32 +632,34 @@ def simhash_bits(docs: DataFrame, *, n: int = 3, bits: int = 16,
     return agg.select("doc_id", hash_expr.cast("long").alias("simhash"))
 
 
-def simhash16(docs: DataFrame, *, n: int = 3,
-              num_partitions: int = 0) -> DataFrame:
+def simhash16(docs: DataFrame, *, n: int = 3) -> DataFrame:
     """16-bit SimHash (kept as the dedup_simhash oracle surface)."""
-    return simhash_bits(docs, n=n, bits=16, num_partitions=num_partitions)
+    return simhash_bits(docs, n=n, bits=16)
 
 
-def simhash_pairs(docs: DataFrame, *, n: int = 3, bits: int = 32,
-                  bands: int = 4, max_hamming: int = 3,
-                  num_partitions: int = 0) -> DataFrame:
-    """Hamming-ball near-dup pairs from SimHash signatures: band the
-    hash into ``bands`` equal slices — by pigeonhole, any pair with
-    Hamming distance ≤ ``bands - 1`` agrees on at least one band — and
-    generate candidates ONLY from the band-value equijoin (never an
-    all-pairs product), then verify with ``bit_count(xor)``. The same
-    banded-equijoin shape as MinHash LSH; everything is JVM-side
-    Catalyst (one agg + one self-equijoin).
+# simhash_pairs cuts 32-bit signatures into 4 bands of 8 bits; by
+# pigeonhole every pair within Hamming distance SIMHASH_BANDS - 1
+# agrees on at least one band, so that is the bound it verifies
+SIMHASH_BITS = 32
+SIMHASH_BANDS = 4
+SIMHASH_MAX_HAMMING = SIMHASH_BANDS - 1
 
-    Scale note: bucket size is corpus/2^(bits/bands) per band value, so
-    at 10^12 docs use the widest signature the engine offers (two
-    32-bit columns) and more bands; the plan shape is unchanged.
+
+def simhash_pairs(docs: DataFrame) -> DataFrame:
+    """Hamming-ball near-dup pairs (doc_a < doc_b, hamming) from
+    32-bit SimHash signatures over word 3-gram shingles: band the hash
+    into 4 equal slices, generate candidates ONLY from the band-value
+    equijoin (never an all-pairs product), then keep the pairs whose
+    ``bit_count(xor)`` is at most 3 — every such pair shares a band, so
+    none is missed. The same banded-equijoin shape as MinHash LSH;
+    everything after the shingler is JVM-side Catalyst (one agg + one
+    self-equijoin).
 
     Nothing is cached: both join sides read one signature exchange,
     which Spark reuses (the executed plan holds one ArrowEvalPython and
     a ReusedExchange, with AQE on or off), so the shingle UDF runs once."""
-    sig = simhash_bits(docs, n=n, bits=bits, num_partitions=num_partitions)
-    width = bits // bands
+    sig = simhash_bits(docs, bits=SIMHASH_BITS)
+    width = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << width) - 1
     banded = sig.select(
         "doc_id", "simhash",
@@ -683,7 +668,7 @@ def simhash_pairs(docs: DataFrame, *, n: int = 3, bits: int = 32,
                 F.lit(b).alias("band"),
                 F.shiftright("simhash", b * width).bitwiseAND(mask)
                 .alias("val"))
-            for b in range(bands)])).alias("bv")).select(
+            for b in range(SIMHASH_BANDS)])).alias("bv")).select(
         "doc_id", "simhash",
         F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
     a, c = banded.alias("a"), banded.alias("c")
@@ -698,7 +683,7 @@ def simhash_pairs(docs: DataFrame, *, n: int = 3, bits: int = 32,
             .distinct())
     ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
     return (cand.withColumn("hamming", ham.cast("int"))
-            .filter(F.col("hamming") <= max_hamming)
+            .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
             .select("doc_a", "doc_b", "hamming"))
 
 

@@ -20,15 +20,15 @@ Plug a real KenLM in by swapping the vocabulary table for an
 Arrow-batched UDF over the model file — the gate and plan shape stay
 identical.
 
-Scale shape: the reference slice aggregates to a vocabulary table
-(bounded by vocabulary, not corpus — broadcast); scoring is one token
-explode + broadcast join + ONE groupBy(doc_id) with algebraic
-aggregates (map-side partial). No windows, no sorts.
+Plan shape: the reference slice aggregates to a vocabulary table
+(bounded by vocabulary, not corpus); scoring is one token explode +
+one broadcast join against that table + ONE groupBy(doc_id) with
+algebraic aggregates (map-side partial). No windows, no sorts.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .textstats import tokens_col
@@ -57,37 +57,36 @@ def unigram_lm_table(ref: DataFrame, *, alpha: float = LM_ALPHA):
     return vocab, unseen
 
 
+def _mean_nll(docs: DataFrame, ref: DataFrame, keys: tuple,
+              alpha: float) -> DataFrame:
+    """``keys`` + (n_tokens, mean_nll_e6) of each document under the
+    unigram model trained on ``ref``: one token explode, one broadcast
+    vocab join, one 1-row unseen-token cross join, ONE groupBy(keys)
+    with algebraic aggregates, and the floor of the mean."""
+    vocab, unseen = unigram_lm_table(ref, alpha=alpha)
+    toks = docs.select(*keys, F.explode(tokens_col()).alias("token"))
+    scored = (toks
+              .join(F.broadcast(vocab), "token", "left")
+              .crossJoin(F.broadcast(
+                  unseen.select(F.col("lp_e6").alias("_u"))))
+              .select(*keys, F.coalesce("lp_e6", "_u").alias("lp")))
+    agg = (scored.groupBy(*keys)
+           .agg(F.count("*").alias("_n"), F.sum("lp").alias("_slp")))
+    return agg.select(
+        *keys, F.col("_n").cast("int").alias("n_tokens"),
+        F.floor(-1.0 * F.col("_slp") / F.col("_n"))
+        .cast("long").alias("mean_nll_e6"))
+
+
 def lm_score(docs: DataFrame, ref: DataFrame, *,
              alpha: float = LM_ALPHA,
-             max_mean_nll_e6: int = None,
-             broadcast_vocab: bool = True) -> DataFrame:
+             max_mean_nll_e6: int = None) -> DataFrame:
     """(doc_id, text) → (doc_id, n_tokens, mean_nll_e6[, keep]) —
     mean negative log-likelihood (×1e6, floored) of each document
     under the unigram model trained on ``ref``. Lower = more like the
     reference corpus. With ``max_mean_nll_e6`` set, adds the CCNet
-    keep/drop gate column.
-
-    ``broadcast_vocab`` pins the vocab join broadcast — right for the
-    CCNet setup (reference = curated corpus, vocabulary in the
-    millions). Disable it when the reference slice is itself web-scale
-    (typo-heavy vocabularies grow with corpus size per Heaps' law and
-    can exceed executor memory): the join falls back to a hash
-    shuffle on token, still one pass."""
-    vocab, unseen = unigram_lm_table(ref, alpha=alpha)
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
-    toks = docs.select("doc_id", F.explode(tokens_col()).alias("token"))
-    scored = (toks
-              .join(vocab, "token", "left")
-              .crossJoin(F.broadcast(
-                  unseen.select(F.col("lp_e6").alias("_u"))))
-              .select("doc_id", F.coalesce("lp_e6", "_u").alias("lp")))
-    agg = (scored.groupBy("doc_id")
-           .agg(F.count("*").alias("_n"), F.sum("lp").alias("_slp")))
-    out = agg.select(
-        "doc_id", F.col("_n").cast("int").alias("n_tokens"),
-        F.floor(-1.0 * F.col("_slp") / F.col("_n"))
-        .cast("long").alias("mean_nll_e6"))
+    keep/drop gate column."""
+    out = _mean_nll(docs, ref, ("doc_id",), alpha)
     if max_mean_nll_e6 is not None:
         out = out.withColumn(
             "keep", (F.col("mean_nll_e6") <= max_mean_nll_e6)
@@ -140,8 +139,7 @@ def bigram_lm_tables(ref: DataFrame, *, alpha: float = LM_ALPHA):
 
 def lm_score_bigram(docs: DataFrame, ref: DataFrame, *,
                     alpha: float = LM_ALPHA,
-                    max_mean_nll_e6: int = None,
-                    broadcast_vocab: bool = True) -> DataFrame:
+                    max_mean_nll_e6: int = None) -> DataFrame:
     """Bigram version of :func:`lm_score` — scores each document's
     TRANSITIONS (positions 2..n) under p(cur|prev) with add-α
     smoothing, two-level backoff (observed bigram → observed prefix →
@@ -149,12 +147,11 @@ def lm_score_bigram(docs: DataFrame, ref: DataFrame, *,
     sum stays order-independent. Returns (doc_id, n_trans,
     mean_nll_e6[, keep]).
 
-    The bigram table is vocabulary², so the ``broadcast_vocab`` knob
-    matters sooner than in the unigram model — disable for large
-    reference slices and let the joins shuffle on key."""
+    Both model tables are broadcast into the transition joins, so the
+    document transition stream never shuffles before the per-doc
+    aggregate."""
     bt, pt, fl = bigram_lm_tables(ref, alpha=alpha)
-    if broadcast_vocab:
-        bt, pt = F.broadcast(bt), F.broadcast(pt)
+    bt, pt = F.broadcast(bt), F.broadcast(pt)
     t = tokens_col()
     n = F.size(t)
     bg = F.zip_with(F.slice(t, 1, n - 1), F.slice(t, 2, n - 1),
@@ -185,9 +182,7 @@ def lm_score_bigram(docs: DataFrame, ref: DataFrame, *,
 
 def lm_buckets(docs: DataFrame, ref: DataFrame, *,
                n_buckets: int = 3,
-               alpha: float = LM_ALPHA,
-               broadcast_vocab: bool = True,
-               thresholds: str = "exact") -> DataFrame:
+               alpha: float = LM_ALPHA) -> DataFrame:
     """CCNet's head/middle/tail split (Wenzek et al. 2020 §4.4: sort
     each language by LM perplexity, cut into equal parts; 'head' is
     the most reference-like slice, used as the high-quality corpus).
@@ -195,54 +190,17 @@ def lm_buckets(docs: DataFrame, ref: DataFrame, *,
     ``docs``: (doc_id, lang, text) → (doc_id, lang, n_tokens,
     mean_nll_e6, bucket), bucket 0..n_buckets-1 (0 = head).
 
-    ``thresholds="exact"`` is the paper's literal spelling — a
-    per-language total order (row_number with doc_id tiebreak). That
-    puts a whole language in one sort partition: correct and
-    oracle-exact, but the wrong shape at 100 TB where one language is
-    tens of TB. ``thresholds="sketch"`` is the scale path: per-language
-    bucket boundaries read off the 1024-bin histogram sketch
-    (operators/sketch.py — bounded shuffle, no total order), broadcast
-    back as a threshold table; documents within one bin width of a
-    boundary may land one bucket off, which the CCNet gate tolerates
-    by design (the buckets are themselves heuristic strata)."""
-    vocab, unseen = unigram_lm_table(ref, alpha=alpha)
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
-    toks = docs.select("doc_id", "lang",
-                       F.explode(tokens_col()).alias("token"))
-    scored = (toks
-              .join(vocab, "token", "left")
-              .crossJoin(F.broadcast(
-                  unseen.select(F.col("lp_e6").alias("_u"))))
-              .select("doc_id", "lang",
-                      F.coalesce("lp_e6", "_u").alias("lp")))
-    agg = (scored.groupBy("doc_id", "lang")
-           .agg(F.count("*").alias("_n"), F.sum("lp").alias("_slp")))
-    out = agg.select(
-        "doc_id", "lang", F.col("_n").cast("int").alias("n_tokens"),
-        F.floor(-1.0 * F.col("_slp") / F.col("_n"))
-        .cast("long").alias("mean_nll_e6"))
-    if thresholds == "exact":
-        from pyspark.sql import Window
-        w = Window.partitionBy("lang").orderBy("mean_nll_e6", "doc_id")
-        rn = F.row_number().over(w)
-        cnt = F.count("*").over(Window.partitionBy("lang"))
-        bucket = F.floor(F.lit(float(n_buckets)) * (rn - 1) / cnt)
-        return out.select("doc_id", "lang", "n_tokens", "mean_nll_e6",
-                          bucket.cast("int").alias("bucket"))
-    if thresholds != "sketch":
-        raise ValueError(f"thresholds must be exact|sketch: {thresholds}")
-    from .sketch import quantiles_sketch
-    ps = [i / float(n_buckets) for i in range(1, n_buckets)]
-    th = quantiles_sketch(out, group_col="lang",
-                          value_col="mean_nll_e6", ps=ps)
-    th = (th.groupBy("lang")
-          .agg(F.array_sort(F.collect_list("est_e2")).alias("_th")))
-    joined = out.join(F.broadcast(th), "lang")
-    bucket = F.size(F.filter(
-        "_th", lambda t: F.col("mean_nll_e6") * 100 > t))
-    return joined.select("doc_id", "lang", "n_tokens", "mean_nll_e6",
-                         bucket.cast("int").alias("bucket"))
+    Documents are scored exactly as in :func:`lm_score`, then ranked
+    inside their language by a total order (row_number over
+    mean_nll_e6 with a doc_id tiebreak, divided by the language's
+    count), so each language is bucketed in one window partition."""
+    out = _mean_nll(docs, ref, ("doc_id", "lang"), alpha)
+    w = Window.partitionBy("lang").orderBy("mean_nll_e6", "doc_id")
+    rn = F.row_number().over(w)
+    cnt = F.count("*").over(Window.partitionBy("lang"))
+    bucket = F.floor(F.lit(float(n_buckets)) * (rn - 1) / cnt)
+    return out.select("doc_id", "lang", "n_tokens", "mean_nll_e6",
+                      bucket.cast("int").alias("bucket"))
 
 
 def ngram_counts(docs: DataFrame, *, n: int = 3,

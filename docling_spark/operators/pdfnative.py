@@ -22,46 +22,50 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 PDF_TEXT_DDL = ("doc_id string, n_pages int, n_cells int, text string")
+SYNTH_SPLIT_AT = 250    # synth_pdf_docs: page 0 holds the first 250 chars
+SYNTH_MAX_WORDS = 40    # synth_pdf_word_docs: words kept per document
 
 
-def synth_pdf_docs(df: DataFrame, split_at: int = 250) -> DataFrame:
+def _synth_pdfs(df: DataFrame, cols: tuple, build) -> DataFrame:
+    """(doc_id, *cols) → (doc_id, pdf:binary): one PDF per row, its
+    bytes ``build(*row[cols])``. The one Arrow stage behind every
+    ``synth_pdf_*_docs``; no shuffle."""
+    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            blobs = [build(*row) for row in zip(*(pdf[c] for c in cols))]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"],
+                                "pdf": pd.Series(blobs, dtype=object)})
+
+    return df.mapInPandas(synth, schema="doc_id string, pdf binary")
+
+
+def synth_pdf_docs(df: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, pdf:binary): deterministic two-page
-    PDF per doc (text split at ``split_at`` chars), real xref +
-    FlateDecode streams. Pure Arrow stage, no shuffle."""
+    PDF per doc (text split at ``SYNTH_SPLIT_AT`` chars), real xref +
+    FlateDecode streams."""
     from docling_spark.sources.pdfsynth import synth_pdf
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = [
-                synth_pdf([t[:split_at], t[split_at:]])
-                for t in pdf["text"].astype(str)
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "pdf": pd.Series(blobs, dtype=object)})
+    def build(text) -> bytes:
+        t = str(text)
+        return synth_pdf([t[:SYNTH_SPLIT_AT], t[SYNTH_SPLIT_AT:]])
 
-    return df.mapInPandas(batches, schema="doc_id string, pdf binary")
+    return _synth_pdfs(df, ("text",), build)
 
 
-def synth_pdf_word_docs(df: DataFrame, max_words: int = 40) -> DataFrame:
+def synth_pdf_word_docs(df: DataFrame) -> DataFrame:
     """(doc_id, words:array<string>) → (doc_id, pdf:binary): two-page
-    PDF, one word per 14pt-spaced line, first ceil(n/2) words on page
-    0 — the same corpus shape corpus_pdf_pages synthesizes as
-    structured payloads, but as genuine PDF bytes."""
-    import math
-
+    PDF, one word per 14pt-spaced line, the first ``SYNTH_MAX_WORDS``
+    words with ceil(n/2) of them on page 0 — the same corpus shape
+    corpus_pdf_pages synthesizes as structured payloads, but as
+    genuine PDF bytes."""
     from docling_spark.sources.pdfsynth import synth_pdf_pages
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for ws in pdf["words"]:
-                ws = list(ws)[:max_words]
-                half = math.ceil(len(ws) / 2.0)
-                blobs.append(synth_pdf_pages([ws[:half], ws[half:]]))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "pdf": pd.Series(blobs, dtype=object)})
+    def build(words) -> bytes:
+        ws = list(words)[:SYNTH_MAX_WORDS]
+        half = (len(ws) + 1) // 2
+        return synth_pdf_pages([ws[:half], ws[half:]])
 
-    return df.mapInPandas(batches, schema="doc_id string, pdf binary")
+    return _synth_pdfs(df, ("words",), build)
 
 
 def pdf_to_page_spans(df: DataFrame) -> DataFrame:
@@ -156,21 +160,15 @@ def synth_pdf_outline_docs(df: DataFrame) -> DataFrame:
     level:int,title:string,page_idx:int>>) → (doc_id, pdf:binary) —
     real two-page PDFs carrying a genuine §12.3.3 outline tree
     (linked /First//Next items, /Parent back-refs, explicit /Dest
-    arrays). Pure Arrow stage, no shuffle."""
+    arrays)."""
     from docling_spark.sources.pdfsynth import synth_pdf_pages
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for pages, ol in zip(pdf["pages"], pdf["outline"]):
-                entries = [(int(e["level"]), str(e["title"]),
-                            int(e["page_idx"])) for e in ol]
-                blobs.append(synth_pdf_pages(
-                    [list(p) for p in pages], outline=entries))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "pdf": pd.Series(blobs, dtype=object)})
+    def build(pages, outline) -> bytes:
+        entries = [(int(e["level"]), str(e["title"]), int(e["page_idx"]))
+                   for e in outline]
+        return synth_pdf_pages([list(p) for p in pages], outline=entries)
 
-    return df.mapInPandas(batches, schema="doc_id string, pdf binary")
+    return _synth_pdfs(df, ("pages", "outline"), build)
 
 
 def pdf_outline(df: DataFrame) -> DataFrame:
@@ -211,21 +209,14 @@ def synth_pdf_link_docs(df: DataFrame) -> DataFrame:
     """(doc_id, pages:array<array<string>>, links:array<struct<
     page_idx:int,url:string>>) → (doc_id, pdf:binary) — real per-page
     /Annots arrays of §12.5.6.5 /Link annotations with /A URI
-    actions. Pure Arrow stage, no shuffle."""
+    actions."""
     from docling_spark.sources.pdfsynth import synth_pdf_pages
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for pages, ls in zip(pdf["pages"], pdf["links"]):
-                entries = [(int(e["page_idx"]), str(e["url"]))
-                           for e in ls]
-                blobs.append(synth_pdf_pages(
-                    [list(p) for p in pages], links=entries))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "pdf": pd.Series(blobs, dtype=object)})
+    def build(pages, links) -> bytes:
+        entries = [(int(e["page_idx"]), str(e["url"])) for e in links]
+        return synth_pdf_pages([list(p) for p in pages], links=entries)
 
-    return df.mapInPandas(batches, schema="doc_id string, pdf binary")
+    return _synth_pdfs(df, ("pages", "links"), build)
 
 
 def pdf_links(df: DataFrame) -> DataFrame:

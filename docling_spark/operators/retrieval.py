@@ -37,16 +37,16 @@ def _norm_tokens(col: Column) -> Column:
 
 def distributed_topk(scored: DataFrame, *, key: str, order: str,
                      tie: str, k: int,
-                     salt_buckets: int = TOPK_SALT_BUCKETS,
                      ascending: bool = False) -> DataFrame:
     """Generic two-phase distributed top-k: rows are first ranked
-    inside (key, salt) buckets — salt = hash(tie) mod s, so each
-    bucket holds ~1/s of the key's rows and the heavy window never
-    concentrates one key's whole score table in one task — then the
-    s·k survivors per key take the tiny final ranking.
+    inside (key, salt) buckets — salt = hash(tie) mod s, with s =
+    ``TOPK_SALT_BUCKETS``, so each bucket holds ~1/s of the key's rows
+    and the heavy window never concentrates one key's whole score
+    table in one task — then the s·k survivors per key take the tiny
+    final ranking.
     ``ascending=True`` ranks smallest-first (bottom-k)."""
     ordc = F.col(order).asc() if ascending else F.col(order).desc()
-    salt = F.pmod(F.xxhash64(F.col(tie)), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64(F.col(tie)), F.lit(TOPK_SALT_BUCKETS))
     partial = (scored.withColumn("_salt", salt)
                .withColumn("_rn", F.row_number().over(
                    Window.partitionBy(key, "_salt")
@@ -60,8 +60,7 @@ def distributed_topk(scored: DataFrame, *, key: str, order: str,
 
 
 def bm25_topk(docs: DataFrame, queries: DataFrame, *, k: int = 10,
-              k1: float = BM25_K1, b: float = BM25_B,
-              salt_buckets: int = TOPK_SALT_BUCKETS) -> DataFrame:
+              k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
     """(doc_id, text) × (query_id, qtext) → top-k (query_id, doc_id,
     rank, score_e4) by BM25.
 
@@ -112,7 +111,7 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, *, k: int = 10,
     scored = (per_term.groupBy("query_id", "doc_id")
               .agg(F.sum("s").alias("score")))
     top = distributed_topk(scored, key="query_id", order="score",
-                           tie="doc_id", k=k, salt_buckets=salt_buckets)
+                           tie="doc_id", k=k)
     return top.select(
         "query_id", "doc_id", F.col("rank").cast("int").alias("rank"),
         F.floor(F.col("score") * 10000).cast("long").alias("score_e4"))

@@ -43,17 +43,13 @@ from .textstats import tokens_col
 
 
 def dedup_substrings(docs: DataFrame, *, k: int = 20,
-                     min_df: int = 2,
-                     broadcast_fps: bool = True) -> DataFrame:
+                     min_df: int = 2) -> DataFrame:
     """(doc_id, text) → (doc_id, text, n_kept, n_removed) with every
     token that sits inside a k-token window shared verbatim by
     ≥ ``min_df`` distinct documents removed; surviving tokens are
     re-joined in original order on single spaces (the tokenizer
     normalizes whitespace, so uncovered docs round-trip exactly).
-
-    ``broadcast_fps`` pins the repeated-fingerprint table broadcast
-    (the 100 TB default — boilerplate cardinality is tiny); disable it
-    if a pathological corpus makes the table huge and let AQE pick.
+    The repeated-fingerprint table is broadcast into the window join.
     """
     staged = docs.select("doc_id", tokens_col().alias("toks"))
     n = F.size("toks")
@@ -71,10 +67,8 @@ def dedup_substrings(docs: DataFrame, *, k: int = 20,
            .agg(F.count_distinct("doc_id").alias("df"))
            .filter(F.col("df") >= min_df)
            .select("fp"))
-    if broadcast_fps:
-        bad = F.broadcast(bad)
 
-    covered = (wins.join(bad, "fp")
+    covered = (wins.join(F.broadcast(bad), "fp")
                .select("doc_id",
                        F.explode(F.sequence(F.col("s"),
                                             F.col("s") + (k - 1)))

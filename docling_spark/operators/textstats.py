@@ -15,8 +15,6 @@ heuristic), document fingerprinting (exact md5 + MOSS winnowing).
 
 from __future__ import annotations
 
-from typing import Optional
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -118,9 +116,7 @@ def with_quality(docs: DataFrame) -> DataFrame:
     )
 
 
-def lang_score(lang: str, toks: Optional[Column] = None) -> Column:
-    if toks is None:
-        toks = tokens_col()
+def lang_score(lang: str, toks: Column) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(LANG_MARKERS[lang])))
 
 
@@ -135,15 +131,6 @@ def _pred_from_scores(s: dict) -> Column:
         .when((s["de"] > 0) & (s["de"] >= s["fr"]), F.lit("de"))
         .when(s["fr"] > 0, F.lit("fr"))
         .otherwise(F.lit("und")))
-
-
-def lang_pred_col() -> Column:
-    """The language-ID decision as one standalone column. NOTE: embeds
-    the tokenizer once per language score — callers that can stage
-    columns should prefer the with_language_id shape (scores off a
-    materialized ``_toks``, argmax off materialized scores)."""
-    return _pred_from_scores(
-        {lang: lang_score(lang) for lang in LANG_ORDER})
 
 
 def with_language_id(docs: DataFrame) -> DataFrame:
@@ -196,8 +183,7 @@ def script_mix(docs: DataFrame) -> DataFrame:
         mixed.alias("latin_cyrillic_mix"))
 
 
-def idf_rarity(docs: DataFrame, *,
-               broadcast_idf: bool = True) -> DataFrame:
+def idf_rarity(docs: DataFrame) -> DataFrame:
     """Mean-IDF rarity score per doc: rare-vocabulary documents score
     high, listicle/boilerplate documents of common words score low —
     the corpus-relative complement of the absolute LM-quality gates.
@@ -206,10 +192,8 @@ def idf_rarity(docs: DataFrame, *,
     quantized to floor(·1e6) BIGINT before the per-doc SUM, so the
     result is bit-identical regardless of aggregation order (a raw
     double sum would drift between engines). Shapes: df table = one
-    shuffle on token; the occurrence→idf join broadcasts the idf table
-    when the vocabulary is bounded (broadcast_idf=True — a 10M-term
-    vocab is ~200 MB; set False to let AQE shuffle-join a larger one,
-    where skew on stopword keys is AQE-split)."""
+    shuffle on token; the idf table is broadcast into the
+    occurrence→idf join, which so adds no shuffle of the occurrences."""
     toks = docs.select("doc_id", F.explode(tokens_col()).alias("token"))
     df_tbl = (toks.distinct()
               .groupBy("token").agg(F.count("*").alias("df")))
@@ -218,9 +202,7 @@ def idf_rarity(docs: DataFrame, *,
            .select("token",
                    F.floor(F.log(F.col("n_docs") / F.col("df")) * 1e6)
                     .cast("long").alias("idf_e6")))
-    if broadcast_idf:
-        idf = F.broadcast(idf)
-    per_doc = (toks.join(idf, "token")
+    per_doc = (toks.join(F.broadcast(idf), "token")
                .groupBy("doc_id")
                .agg(F.count("*").alias("n_tokens"),
                     F.sum("idf_e6").alias("idf_sum_e6")))

@@ -71,28 +71,23 @@ def embed_hash(docs: DataFrame, *, dim: int = EMBED_DIM) -> DataFrame:
         _embed_udf(dim)(nt).alias("embedding"))
 
 
-def tfidf_hash_vectors(docs: DataFrame, *, dim: int = EMBED_DIM,
-                       broadcast_idf: bool = True) -> DataFrame:
+def tfidf_hash_vectors(docs: DataFrame, *,
+                       dim: int = EMBED_DIM) -> DataFrame:
     """Hashed tf-idf document vectors (sklearn HashingVectorizer +
     TfidfTransformer, distributed): (doc_id, text) → sparse
     (doc_id, dim, w_e6) rows where w = Σ_{tok→dim} tf·sign·idf,
     idf = ln((1+N)/(1+df)) + 1 (the smooth sklearn form).
 
     Unlike ``embed_hash`` (pure counts, doc-local) tf-idf needs the
-    corpus df table, so this is the three-shuffle spelling:
-    tf groupBy(doc, token); df groupBy(token) OVER THE TF TABLE
-    (already token-partitioned after its own agg — co-partitioned
-    with the idf join that follows, so the posting stream shuffles
-    once, not twice); final groupBy(doc, dim). The idf is quantized
-    to an integer (floor(idf·1e6)) in the table, so bucket sums are
-    exact-integer and engine/partitioning-independent. ``dim`` and
-    sign come from the same md5 prefixes as every other replayable
-    hash here. Sparse output: zero buckets are omitted (a dense grid
-    at 100 TB would be rows × dim).
-
-    ``broadcast_idf`` pins the vocabulary join broadcast; disable for
-    Heaps-law web vocabularies (falls back to the co-partitioned hash
-    join)."""
+    corpus df table, so this is the three-aggregate spelling:
+    tf groupBy(doc, token); df groupBy(token) over the tf table; final
+    groupBy(doc, dim). The idf table is broadcast into the tf join, so
+    that join moves no tf rows. The idf is quantized to an integer
+    (floor(idf·1e6)) in the table, so bucket sums are exact-integer
+    and engine/partitioning-independent. ``dim`` and sign come from
+    the same md5 prefixes as every other replayable hash here. Sparse
+    output: zero buckets are omitted (a dense grid at 100 TB would be
+    rows × dim)."""
     from .textstats import tokens_col
 
     toks = (docs.select("doc_id",
@@ -107,13 +102,11 @@ def tfidf_hash_vectors(docs: DataFrame, *, dim: int = EMBED_DIM,
                    F.floor((F.log((1 + F.col("_n"))
                                   / (1 + F.col("df"))) + 1.0)
                            * 1_000_000).cast("long").alias("idf_e6")))
-    if broadcast_idf:
-        idf = F.broadcast(idf)
     bucket = (F.conv(F.substring(F.md5("token"), 1, 8), 16, 10)
               .cast("long") % dim).cast("int")
     sgn = F.when(F.conv(F.substring(F.md5("token"), 9, 1), 16, 10)
                  .cast("long") >= 8, F.lit(1)).otherwise(F.lit(-1))
-    return (tf.join(idf, "token")
+    return (tf.join(F.broadcast(idf), "token")
             .select("doc_id", bucket.alias("dim"),
                     (F.col("tf") * sgn * F.col("idf_e6")).alias("_w"))
             .groupBy("doc_id", "dim")

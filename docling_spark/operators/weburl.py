@@ -10,10 +10,8 @@ datamodel/document.py:274-427 resolves streams) — this module is the
 
 Canonicalization is pure Catalyst string expressions — JVM-side,
 whole-stage-codegen, zero Python, zero shuffle. Dedup is ONE hash
-aggregation on the canonical string (the same single-shuffle shape as
-dedup_exact). At 100 TB, pre-aggregate on xxhash64(canon) to shrink
-shuffle bytes and carry the string only for the keeper row
-(``hash_shuffle=True``).
+aggregation keyed on the canonical string (the same single-shuffle
+shape as dedup_exact).
 
 Rules applied (the common subset of RFC 3986 §6 normalization and
 crawler practice):
@@ -75,27 +73,12 @@ def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
 
 
 def url_dedup(df: DataFrame, url_col: str = "url", *,
-              id_col: str = "doc_id",
-              hash_shuffle: bool = False) -> DataFrame:
+              id_col: str = "doc_id") -> DataFrame:
     """One row per canonical URL: (canon_url, keep_id, n_dups), keeper
-    = the smallest id (earliest fetch). ONE shuffle.
-
-    ``hash_shuffle=True`` aggregates on xxhash64(canon_url) instead of
-    the string — at 100 TB the shuffle carries 8 bytes per key instead
-    of the full URL; min_by keeps (canon, id) for the keeper row, so
-    the output is identical (modulo astronomically unlikely xxhash64
-    collisions, which would merge two URLs — acceptable for crawl
-    frontier dedup, not for billing)."""
+    = the smallest id (earliest fetch). ONE shuffle, keyed on the
+    canonical string (map-side partial min/count)."""
     canon = canonical_url_col(F.col(url_col)).alias("canon_url")
     rows = df.select(canon, F.col(id_col).alias("_id"))
-    if hash_shuffle:
-        keyed = rows.select(F.xxhash64("canon_url").alias("k"),
-                            "canon_url", "_id")
-        agg = keyed.groupBy("k").agg(
-            F.min_by(F.struct("canon_url", "_id"), "_id").alias("keep"),
-            F.count("*").alias("n_dups"))
-        return agg.select(F.col("keep.canon_url").alias("canon_url"),
-                          F.col("keep._id").alias("keep_id"), "n_dups")
     return (rows.groupBy("canon_url")
             .agg(F.min("_id").alias("keep_id"),
                  F.count("*").alias("n_dups")))
@@ -113,8 +96,7 @@ def host_col(url: Column) -> Column:
 
 def url_blocklist_gate(df: DataFrame, blocklist: DataFrame, *,
                        url_col: str = "url",
-                       id_col: str = "doc_id",
-                       broadcast_hits: bool = True) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """Domain-blocklist gate with UT1-style suffix semantics: a doc is
     dropped when ANY dot-suffix of its host (a.b.example.com →
     a.b.example.com, b.example.com, example.com, com) appears in the
@@ -126,10 +108,10 @@ def url_blocklist_gate(df: DataFrame, blocklist: DataFrame, *,
     value, so a non-unique id would drop every row sharing an id with
     any blocked row.
 
-    Scale shape: the host's ≤ ~6 suffixes are exploded doc-locally and
-    anti-joined against the BROADCAST blocklist (blocklists are
-    ~10^6 rows ≈ tens of MB), so the 10^12-doc table never shuffles;
-    the gate composes into the scan stage."""
+    Plan shape: the host's ≤ ~6 suffixes are exploded doc-locally and
+    semi-joined against the BROADCAST blocklist, so the document table
+    never shuffles; the distinct blocked ids (a few % of the corpus for
+    a real blocklist) are broadcast into the final anti-join."""
     host = host_col(F.col(url_col))
     labels = F.split(host, r"\.")
     n = F.size(labels)
@@ -143,12 +125,8 @@ def url_blocklist_gate(df: DataFrame, blocklist: DataFrame, *,
         id_col = df.columns[0]
     hit = (probe.join(F.broadcast(blocked), "_sfx", "left_semi")
            .select(F.col(id_col).alias("_hit_id")).distinct())
-    # blocked ids ≪ corpus for any real blocklist (gates drop a few %),
-    # so the anti-join build side broadcasts; broadcast_hits=False
-    # falls back to AQE's choice for a pathological mostly-blocked feed
-    if broadcast_hits:
-        hit = F.broadcast(hit)
-    return (df.join(hit, F.col(id_col) == F.col("_hit_id"), "left_anti"))
+    return df.join(F.broadcast(hit), F.col(id_col) == F.col("_hit_id"),
+                   "left_anti")
 
 
 def path_col(url: Column) -> Column:

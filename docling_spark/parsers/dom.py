@@ -223,7 +223,6 @@ _FAST_ATTR = re.compile(
 _FAST_ENDTAG = re.compile(r"</\s*([a-zA-Z][-.:\w]*)\s*>")
 _FAST_RAWTEXT = {t: re.compile(r"</\s*%s" % t, re.I)
                  for t in ("script", "style")}
-_FAST_MSCLOSE = re.compile(r"]\s*]\s*>")
 
 # One alternation over every markup construct in the fast subset; the
 # engine's C-level alternation replaces per-position find('<') +

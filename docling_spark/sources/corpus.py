@@ -100,7 +100,6 @@ def corpus_from_documents(
                     spans.alias("spans")))
 
 
-PDF_PAGES_PER_DOC = 2
 PDF_LINE_H = 10.0
 PDF_LINE_STEP = 12.0
 PDF_TOP = 50.0

@@ -173,17 +173,16 @@ def test_source_reputation_signals_and_gate(spark):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
 
-def test_source_reputation_approx_distinct_path(spark):
+def test_source_reputation_exact_distinct_count(spark):
     from docling_spark.operators.curate import source_reputation
 
     docs = spark.createDataFrame(
         [(i, "the word and more of it is that " + str(i % 3), "s")
          for i in range(6)],
         "doc_id long, text string, source string")
-    rep = source_reputation(docs, exact_distinct=False,
-                            min_avg_tokens_e4=10_000).collect()
+    rep = source_reputation(docs, min_avg_tokens_e4=10_000).collect()
     assert rep[0]["n_docs"] == 6
-    # HLL on 3 distinct values is exact at this cardinality
+    # 6 docs over 3 distinct texts: 3 of the 6 are repeats
     assert rep[0]["dup_ratio_e4"] == 5000
 
 

@@ -1,4 +1,4 @@
-"""CCNet perplexity bucketing: exact-rank semantics + sketch parity
+"""CCNet perplexity bucketing: exact-rank semantics
 (operators/lmscore.py:lm_buckets)."""
 
 from pyspark.sql import functions as F
@@ -14,7 +14,7 @@ def test_exact_buckets_are_equal_tertiles(spark):
     from docling_spark.operators.lmscore import lm_buckets
     docs = _docs(spark)
     ref = docs.filter(F.col("doc_id") % 10 == 0)
-    out = lm_buckets(docs, ref, thresholds="exact").collect()
+    out = lm_buckets(docs, ref).collect()
     by_lang = {}
     for r in out:
         by_lang.setdefault(r["lang"], []).append(r)
@@ -29,26 +29,3 @@ def test_exact_buckets_are_equal_tertiles(spark):
         assert [r["bucket"] for r in rows] == sorted(
             r["bucket"] for r in rows), lang
 
-
-def test_sketch_mode_parity(spark):
-    """The scale path (histogram-sketch thresholds, no per-language
-    total order) must agree with exact ranks except within one bin
-    width of a boundary: monotone in score, and ≥90% of documents in
-    the same bucket on this corpus."""
-    from docling_spark.operators.lmscore import lm_buckets
-    docs = _docs(spark)
-    ref = docs.filter(F.col("doc_id") % 10 == 0)
-    exact = {r["doc_id"]: r["bucket"]
-             for r in lm_buckets(docs, ref, thresholds="exact").collect()}
-    sk = lm_buckets(docs, ref, thresholds="sketch").collect()
-    assert len(sk) == len(exact)
-    by_lang = {}
-    for r in sk:
-        by_lang.setdefault(r["lang"], []).append(r)
-    for lang, rows in by_lang.items():
-        rows.sort(key=lambda r: (r["mean_nll_e6"], r["doc_id"]))
-        bks = [r["bucket"] for r in rows]
-        assert bks == sorted(bks), lang  # monotone in score
-        assert set(bks) <= {0, 1, 2}
-    agree = sum(1 for r in sk if exact[r["doc_id"]] == r["bucket"])
-    assert agree / len(sk) >= 0.9, f"sketch/exact agreement {agree}/{len(sk)}"

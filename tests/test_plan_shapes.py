@@ -195,7 +195,7 @@ def test_simhash_pairs_is_bucket_equijoin(spark):
     from docling_spark.operators.dedup import simhash_pairs
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .select("doc_id", "text"))
-    plan = _plan(simhash_pairs(docs, bits=32, bands=4))
+    plan = _plan(simhash_pairs(docs))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Join" in plan
