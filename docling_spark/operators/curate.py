@@ -10,8 +10,12 @@ from the band-bucket equijoin (operators/dedup.simhash_pairs), never an
 all-pairs product.
 
 Plan shape at scale:
-* gates + fingerprint: one projection over the scan (no shuffle);
-* exact dedup: one shuffle on fingerprint (window keeps min doc_id);
+* signals + fingerprint: one projection over the scan (no shuffle)
+  tokenizes each doc once and computes n_tokens, lang_pred and the
+  fingerprint;
+* exact dedup + gates: one shuffle on fingerprint (every doc, the
+  gated-out ones too); the window keeps min doc_id, and the token and
+  language gates join ``rn == 1`` in the filter above it;
 * near-dup: the SimHash agg (one shuffle) + band self-equijoin;
 * final: left-anti join of representatives against dropped ids.
 
@@ -62,15 +66,19 @@ def curate(docs: DataFrame, *, lang: str = "en",
         "doc_id", "text", "n_tokens", "fingerprint",
         _pred_from_scores({lg: F.col(f"_s_{lg}") for lg in LANG_ORDER})
         .alias("lang_pred"))
-    gated = base.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("n_tokens") <= max_tokens)
-        & (F.col("lang_pred") == lang))
-
+    # the gates run after the exact-dedup window, in one filter with
+    # rn == 1: a predicate on the non-partition columns stays above the
+    # window, so it reads the materialized n_tokens/lang_pred instead
+    # of being pushed into the scan projection, where it re-tokenized
+    # per score reference. The rows are the same: the docs of one
+    # fingerprint share their normalized text, so all or none pass.
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    reps = (gated
+    reps = (base
             .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+            .filter((F.col("rn") == 1)
+                    & (F.col("n_tokens") >= min_tokens)
+                    & (F.col("n_tokens") <= max_tokens)
+                    & (F.col("lang_pred") == lang))
             .drop("rn", "lang_pred"))
 
     pairs = simhash_pairs(reps.select("doc_id", "text"))

@@ -13,7 +13,9 @@ Scale design (the part that matters at 100 TB):
 * All hashing is md5 (lexicographic min over hex strings), which is
   portable to ANSI SQL — the DuckDB oracle runs the identical formula.
 
-No Python UDFs anywhere in this module.
+One Python UDF: the Arrow-batched word shingler (``shingle``, a scalar
+pandas UDF) under ``exploded_shingles``. Every other step is
+``pyspark.sql.functions``.
 """
 
 from __future__ import annotations

@@ -137,28 +137,24 @@ def html_col(spans: Column) -> Column:
                     F.lit("\n</body></html>"))
 
 
-def export_markdown(extracted: DataFrame,
-                    spans_col: str = "spans") -> DataFrame:
+def export_markdown(extracted: DataFrame) -> DataFrame:
     return extracted.select(
-        "doc_id", markdown_col(F.col(spans_col)).alias("markdown"))
+        "doc_id", markdown_col(F.col("spans")).alias("markdown"))
 
 
-def export_doctags(extracted: DataFrame,
-                   spans_col: str = "spans") -> DataFrame:
+def export_doctags(extracted: DataFrame) -> DataFrame:
     return extracted.select(
-        "doc_id", doctags_col(F.col(spans_col)).alias("doctags"))
+        "doc_id", doctags_col(F.col("spans")).alias("doctags"))
 
 
-def export_html(extracted: DataFrame,
-                spans_col: str = "spans") -> DataFrame:
+def export_html(extracted: DataFrame) -> DataFrame:
     return extracted.select(
-        "doc_id", html_col(F.col(spans_col)).alias("html"))
+        "doc_id", html_col(F.col("spans")).alias("html"))
 
 
-def export_text(extracted: DataFrame,
-                spans_col: str = "spans") -> DataFrame:
+def export_text(extracted: DataFrame) -> DataFrame:
     return extracted.select(
-        "doc_id", text_col(F.col(spans_col)).alias("text"))
+        "doc_id", text_col(F.col("spans")).alias("text"))
 
 
 def export_doctags_docling(corpus: DataFrame) -> DataFrame:
@@ -300,9 +296,7 @@ def docling_json_col(doc_id: Column, spans: Column) -> Column:
     return F.to_json(doc)
 
 
-def export_docling_json(extracted: DataFrame,
-                        spans_col: str = "spans") -> DataFrame:
+def export_docling_json(extracted: DataFrame) -> DataFrame:
     return extracted.select(
         "doc_id",
-        docling_json_col(F.col("doc_id"), F.col(spans_col))
-        .alias("doc_json"))
+        docling_json_col(F.col("doc_id"), F.col("spans")).alias("doc_json"))

@@ -87,62 +87,35 @@ PAGE_OUT_DDL = ("doc_id string, page_offset int, "
                 "error string, wall_us long")
 
 
-def _page_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _parsed_page_rows(payload: Optional[str]) -> list:
+    """One row (blocks, headers, footers, error, wall_us): the page's
+    body blocks and furniture texts, or its parse error and none, with
+    the page's parse time."""
     from ..parsers.pdf_page import FURNITURE_LABELS, page_items, parse_page
-    for pdf in batches:
-        out = {"doc_id": [], "page_offset": [], "blocks": [],
-               "headers": [], "footers": [], "error": [], "wall_us": []}
-        for doc_id, off, payload in zip(
-                pdf["doc_id"], pdf["page_offset"], pdf["payload"]):
-            t0 = time.monotonic_ns()
-            items: list = []
-            err = None
-            try:
-                items = page_items(parse_page(payload or ""))
-            except Exception as exc:  # per-page containment
-                err = f"{type(exc).__name__}: {exc}"[:500]
-            headers, footers = ([t for k, t in items if k == f]
-                                for f in FURNITURE_LABELS)
-            out["doc_id"].append(doc_id)
-            out["page_offset"].append(off)
-            out["blocks"].append(
-                [(k, t) for k, t in items if k not in FURNITURE_LABELS])
-            out["headers"].append(headers)
-            out["footers"].append(footers)
-            out["error"].append(err)
-            out["wall_us"].append((time.monotonic_ns() - t0) // 1000)
-        yield pd.DataFrame(out)
+    t0 = time.monotonic_ns()
+    items: list = []
+    err = None
+    try:
+        items = page_items(parse_page(payload or ""))
+    except Exception as exc:  # per-page containment
+        err = f"{type(exc).__name__}: {exc}"[:500]
+    headers, footers = ([t for k, t in items if k == f]
+                        for f in FURNITURE_LABELS)
+    blocks = [(k, t) for k, t in items if k not in FURNITURE_LABELS]
+    return [(blocks, headers, footers, err,
+             (time.monotonic_ns() - t0) // 1000)]
 
 
-def _page_rows(df: DataFrame, page_range: Optional[tuple],
-               num_partitions: Optional[int]) -> DataFrame:
-    """Explode paged documents to (doc_id, page_offset, payload) rows.
-    ``page_range=(first, last)`` is the pre-parse page slice gate
-    (DocumentLimits.page_range, datamodel/settings.py:9-25 +
-    base_pipeline.py:143-146) — a pure Catalyst predicate, so out-of-
-    range pages are never deserialized into the page UDF."""
-    pages = (df.select("doc_id", F.explode("spans").alias("s"))
-             .filter(F.col("s.kind") == "pdf_page")
-             .select("doc_id",
-                     F.col("s.offset").alias("page_offset"),
-                     F.col("s.text").alias("payload")))
-    if page_range is not None:
-        lo, hi = page_range
-        pages = pages.filter(F.col("page_offset").between(lo, hi))
-    if num_partitions:
-        pages = pages.repartition(num_partitions, "doc_id", "page_offset")
-    return pages
-
-
-def _page_map(df: DataFrame, page_range: Optional[tuple],
-              num_partitions: Optional[int], ddl: str,
-              rows_of: Callable[[str], list]) -> DataFrame:
-    """One Arrow-batched pass over the page rows of ``df``: each page
-    gives the rows ``rows_of(payload)`` returns, each prefixed with its
-    (doc_id, page_no); ``ddl`` is the output schema."""
+def _page_map(df: DataFrame, num_partitions: Optional[int], ddl: str,
+              rows_of: Callable[[Optional[str]], list]) -> DataFrame:
+    """One Arrow-batched pass over the page rows of ``df``: its
+    pdf_page spans exploded to (doc_id, page_offset, payload) rows,
+    each page giving the rows ``rows_of(payload)`` returns, each
+    prefixed with its (doc_id, page offset); ``ddl`` is the output
+    schema."""
     columns = [field.split()[0] for field in ddl.split(", ")]
 
-    def _page_rows_batches(batches: Iterator[pd.DataFrame]) \
+    def _page_batches(batches: Iterator[pd.DataFrame]) \
             -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
@@ -151,15 +124,20 @@ def _page_map(df: DataFrame, page_range: Optional[tuple],
                  for row in rows_of(payload)],
                 columns=columns)
 
-    return _page_rows(df, page_range, num_partitions).mapInPandas(
-        _page_rows_batches, schema=ddl)
+    pages = (df.select("doc_id", F.explode("spans").alias("s"))
+             .filter(F.col("s.kind") == "pdf_page")
+             .select("doc_id",
+                     F.col("s.offset").alias("page_offset"),
+                     F.col("s.text").alias("payload")))
+    if num_partitions:
+        pages = pages.repartition(num_partitions, "doc_id", "page_offset")
+    return pages.mapInPandas(_page_batches, schema=ddl)
 
 
 def extract_spans_paged(
     df: DataFrame,
     *,
     num_partitions: Optional[int] = None,
-    page_range: Optional[tuple] = None,
     max_num_pages: Optional[int] = None,
 ) -> DataFrame:
     """(doc_id, spans[kind=pdf_page]) → full output shape (doc_id,
@@ -189,8 +167,7 @@ def extract_spans_paged(
                      n_pages.cast("string"),
                      F.lit(f" > {max_num_pages}")))
         df = df.filter(~over)
-    pages = _page_rows(df, page_range, num_partitions)
-    parsed = pages.mapInPandas(_page_batches, schema=PAGE_OUT_DDL)
+    parsed = _page_map(df, num_partitions, PAGE_OUT_DDL, _parsed_page_rows)
     assembled = (parsed.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(
             F.struct("page_offset", "blocks", "error"))).alias("pages"),
@@ -236,7 +213,6 @@ def page_dump(
     df: DataFrame,
     *,
     num_partitions: Optional[int] = None,
-    page_range: Optional[tuple] = None,
 ) -> DataFrame:
     """Per-page multimodal dump — the analogue of the reference's
     ``generate_multimodal_pages`` export (utils/export.py:13-148: one
@@ -246,8 +222,7 @@ def page_dump(
     shuffle — the per-page projection renders straight off the page
     UDF output."""
     from .export import _render_span_md
-    pages = _page_rows(df, page_range, num_partitions)
-    parsed = pages.mapInPandas(_page_batches, schema=PAGE_OUT_DDL)
+    parsed = _page_map(df, num_partitions, PAGE_OUT_DDL, _parsed_page_rows)
     return parsed.select(
         "doc_id",
         F.col("page_offset").alias("page_no"),
@@ -284,7 +259,6 @@ def page_cells(
     df: DataFrame,
     *,
     num_partitions: Optional[int] = None,
-    page_range: Optional[tuple] = None,
     merge: bool = True,
 ) -> DataFrame:
     """Per-page text cells — the surface the reference's cells-level
@@ -299,7 +273,7 @@ def page_cells(
     parity test drives the real ``*.pages.json`` corpus through.
     Output: (doc_id, page_no, cell_index, text, l, t, r, b),
     page-parallel end-to-end — no doc-level shuffle."""
-    return _page_map(df, page_range, num_partitions, PAGE_CELLS_DDL,
+    return _page_map(df, num_partitions, PAGE_CELLS_DDL,
                      functools.partial(_cell_rows, merge=merge))
 
 
@@ -390,7 +364,6 @@ def page_elements(
     df: DataFrame,
     *,
     num_partitions: Optional[int] = None,
-    page_range: Optional[tuple] = None,
 ) -> DataFrame:
     """Per-page assembled elements — the reference's page-assembly
     surface (`page.assembled.elements`, page_assemble_model.py:78-155):
@@ -405,7 +378,7 @@ def page_elements(
     fixture (tests/test_real_pdf.py + the pdf_real_assembled oracle).
     Output: (doc_id, page_no, elem_index, label, text); page-parallel,
     zero shuffles."""
-    return _page_map(df, page_range, num_partitions, PAGE_ELEMENTS_DDL,
+    return _page_map(df, num_partitions, PAGE_ELEMENTS_DDL,
                      _element_rows)
 
 
@@ -424,7 +397,6 @@ def page_clusters(
     df: DataFrame,
     *,
     num_partitions: Optional[int] = None,
-    page_range: Optional[tuple] = None,
 ) -> DataFrame:
     """Cleaned layout clusters from STORED model predictions — the
     direct observable surface of the full layout postprocessor
@@ -444,7 +416,7 @@ def page_clusters(
     page-local geometry (n≈10² clusters/page), zero shuffles beyond
     the optional doc/page repartition; page-parallel at 10^12 pages.
     """
-    return _page_map(df, page_range, num_partitions, PAGE_CLUSTERS_DDL,
+    return _page_map(df, num_partitions, PAGE_CLUSTERS_DDL,
                      _cluster_rows)
 
 
@@ -464,8 +436,6 @@ def payload_chars_col():
 def extract_spans(
     df: DataFrame,
     *,
-    allowed_kinds: Optional[List[str]] = None,
-    max_payload_chars: Optional[int] = None,
     num_partitions: Optional[int] = None,
     with_markdown: bool = False,
     with_itxt: bool = False,
@@ -492,16 +462,12 @@ def extract_spans(
     against a plain-Python statement of the assembly rules on
     adversarial and random inputs.
 
-    The pre-parse gates (``_gated``: allowed kinds, size gate) are
-    Catalyst predicates before the UDF; a document over
-    ``max_payload_chars`` becomes a status='failure' row with a
-    max_file_size error, the reference's contract (InputDocument size
-    gate → ConversionStatus.FAILURE, datamodel/document.py:130-143,
-    tests/test_invalid_input.py:38-40), built with pure Catalyst —
-    oversize payloads never reach Python. Partitioning is hash(doc_id)
-    — one doc per row, so doc-hash balance is the right default;
-    skewed mega-PDFs use the page-parallel path (extract_spans_paged)
-    instead.
+    This path applies no pre-parse gate: a caller that needs the
+    allowed-kinds filter or the size gate uses ``extract_routed``,
+    which applies both to every route before parsing. Partitioning is
+    hash(doc_id) — one doc per row, so doc-hash balance is the right
+    default; skewed mega-PDFs use the page-parallel path
+    (extract_spans_paged) instead.
 
     ``with_markdown`` adds a docling-dialect markdown rendering of the
     parse tree (byte-parity with the reference's export_to_markdown
@@ -514,16 +480,11 @@ def extract_spans(
     exports = tuple(name for name, on in (("markdown", with_markdown),
                                           ("itxt", with_itxt),
                                           ("html", with_html)) if on)
-    df, failed = _gated(df, allowed_kinds, max_payload_chars)
     if num_partitions:
         df = df.repartition(num_partitions, "doc_id")
-    out = _preassembled(df).mapInPandas(
+    return _preassembled(df).mapInPandas(
         _make_doc_batches(exports),
         schema=OUTPUT_DDL + "".join(f", {e} string" for e in exports))
-    if failed is not None:
-        # the export columns of a failure row are NULL
-        out = out.unionByName(failed, allowMissingColumns=True)
-    return out
 
 
 def _gated(df: DataFrame, allowed_kinds: Optional[List[str]],
@@ -531,9 +492,12 @@ def _gated(df: DataFrame, allowed_kinds: Optional[List[str]],
     """The pre-parse gates as Catalyst predicates: a document with no
     span of ``allowed_kinds`` is left out (the allowed-format filter,
     document_converter.py:307-309); a document over
-    ``max_payload_chars`` becomes a size_gate failure row. Returns
-    (documents that pass, failure rows or None); a gate that is None
-    adds no plan node."""
+    ``max_payload_chars`` becomes a size_gate failure row with a
+    max_file_size error, the reference's contract (InputDocument size
+    gate → ConversionStatus.FAILURE, datamodel/document.py:130-143,
+    tests/test_invalid_input.py:38-40) — oversize payloads never
+    reach Python. Returns (documents that pass, failure rows or None);
+    a gate that is None adds no plan node."""
     if allowed_kinds is not None:
         df = df.filter(
             F.exists("spans", lambda s: s["kind"].isin(list(allowed_kinds))))
@@ -753,7 +717,7 @@ def extract_routed(
     document's branch.
 
     The pre-parse gates (``allowed_kinds``, ``max_payload_chars``; see
-    ``extract_spans``) apply to the whole input before routing, so
+    ``_gated``) apply to the whole input before routing, so
     every route passes them: a document of no allowed kind is left
     out, and an oversize one always becomes a size_gate failure row,
     whatever its route.

@@ -23,31 +23,28 @@ MAIN_OUT_DDL = ("doc_id string, text string, n_kept int, n_dropped int, "
                 "doc_link_density_e4 long")
 
 
-def _make_batches(thresholds: dict):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..parsers.boilerplate import strip_boilerplate
-        for pdf in batches:
-            out = {"doc_id": [], "text": [], "n_kept": [],
-                   "n_dropped": [], "doc_link_density_e4": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    r = strip_boilerplate(payload or "", **thresholds)
-                except Exception:  # malformed page -> empty main content
-                    r = {"text": "", "n_kept": 0, "n_dropped": 0,
-                         "doc_link_density_e4": 0}
-                out["doc_id"].append(doc_id)
-                out["text"].append(r["text"])
-                out["n_kept"].append(r["n_kept"])
-                out["n_dropped"].append(r["n_dropped"])
-                out["doc_link_density_e4"].append(r["doc_link_density_e4"])
-            yield pd.DataFrame(out)
-
-    return run
+def _main_content_batches(
+        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    from ..parsers.boilerplate import strip_boilerplate
+    for pdf in batches:
+        out = {"doc_id": [], "text": [], "n_kept": [],
+               "n_dropped": [], "doc_link_density_e4": []}
+        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+            try:
+                r = strip_boilerplate(payload or "")
+            except Exception:  # malformed page -> empty main content
+                r = {"text": "", "n_kept": 0, "n_dropped": 0,
+                     "doc_link_density_e4": 0}
+            out["doc_id"].append(doc_id)
+            out["text"].append(r["text"])
+            out["n_kept"].append(r["n_kept"])
+            out["n_dropped"].append(r["n_dropped"])
+            out["doc_link_density_e4"].append(r["doc_link_density_e4"])
+        yield pd.DataFrame(out)
 
 
 def extract_main_content(corpus: DataFrame, *,
-                         num_partitions: Optional[int] = None,
-                         **thresholds) -> DataFrame:
+                         num_partitions: Optional[int] = None) -> DataFrame:
     """(doc_id, spans) → (doc_id, text, n_kept, n_dropped,
     doc_link_density_e4): the page's main content with chrome /
     link-farm / tag-soup blocks stripped.
@@ -64,4 +61,4 @@ def extract_main_content(corpus: DataFrame, *,
             .filter(F.length("payload") > 0))
     if num_partitions:
         docs = docs.repartition(num_partitions, "doc_id")
-    return docs.mapInPandas(_make_batches(thresholds), schema=MAIN_OUT_DDL)
+    return docs.mapInPandas(_main_content_batches, schema=MAIN_OUT_DDL)

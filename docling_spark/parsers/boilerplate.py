@@ -124,11 +124,7 @@ def _atomic_blocks(root: Element) -> List[Element]:
     return out
 
 
-def classify_blocks(html: str, *,
-                    max_link_density_e4: int = DEFAULT_MAX_LINK_DENSITY_E4,
-                    min_text_chars: int = DEFAULT_MIN_TEXT_CHARS,
-                    min_chars_per_tag_e4: int = DEFAULT_MIN_CHARS_PER_TAG_E4,
-                    ) -> List[dict]:
+def classify_blocks(html: str) -> List[dict]:
     """Segment + classify. Each dict: tag, text, n_chars, link_chars,
     link_density_e4, n_tags, verdict ('kept' or the drop rule name)."""
     root = parse_html(html)
@@ -145,11 +141,12 @@ def classify_blocks(html: str, *,
             verdict = "furniture"
         elif n_chars == 0:
             verdict = "empty"
-        elif ld_e4 > max_link_density_e4:
+        elif ld_e4 > DEFAULT_MAX_LINK_DENSITY_E4:
             verdict = "link_density"
-        elif n_chars < min_text_chars and link_chars > 0:
+        elif n_chars < DEFAULT_MIN_TEXT_CHARS and link_chars > 0:
             verdict = "short_link"
-        elif n_tags >= TAG_HEAVY_MIN_TAGS and cpt_e4 < min_chars_per_tag_e4:
+        elif (n_tags >= TAG_HEAVY_MIN_TAGS
+              and cpt_e4 < DEFAULT_MIN_CHARS_PER_TAG_E4):
             verdict = "text_density"
         else:
             verdict = "kept"
@@ -161,11 +158,11 @@ def classify_blocks(html: str, *,
     return blocks
 
 
-def strip_boilerplate(html: str, **thresholds) -> dict:
+def strip_boilerplate(html: str) -> dict:
     """Main-content view of one page: kept text (blocks joined by
     newline, document order) + exact counters for the lineage metrics
     column."""
-    blocks = classify_blocks(html, **thresholds)
+    blocks = classify_blocks(html)
     kept = [b for b in blocks if b["verdict"] == "kept"]
     judged = [b for b in blocks if b["verdict"] != "empty"]
     n_chars = sum(b["n_chars"] for b in judged)

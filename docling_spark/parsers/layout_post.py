@@ -53,6 +53,13 @@ CONFIDENCE_THRESHOLDS: Dict[str, float] = {
 
 LABEL_REMAP = {"title": "section_header"}
 
+# overlap dedup groups two clusters over either bound (step 5); a cell
+# joins the cluster covering the largest share of it above MIN_OVERLAP
+# (step 2)
+IOU_THRESHOLD = 0.8
+CONTAINMENT_THRESHOLD = 0.8
+MIN_OVERLAP = 0.2
+
 OVERLAP_PARAMS = {
     "regular": {"area_threshold": 1.3, "conf_threshold": 0.05},
     "picture": {"area_threshold": 2.0, "conf_threshold": 0.3},
@@ -84,8 +91,7 @@ def _cell_bbox(cell) -> BBox:
     return (cell.l, cell.t, cell.r, cell.b)
 
 
-def _overlaps_enough(a: BBox, b: BBox, iou_thr: float = 0.8,
-                     containment_thr: float = 0.8) -> bool:
+def _overlaps_enough(a: BBox, b: BBox) -> bool:
     area_a, area_b = _area(a), _area(b)
     if area_a <= 0 or area_b <= 0:
         return False
@@ -93,8 +99,8 @@ def _overlaps_enough(a: BBox, b: BBox, iou_thr: float = 0.8,
     if inter <= 0:
         return False
     iou = inter / (area_a + area_b - inter)
-    return (iou > iou_thr or inter / area_a > containment_thr
-            or inter / area_b > containment_thr)
+    return (iou > IOU_THRESHOLD or inter / area_a > CONTAINMENT_THRESHOLD
+            or inter / area_b > CONTAINMENT_THRESHOLD)
 
 
 class _UnionFind:
@@ -202,8 +208,8 @@ def _remove_overlapping(clusters: List[LayoutCluster],
     return result
 
 
-def _assign_cells(cells: Sequence, clusters: List[LayoutCluster],
-                  min_overlap: float = 0.2) -> List[LayoutCluster]:
+def _assign_cells(cells: Sequence,
+                  clusters: List[LayoutCluster]) -> List[LayoutCluster]:
     for cluster in clusters:
         cluster.cells = []
     for cell in cells:
@@ -213,7 +219,7 @@ def _assign_cells(cells: Sequence, clusters: List[LayoutCluster],
         ca = _area(cb)
         if ca <= 0:
             continue
-        best_ratio = min_overlap
+        best_ratio = MIN_OVERLAP
         best: Optional[LayoutCluster] = None
         for cluster in clusters:
             ratio = _intersection(cb, cluster.bbox) / ca

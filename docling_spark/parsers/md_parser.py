@@ -63,10 +63,14 @@ _BULLET_RE = re.compile(r"^( *)([-*+])([ \t]+(.*))?[ \t]*$")
 _ORDERED_RE = re.compile(r"^( *)(\d{1,9})([.)])([ \t]+(.*))?[ \t]*$")
 
 
-def shorten_underscore_sequences(text: str, max_length: int = 10) -> str:
+MAX_UNDERSCORE_RUN = 10
+
+
+def shorten_underscore_sequences(text: str) -> str:
     """Clamp pathological underscore runs (md_backend.py:39-60)."""
     return re.sub(r"_+",
-                  lambda m: "_" * min(len(m.group(0)), max_length), text)
+                  lambda m: "_" * min(len(m.group(0)), MAX_UNDERSCORE_RUN),
+                  text)
 
 
 def _expand_leading_tabs(line: str) -> str:

@@ -147,11 +147,13 @@ def decode_page(payload: str) -> Page:
 # 1. fragment merge (pypdfium2_backend.py:110-198 — exact port)
 
 
-def merge_horizontal_cells(
-    cells: List[Cell],
-    horizontal_threshold_factor: float = 1.0,
-    vertical_threshold_factor: float = 0.5,
-) -> List[Cell]:
+# row grouping: top and bottom within this share of the row height;
+# horizontal merge: gap at most this share of the two cells' mean height
+VERTICAL_THRESHOLD_FACTOR = 0.5
+HORIZONTAL_THRESHOLD_FACTOR = 1.0
+
+
+def merge_horizontal_cells(cells: List[Cell]) -> List[Cell]:
     if not cells:
         return []
 
@@ -162,7 +164,7 @@ def merge_horizontal_cells(
         row_bottom = cells[0].b
         row_height = cells[0].height
         for cell in cells[1:]:
-            vertical_threshold = row_height * vertical_threshold_factor
+            vertical_threshold = row_height * VERTICAL_THRESHOLD_FACTOR
             if (abs(cell.t - row_top) <= vertical_threshold
                     and abs(cell.b - row_bottom) <= vertical_threshold):
                 current_row.append(cell)
@@ -194,7 +196,7 @@ def merge_horizontal_cells(
         for cell in row[1:]:
             prev = current_group[-1]
             avg_height = (prev.height + cell.height) / 2
-            if cell.l - prev.r <= avg_height * horizontal_threshold_factor:
+            if cell.l - prev.r <= avg_height * HORIZONTAL_THRESHOLD_FACTOR:
                 current_group.append(cell)
             else:
                 merged.append(merge_group(current_group))

@@ -40,6 +40,7 @@ import zlib
 from typing import Any, Dict, Iterator, List, Optional, Tuple
 
 SPACE_EM = 0.18   # TJ kern → word-space threshold, in em units
+LINE_SPACE_EM = 0.15  # run gap → word space in line assembly, in em units
 SPLIT_EM = 1.5    # intra-string gap (Tc/Tw) → run-break threshold
 
 # docling-parse expands Unicode ligature codepoints in its cell text
@@ -1226,41 +1227,14 @@ def extract_pdf_runs(data: bytes) -> List[dict]:
 # run → line assembly (docling-parse emits line-level cells; these are
 # OUR line semantics, tuned against its cell dumps, not a port)
 
-_RTL_RE = re.compile(r"[֐-ࣿיִ-﷿ﹰ-﻿]")
-_LTR_RE = re.compile(r"[A-Za-z0-9À-ɏ]")
 
-
-def _visual_to_logical(s: str) -> str:
-    """Approximate BiDi visual→logical for RTL-majority lines: reverse
-    the whole string, then restore maximal LTR (latin/digit) segments."""
-    rev = s[::-1]
-    out = []
-    i = 0
-    while i < len(rev):
-        if _LTR_RE.match(rev[i]):
-            j = i
-            while j < len(rev) and (_LTR_RE.match(rev[j])
-                                    or (rev[j] in ".,-+/" and j + 1 < len(rev)
-                                        and _LTR_RE.match(rev[j + 1]))):
-                j += 1
-            out.append(rev[i:j][::-1])
-            i = j
-        else:
-            out.append(rev[i])
-            i += 1
-    return "".join(out)
-
-
-def assemble_lines(runs: List[dict], space_em: float = 0.15,
-                   bidi: bool = False) -> List[dict]:
+def assemble_lines(runs: List[dict]) -> List[dict]:
     """Group runs into line cells (TOPLEFT coords): same-baseline
     grouping, x-sorted concatenation with gap-inferred word spaces.
 
-    ``bidi=False`` (default) keeps RTL text in VISUAL order — the same
-    convention docling-parse uses in its cell dumps (its
-    right_to_left_* groundtruth stores reversed Arabic); ``bidi=True``
-    applies the approximate visual→logical reordering for consumers
-    that want readable logical text."""
+    RTL text stays in VISUAL order — the same convention docling-parse
+    uses in its cell dumps (its right_to_left_* groundtruth stores
+    reversed Arabic)."""
     if not runs:
         return []
     rs = sorted(runs, key=lambda r: (r["baseline"], r["x0"]))
@@ -1344,7 +1318,7 @@ def assemble_lines(runs: List[dict], space_em: float = 0.15,
                 gap = r["x0"] - prev["x1"]
                 size = max(min(size_r or 4.0,
                                prev.get("size") or 4.0), 1.0)
-                if gap > space_em * size and text_parts and \
+                if gap > LINE_SPACE_EM * size and text_parts and \
                         not text_parts[-1].endswith(" "):
                     text_parts.append(" ")
             if script:
@@ -1352,13 +1326,8 @@ def assemble_lines(runs: List[dict], space_em: float = 0.15,
             else:
                 text_parts.append(r["text"])
             prev = r
-        text = "".join(text_parts)
-        if bidi:
-            n_rtl = len(_RTL_RE.findall(text))
-            if n_rtl and n_rtl >= len(_LTR_RE.findall(text)):
-                text = _visual_to_logical(text)
         out.append({
-            "text": text,
+            "text": "".join(text_parts),
             "x0": min(r["x0"] for r in group),
             "y0": min(r["y0"] for r in group),
             "x1": max(r["x1"] for r in group),
@@ -1367,15 +1336,13 @@ def assemble_lines(runs: List[dict], space_em: float = 0.15,
     return out
 
 
-def extract_pdf_cells(data: bytes, space_em: float = 0.15,
-                      bidi: bool = False) -> List[dict]:
+def extract_pdf_cells(data: bytes) -> List[dict]:
     """Whole document → per-page line cells:
     {width, height, cells:[{text,x0,y0,x1,y1}]} — the same shape the
     structured-page path consumes (parsers/pdf_page.py)."""
     pages = extract_pdf_runs(data)
     return [{"width": p["width"], "height": p["height"],
-             "cells": assemble_lines(p["runs"], space_em=space_em,
-                                     bidi=bidi)}
+             "cells": assemble_lines(p["runs"])}
             for p in pages]
 
 

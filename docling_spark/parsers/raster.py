@@ -41,7 +41,7 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, Tuple
 
 import numpy as np
 
@@ -215,8 +215,7 @@ def png_decode(data: bytes) -> np.ndarray:
 # ---------------------------------------------------------------------------
 # OCR
 
-def ocr_page(img: np.ndarray, dpi: float = 72.0,
-             max_word_gap_em: Optional[float] = None) -> List[dict]:
+def ocr_page(img: np.ndarray, dpi: float = 72.0) -> List[dict]:
     """Recognize rendered text back out of a grayscale bitmap.
 
     Layout-blind segmentation: scan for the first inked row of each

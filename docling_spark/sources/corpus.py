@@ -5,10 +5,10 @@ Two generators:
 
 * :func:`corpus_from_documents` — pure-Catalyst (zero Python UDFs):
   wraps each row of the driver-provided ``documents`` parquet into an
-  HTML payload with a fixed template, optionally interleaving a media
-  span. Because the template is a SQL expression, the *expected
-  extraction output* is also expressible in ANSI SQL — this is what the
-  DuckDB oracle queries in ``__spark_entry__`` predict.
+  HTML payload with a fixed template, interleaving a media span into
+  every fifth document. Because the template is a SQL expression, the
+  *expected extraction output* is also expressible in ANSI SQL — this
+  is what the DuckDB oracle queries in ``__spark_entry__`` predict.
 
 * :func:`fixture_corpus` — the Docling groundtruth fixture payloads as
   corpus rows (used by tests and the bench's heavy-tail mix).
@@ -54,24 +54,12 @@ def html_payload_col():
     )
 
 
-def corpus_from_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    with_media: bool = True,
-    repeat: int = 1,
-) -> DataFrame:
-    """documents.parquet → interleaved (doc_id, spans) corpus.
-
-    ``repeat`` > 1 clones each document under new doc_ids
-    ('{id}#{i}') for perf runs — deterministic, seedless.
-    """
+def corpus_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents.parquet → interleaved (doc_id, spans) corpus."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    payload = html_payload_col()
-
     html_span = F.struct(
         F.lit("html").alias("kind"),
-        payload.alias("text"),
+        html_payload_col().alias("text"),
         F.lit("").alias("media_ref"),
         F.lit(0).cast("int").alias("offset"),
     )
@@ -82,22 +70,11 @@ def corpus_from_documents(
          .alias("media_ref"),
         F.lit(1).cast("int").alias("offset"),
     )
-    spans = (
-        F.when(F.col("doc_id") % MEDIA_MOD == 0,
-               F.array(html_span, media_span))
-         .otherwise(F.array(html_span))
-        if with_media else F.array(html_span)
-    )
-    base = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
+    spans = (F.when(F.col("doc_id") % MEDIA_MOD == 0,
+                    F.array(html_span, media_span))
+              .otherwise(F.array(html_span)))
+    return docs.select(F.col("doc_id").cast("string").alias("doc_id"),
                        spans.alias("spans"))
-    if repeat <= 1:
-        return base
-    # deterministic cloning via a small exploded sequence (Catalyst-only)
-    reps = F.explode(F.sequence(F.lit(0), F.lit(repeat - 1))).alias("rep")
-    return (docs.select("doc_id", "text", "n_chars", reps)
-            .select(F.concat(F.col("doc_id").cast("string"), F.lit("#"),
-                             F.col("rep").cast("string")).alias("doc_id"),
-                    spans.alias("spans")))
 
 
 PDF_LINE_H = 10.0

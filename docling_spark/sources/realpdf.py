@@ -31,7 +31,7 @@ from __future__ import annotations
 import glob
 import json
 import os
-from typing import List, Optional, Tuple
+from typing import List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -67,11 +67,11 @@ def page_payload(page: dict) -> str:
                        float(page["size"]["height"]), cells, clusters)
 
 
-def fixture_docs(pattern: str = REAL_PAGES_GLOB) -> List[tuple]:
+def fixture_docs() -> List[tuple]:
     """[(doc_id, [(kind, payload, media_ref, offset), ...]), ...]
     rows in the engine's INPUT_SCHEMA shape, one per fixture doc."""
     rows = []
-    for path in sorted(glob.glob(pattern)):
+    for path in sorted(glob.glob(REAL_PAGES_GLOB)):
         doc_id = os.path.basename(path)[: -len(".pages.json")]
         pages = json.loads(open(path, encoding="utf-8").read())
         spans = [("pdf_page", page_payload(p), "", int(p.get("page_no", i)))
@@ -80,10 +80,9 @@ def fixture_docs(pattern: str = REAL_PAGES_GLOB) -> List[tuple]:
     return rows
 
 
-def corpus_real_pdf_pages(spark: SparkSession,
-                          pattern: Optional[str] = None) -> DataFrame:
+def corpus_real_pdf_pages(spark: SparkSession) -> DataFrame:
     """(doc_id, spans) corpus over the reference's real page dumps."""
     from ..schema import INPUT_SCHEMA
 
     return spark.createDataFrame(
-        fixture_docs(pattern or REAL_PAGES_GLOB), schema=INPUT_SCHEMA)
+        fixture_docs(), schema=INPUT_SCHEMA)

@@ -80,14 +80,18 @@ def test_media_interleave(spark):
 def test_prefilters_are_catalyst_side(spark):
     """Size gate and kind filter must appear in the optimized plan as
     plain Filters below the Python evaluation node (pushdown check)."""
+    from docling_spark.operators.extract import extract_routed
     corpus = fixture_corpus(spark, ["html"])
-    out = extract_spans(corpus, allowed_kinds=["html"],
-                        max_payload_chars=10_000_000)
+    out = extract_routed(corpus, allowed_kinds=["html"],
+                         max_payload_chars=10_000_000, routes={"doc": 1})
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    # the filter sits under (after in plan text) the Python map node
-    assert "Filter" in plan
+    # the doc path is the union's last child: everything after the
+    # Python map node in the plan text is its subtree, and both gates
+    # sit there as one Filter
     assert "MapInPandas" in plan
-    assert plan.index("Filter") > plan.index("MapInPandas")
+    below = plan[plan.index("MapInPandas"):].splitlines()
+    gate = next(line for line in below if "Filter" in line)
+    assert "exists(" in gate and "aggregate(" in gate
 
 
 def test_output_schema_stable(spark):
@@ -101,6 +105,7 @@ def test_oversize_modes(spark):
     tests/test_invalid_input.py:38-44): an oversize doc is reported
     as a failure row with a max_file_size error. The failure rows are
     Catalyst-built — the payload never reaches Python."""
+    from docling_spark.operators.extract import extract_routed
     from docling_spark.schema import INPUT_SCHEMA
     rows = [("small", [("html", "<html><body><h1>T</h1></body></html>",
                         "", 0)]),
@@ -108,7 +113,7 @@ def test_oversize_modes(spark):
                       + "</p></body></html>", "", 0)])]
     df = spark.createDataFrame(rows, schema=INPUT_SCHEMA)
 
-    failed = extract_spans(df, max_payload_chars=1000)
+    failed = extract_routed(df, max_payload_chars=1000)
     by_id = {r.doc_id: r for r in failed.collect()}
     assert by_id["small"].status == "success"
     assert by_id["big"].status == "failure"
@@ -221,16 +226,16 @@ def test_routed_rows_match_each_branch_called_directly(spark):
                   ("media", "", "media://a", 1)]),
         ("md", [("md", "# Title\n\nbody text", "", 0)]),
         ("media_only", [("media", "", "media://m", 0)]),
-        ("oversize", [("html", "<html><body><p>" + "x" * 2000
-                       + "</p></body></html>", "", 0)]),
     ]
+    oversize = "<html><body><p>" + "x" * 2000 + "</p></body></html>"
     paged_rows = [("paged", [("pdf_page", page, "", 0),
                              ("pdf_page", page, "", 1)])]
     raw_rows = [("raw", pdf_ok), ("raw_bad", pdf_bad)]
     image_rows = [("image", [("image", "", "img://b", 1),
                              ("image", "", "img://a", 0)])]
     corpus = spark.createDataFrame(
-        doc_rows + paged_rows + image_rows
+        doc_rows + [("oversize", [("html", oversize, "", 0)])]
+        + paged_rows + image_rows
         + [(d, [("pdf_raw", base64.b64encode(b).decode("ascii"), "", 0)])
            for d, b in raw_rows],
         schema=INPUT_SCHEMA)
@@ -238,8 +243,8 @@ def test_routed_rows_match_each_branch_called_directly(spark):
     got = _rows_by_id(extract_routed(corpus, max_payload_chars=1000))
 
     want = _rows_by_id(extract_spans(
-        spark.createDataFrame(doc_rows, schema=INPUT_SCHEMA),
-        max_payload_chars=1000))
+        spark.createDataFrame(doc_rows, schema=INPUT_SCHEMA)))
+    want["oversize"] = _size_gate_row("oversize", len(oversize), 1000)
     want.update(_rows_by_id(extract_spans_paged(
         spark.createDataFrame(paged_rows, schema=INPUT_SCHEMA))))
     want.update(_rows_by_id(extract_spans_paged(pdf_to_page_spans(

@@ -1,13 +1,11 @@
 """Pins of the structured-page surfaces over synthetic pages: the
 payload bytes the two writers produce, page_elements and page_cells
 rows, doc-path/paged-path agreement on pdf_page documents, and per-page
-containment in the page UDF. The real-fixture checks (test_real_pdf,
-the pdf_real_assembled oracle) need the reference corpus; these do
-not."""
+containment in the parsed-page row function. The real-fixture checks
+(test_real_pdf, the pdf_real_assembled oracle) need the reference
+corpus; these do not."""
 
 import json
-
-import pandas as pd
 
 from docling_spark.schema import INPUT_SCHEMA
 
@@ -241,17 +239,17 @@ def test_real_fixture_page_payload_bytes():
 def test_page_udf_contains_null_and_sentinel_pages():
     """A NULL payload and an error sentinel each become that page's
     error; the page between them still parses."""
-    from docling_spark.operators.extract import _page_batches
+    from docling_spark.operators.extract import _parsed_page_rows
     payloads = [None, json.dumps(GEOMETRIC_PAGE),
                 json.dumps({"page_no": 0, "pdfio_error": "bad xref"})]
-    out = next(_page_batches(iter([pd.DataFrame({
-        "doc_id": ["d"] * 3, "page_offset": [0, 1, 2],
-        "payload": payloads})])))
-    assert out["error"].tolist() == [
+    rows = [row for p in payloads for row in _parsed_page_rows(p)]
+    blocks, headers, footers, errors, wall_us = map(list, zip(*rows))
+    assert errors == [
         "JSONDecodeError: Expecting value: line 1 column 1 (char 0)",
         None, "ValueError: bad xref"]
-    assert out["blocks"].tolist() == [
+    assert blocks == [
         [], [("text", "Left column"), ("text", "Right column")], []]
-    assert out["headers"].tolist() == [[], ["Journal header"], []]
-    assert out["footers"].tolist() == [[], ["Page 7"], []]
+    assert headers == [[], ["Journal header"], []]
+    assert footers == [[], ["Page 7"], []]
+    assert all(isinstance(us, int) and us >= 0 for us in wall_us)
 

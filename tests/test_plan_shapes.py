@@ -87,15 +87,17 @@ def test_minhash_has_partial_aggregation(spark):
 
 
 def test_extraction_prefilters_stay_under_python_node(spark):
-    from docling_spark.operators.extract import extract_spans
+    from docling_spark.operators.extract import extract_routed
     from docling_spark.sources.corpus import corpus_from_documents
     corpus = corpus_from_documents(spark, "/root/testdata/sf0.001")
-    out = extract_spans(corpus, allowed_kinds=["html"],
-                        max_payload_chars=1_000_000)
+    out = extract_routed(corpus, allowed_kinds=["html"],
+                         max_payload_chars=1_000_000, routes={"doc": 1})
     plan = _optimized(out)
     py_idx = (plan.index("MapInArrow") if "MapInArrow" in plan
               else plan.index("MapInPandas"))
-    assert plan.index("Filter") > py_idx
+    # the doc path is the union's last child, so its gate Filter
+    # follows the Python node in the plan text
+    assert "Filter" in plan[py_idx:]
 
 
 def test_export_is_pure_projection(spark):
@@ -210,10 +212,15 @@ def test_curate_pipeline_shape(spark):
     from docling_spark.operators.curate import curate
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .select("doc_id", "text"))
-    plan = _plan(curate(docs))
+    out = curate(docs)
+    plan = _plan(out)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "LeftAnti" in plan
+    # the gates filter above the exact-dedup window on the materialized
+    # signals; pushed into the scan projection they re-tokenize
+    assert not [line for line in _optimized(out).splitlines()
+                if "Filter" in line and "regexp_replace" in line]
 
 
 def test_int8_quantizer_is_pure_catalyst(spark):
