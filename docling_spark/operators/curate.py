@@ -15,7 +15,10 @@ Plan shape at scale:
   fingerprint;
 * exact dedup + gates: one shuffle on fingerprint (every doc, the
   gated-out ones too); the window keeps min doc_id, and the token and
-  language gates join ``rn == 1`` in the filter above it;
+  language gates join ``rn == 1`` in the filter above it. Gated-out
+  docs with one normalized text (empty or NULL text, short repeated
+  boilerplate) share one fingerprint, so each such group is one
+  window partition, sorted in one task;
 * near-dup: the SimHash agg (one shuffle) + band self-equijoin;
 * final: left-anti join of representatives against dropped ids.
 

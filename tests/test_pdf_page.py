@@ -5,6 +5,8 @@ header/footer furniture suppression."""
 
 import json
 
+from pyspark.sql import functions as F
+
 from docling_spark.doctree import flatten
 from docling_spark.parsers.pdf_page import (
     Cell,
@@ -142,6 +144,16 @@ def test_page_dump_rows(spark):
     rows = full.limit(500).collect()
     assert rows and all(r["error"] is None for r in rows)
     assert all(r["n_blocks"] >= 1 for r in rows)
+    # page_range as the caller-side filter MIGRATION.md gives: only
+    # page 0 survives, and the span filter's offset bound sits in the
+    # projection under the Python node, so it runs before the UDF
+    only_p0 = page_dump(corpus.withColumn("spans", F.filter(
+        "spans", lambda s: (s.kind != "pdf_page")
+        | s.offset.between(0, 0))))
+    pages = {r["page_no"] for r in only_p0.limit(500).collect()}
+    assert pages == {0}
+    plan = only_p0._jdf.queryExecution().optimizedPlan().toString()
+    assert "offset <= 0" in plan[plan.index("MapInPandas"):]
 
 
 def test_get_text_in_rect():

@@ -95,9 +95,12 @@ def test_extraction_prefilters_stay_under_python_node(spark):
     plan = _optimized(out)
     py_idx = (plan.index("MapInArrow") if "MapInArrow" in plan
               else plan.index("MapInPandas"))
-    # the doc path is the union's last child, so its gate Filter
-    # follows the Python node in the plan text
-    assert "Filter" in plan[py_idx:]
+    # the doc path is the union's last child, so its subtree follows
+    # the Python node in the plan text; its first Filter holds both
+    # gates: allowed_kinds as exists(), the size gate as aggregate()
+    below = plan[py_idx:].splitlines()
+    gate = next(line for line in below if "Filter" in line)
+    assert "exists(" in gate and "aggregate(" in gate
 
 
 def test_export_is_pure_projection(spark):
