@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from docling_spark.operators.dedup import (
     dedup_exact,
     minhash_dedup,
-    simhash16,
+    simhash_bits,
 )
 from docling_spark.operators.extract import extract_spans
 from docling_spark.operators.similarity import knn_bruteforce, knn_lsh
@@ -1614,10 +1614,9 @@ def q_html_table_cells(spark, sf_dir):
 
 
 def q_pdf_text_in_rect(spark, sf_dir):
-    """Distributed get_text_in_rect (docling_parse_v4_backend.py:33-56
-    / parsers/pdf_page.py:204-219): >half-area cell overlap against a
-    broadcast rect table, text joined in cell order — pure Catalyst,
-    no UDF. Rect 0 covers page 0's first three lines; rect 1 covers
+    """Distributed get_text_in_rect (docling_parse_v4_backend.py:33-56):
+    >half-area cell overlap against a broadcast rect table, text
+    joined in cell order — pure Catalyst, no UDF. Rect 0 covers page 0's first three lines; rect 1 covers
     all of page 1; rect 2 is an empty region (returns '')."""
     from docling_spark.operators.extract import page_cells, text_in_rect
     from docling_spark.sources.corpus import corpus_pdf_pages
@@ -1934,7 +1933,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
 
 
 def q_dedup_simhash(spark, sf_dir):
-    return simhash16(_docs(spark, sf_dir), n=3)
+    return simhash_bits(_docs(spark, sf_dir), n=3, bits=16)
 
 
 def q_curate_corpus(spark, sf_dir):
@@ -3566,8 +3565,8 @@ def q_stream_extract_status(spark, sf_dir):
     """The extract_status_counts pipeline run as STRUCTURED STREAMING
     end-to-end inside the query: readStream over the documents
     parquet, the same Catalyst corpus synthesis and the same stateless
-    Arrow extraction UDF (streaming/stream.py — the plan is the batch
-    plan), drained with trigger(availableNow) into a memory sink, then
+    Arrow extraction UDF (extract_spans — the plan is the batch plan),
+    drained with trigger(availableNow) into a memory sink, then
     aggregated per status. Exactness of the streaming path against the
     batch oracle IS the check: same oracle SQL as
     extract_status_counts."""

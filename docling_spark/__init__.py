@@ -23,7 +23,8 @@ Layout:
                dedup (exact/minhash/simhash), similarity (knn),
                textstats (language/quality/tokens), multimodal
   sources/   — corpus synthesis and table scans
-  streaming/ — structured-streaming extraction surface
+  streaming/ — watermarked event windows and the memory-sink drain of
+               the streaming registry queries
 """
 
 __version__ = "0.1.0"

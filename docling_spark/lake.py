@@ -289,57 +289,3 @@ def partition_metrics(written: DataFrame) -> DataFrame:
     return written.groupBy("partition_id").agg(
         *aggs, F.min("doc_id").alias("min_doc_id"),
         F.max("doc_id").alias("max_doc_id"))
-
-
-class BucketedTable:
-    """Catalog-registered bucketed Parquet table — the co-located-join
-    layout. At 100 TB the recurring joins (doc spans ⋈ doc metadata,
-    dedup labels ⋈ corpus, embeddings ⋈ assignments) all key on
-    doc_id/vec_id: bucketing both sides ONCE at write time by the join
-    key removes the shuffle from every subsequent run — Spark's
-    FileSourceScanExec reports the hash-partitioning as its output
-    partitioning, so SortMergeJoin/ShuffledHashJoin plan with zero
-    Exchange when bucket column, bucket count, and join key line up
-    (the same lever as Iceberg's bucket partition transform).
-
-    Bucketed writes must go through the session catalog
-    (``saveAsTable``): a path-only ``parquet(...)`` write drops the
-    bucket spec. The table is EXTERNAL (explicit ``path``), so data
-    ownership stays with the caller's lake directory, not the
-    warehouse."""
-
-    def __init__(self, spark: SparkSession, name: str) -> None:
-        self.spark = spark
-        self.name = name
-
-    @staticmethod
-    def write(df: DataFrame, name: str, path: str, *,
-              bucket_col: str = "doc_id", n_buckets: int = 64,
-              sorted_within: bool = True,
-              mode: str = "errorifexists") -> "BucketedTable":
-        """Write ``df`` as an external bucketed table. ``n_buckets``
-        bounds per-bucket file size at the target scale (100 TB /
-        n_buckets / tasks-per-bucket); ``sorted_within`` additionally
-        sorts each bucket file by the key so bucket-joins skip the
-        per-partition sort too (SortMergeJoin's sort node becomes a
-        no-op over the already-sorted scan)."""
-        spark = df.sparkSession
-        if mode == "overwrite" and spark.catalog.tableExists(name):
-            spark.sql(f"DROP TABLE {name}")
-        w = (df.write.mode(mode)
-             .bucketBy(n_buckets, bucket_col)
-             .option("path", os.path.abspath(path)))
-        if sorted_within:
-            w = w.sortBy(bucket_col)
-        w.format("parquet").saveAsTable(name)
-        return BucketedTable(spark, name)
-
-    def read(self) -> DataFrame:
-        return self.spark.read.table(self.name)
-
-    def join_colocated(self, other: "BucketedTable",
-                       on: str) -> DataFrame:
-        """Join two tables bucketed on the same key/count — compiles
-        to a join with NO Exchange on either side (assert in tests,
-        not at runtime: the planner owns the final shape)."""
-        return self.read().join(other.read(), on)

@@ -21,6 +21,7 @@ pandas UDF) under ``exploded_shingles``. Every other step is
 from __future__ import annotations
 
 import re
+from typing import List
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -96,31 +97,6 @@ def exploded_shingles(docs: DataFrame, *, n: int = 3) -> DataFrame:
         .filter(F.col("shingle").isNotNull()))
 
 
-def minhash_signatures(sh: DataFrame, *, num_hashes: int = 16) -> DataFrame:
-    """Exploded shingles → one row per doc with columns h0..h{k-1}.
-
-    ONE md5 per shingle: the digest's two 48-bit halves (a, b) generate
-    all k hash functions as h_s = a + s·b (Carter-Wegman style pairwise
-    mixing — the standard k-from-2 minhash construction). k independent
-    salted digests would cost k× the hashing; at 10^12 docs the md5 is
-    the dominant CPU term of the whole dedup (measured 16 salted md5s ≈
-    2× the remaining agg cost at sf0.1). 48-bit halves keep
-    a + 15·b < 2^52, far from BIGINT overflow.
-
-    A single shuffle with map-side partial min-aggregation — and the
-    min is over *longs*: min(string) forces sort-based aggregation
-    (UnsafeRow buffers can't update var-length values, measured 3-4×
-    slower), while min(long) stays in primitive whole-stage-codegen
-    hash aggregation."""
-    digest = F.md5("shingle")
-    a = F.conv(F.substring(digest, 1, 12), 16, 10).cast("long")
-    b = F.conv(F.substring(digest, 13, 12), 16, 10).cast("long")
-    mixed = sh.select("doc_id", a.alias("ha"), b.alias("hb"))
-    aggs = [F.min(F.col("ha") + F.lit(s) * F.col("hb")).alias(f"h{s}")
-            for s in range(num_hashes)]
-    return mixed.groupBy("doc_id").agg(*aggs)
-
-
 def banded_hashes(sigs: DataFrame, *, num_hashes: int = 16,
                   bands: int = 4) -> DataFrame:
     """Signatures → (doc_id, band_id, band_hash): md5 of the '|'-joined
@@ -190,27 +166,34 @@ def ngram_containment(sh: DataFrame, pairs: DataFrame) -> DataFrame:
 _MERSENNE31 = (1 << 31) - 1
 
 
-def minhash_signatures_indep(sh: DataFrame, *,
-                             num_hashes: int = 16) -> DataFrame:
-    """Signatures from an INDEPENDENT hash family: h_s(x) = (c_s·v +
-    d_s) mod (2³¹−1) over one 48-bit md5-derived value v per shingle.
-    The mod-wraparound makes each s an effectively independent
-    permutation — unlike minhash_signatures' a + s·b family, whose
-    orderings are correlated across s (one outlier element can hijack
-    every component; fine for LSH candidate generation, which only
-    needs collision-on-equality and is exactness-verified downstream,
-    but USELESS as an estimator). Constants are closed-form in s, so
-    the SQL oracle replays them literally. Same plan shape: one md5
-    per shingle, one shuffle with 16 primitive min-aggregates."""
-    v = (F.conv(F.substring(F.md5("shingle"), 1, 12), 16, 10)
-         .cast("long") % F.lit(_MERSENNE31))
+def _indep_min_aggs(h48: Column, num_hashes: int) -> List[Column]:
+    """The independent family's ``num_hashes`` min-aggregates h0..hk-1
+    over ``h48``, one 48-bit md5-derived long per shingle: h_s(x) =
+    (c_s·v + d_s) mod (2³¹−1) with v = h48 mod (2³¹−1)."""
+    v = h48 % F.lit(_MERSENNE31)
     aggs = []
     for s in range(num_hashes):
         c = ((2 * s + 1) * 2654435761) % _MERSENNE31
         d = (s * 1013904223 + 12345) % _MERSENNE31
         aggs.append(F.min((v * F.lit(c) + F.lit(d)) % F.lit(_MERSENNE31))
                     .alias(f"h{s}"))
-    return sh.groupBy("doc_id").agg(*aggs)
+    return aggs
+
+
+def minhash_signatures_indep(sh: DataFrame, *,
+                             num_hashes: int = 16) -> DataFrame:
+    """Signatures from an INDEPENDENT hash family: h_s(x) = (c_s·v +
+    d_s) mod (2³¹−1) over one 48-bit md5-derived value v per shingle.
+    The mod-wraparound makes each s an effectively independent
+    permutation — unlike the a + s·b family of minhash_dedup, whose
+    orderings are correlated across s (one outlier element can hijack
+    every component; fine for LSH candidate generation, which only
+    needs collision-on-equality and is exactness-verified downstream,
+    but USELESS as an estimator). Constants are closed-form in s, so
+    the SQL oracle replays them literally. Same plan shape: one md5
+    per shingle, one shuffle with 16 primitive min-aggregates."""
+    h48 = F.conv(F.substring(F.md5("shingle"), 1, 12), 16, 10).cast("long")
+    return sh.groupBy("doc_id").agg(*_indep_min_aggs(h48, num_hashes))
 
 
 def minhash_jaccard_est(sigs: DataFrame, pairs: DataFrame, *,
@@ -411,6 +394,15 @@ def minhash_dedup(docs: DataFrame, *, n: int = 3, num_hashes: int = 16,
     → band self-join candidates → exact Jaccard by array_intersect
     over the per-doc hash sets.
 
+    The default ``cw`` family takes the digest's two 48-bit halves
+    (a, b) and generates all k hash functions as h_s = a + s·b
+    (Carter-Wegman style pairwise mixing): one md5 per shingle where k
+    salted digests would cost k× the hashing, and a + 15·b < 2^52
+    stays far from BIGINT overflow. The min is over longs: min(string)
+    forces sort-based aggregation, min(long) stays in whole-stage
+    codegen hash aggregation. ``indep`` uses the independent family of
+    :func:`minhash_signatures_indep`.
+
     Scale shape (round-4 rewrite): the previous spelling verified
     candidates by re-joining the exploded shingle table twice on
     (doc_id, shingle) — measured at 320k docs / 808k candidates that
@@ -449,14 +441,7 @@ def minhash_dedup(docs: DataFrame, *, n: int = 3, num_hashes: int = 16,
         F.conv(F.substring(digest, 13, 12), 16, 10).cast("long")
         .alias("hb"))
     if hash_family == "indep":
-        v = F.col("ha") % F.lit(_MERSENNE31)
-        sig_aggs = []
-        for s in range(num_hashes):
-            c = ((2 * s + 1) * 2654435761) % _MERSENNE31
-            d = (s * 1013904223 + 12345) % _MERSENNE31
-            sig_aggs.append(
-                F.min((v * F.lit(c) + F.lit(d)) % F.lit(_MERSENNE31))
-                .alias(f"h{s}"))
+        sig_aggs = _indep_min_aggs(F.col("ha"), num_hashes)
     else:
         sig_aggs = [F.min(F.col("ha") + F.lit(s) * F.col("hb"))
                     .alias(f"h{s}") for s in range(num_hashes)]
@@ -632,11 +617,6 @@ def simhash_bits(docs: DataFrame, *, n: int = 3,
                       F.lit(1 << b).cast("long")).otherwise(F.lit(0))
         hash_expr = term if hash_expr is None else hash_expr + term
     return agg.select("doc_id", hash_expr.cast("long").alias("simhash"))
-
-
-def simhash16(docs: DataFrame, *, n: int = 3) -> DataFrame:
-    """16-bit SimHash (kept as the dedup_simhash oracle surface)."""
-    return simhash_bits(docs, n=n, bits=16)
 
 
 # simhash_pairs cuts 32-bit signatures into 4 bands of 8 bits; by

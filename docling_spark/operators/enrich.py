@@ -177,19 +177,3 @@ def omml_equations(df: DataFrame, *, xml_col: str = "omml") -> DataFrame:
             yield pd.DataFrame(out)
 
     return df.mapInPandas(batches, schema=OMML_DDL)
-
-
-def apply_enrichment(extracted: DataFrame, enriched: DataFrame) -> DataFrame:
-    """Join the enrichment side-table back onto exploded spans — the
-    columnar analogue of the reference writing predictions onto items.
-    Equi-join on (doc_id, offset); spans without enrichment keep null."""
-    spans = (extracted
-             .select("doc_id", F.explode("spans").alias("s"))
-             .select("doc_id", F.col("s.offset").alias("offset"),
-                     F.col("s.kind").alias("kind"),
-                     F.col("s.text").alias("text"),
-                     F.col("s.media_ref").alias("media_ref")))
-    return spans.join(
-        enriched.select("doc_id", "offset",
-                        F.col("enrichment").alias("enrichment")),
-        ["doc_id", "offset"], "left")

@@ -279,10 +279,10 @@ def page_cells(
 
 def text_in_rect(cells: DataFrame, rects: DataFrame) -> DataFrame:
     """Distributed spelling of the reference's page-local range join
-    (``get_text_in_rect``, docling_parse_v4_backend.py:33-56 /
-    parsers/pdf_page.py:204-219): for every query rect, the text of
-    the page's cells whose bbox overlaps the rect by MORE THAN HALF
-    the cell's own area, joined by single spaces in cell-index order.
+    (``get_text_in_rect``, docling_parse_v4_backend.py:33-56): for
+    every query rect, the text of the page's cells whose bbox overlaps
+    the rect by MORE THAN HALF the cell's own area, joined by single
+    spaces in cell-index order.
 
     ``cells`` is the :func:`page_cells` relation (doc_id, page_no,
     cell_index, text, l, t, r, b); ``rects`` is (rect_id, doc_id,

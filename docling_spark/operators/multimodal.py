@@ -1,13 +1,12 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` columns
 with typed metadata, processed by Arrow-batched pandas UDFs.
 
-The container has no image/audio codecs (no PIL/ffmpeg), so the DECODE
-step is stubbed exactly as the harness prescribes: real Spark-side
-plumbing (schema, partitioning, UDF signatures, Arrow batch shapes)
-with (a) a REAL stdlib header parser for PNG/JPEG dimensions, (b) a
-deterministic fake pixel decoder for feature extraction, and (c) a
-clearly-marked NotImplementedError for full raster decode. Swapping in
-a real codec changes one function body, none of the plumbing.
+No image/audio codec (PIL/ffmpeg) is a dependency, so only the
+formats a stdlib decoder covers are decoded for real: headers of
+PNG/JPEG/GIF/WAV, PGM/PPM rasters and grayscale PNG. Perceptual
+hashing of any other format uses a deterministic fake pixel decoder
+(:func:`_fake_pixels`); swapping in a real codec changes that one
+function body, none of the Spark plumbing.
 
 The reference counterpart: pictures flow as PIL images + ImageRef
 (docling/backend/msword_backend.py:616-647, models/picture
@@ -18,7 +17,6 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator, List
 
 import numpy as np
 import pandas as pd
@@ -99,10 +97,9 @@ def _parse_pnm_header(data: bytes):
 
 def decode_pnm(data: bytes) -> np.ndarray:
     """REAL raster decode for binary PGM (P5) / PPM (P6) — the one
-    raw image format that needs no external codec, so unlike
-    :func:`decode_image` this path is genuinely implemented. Returns
-    an (h, w) uint8 grayscale array (PPM is luma-averaged); maxval
-    must be ≤ 255 (one byte per sample)."""
+    raw image format that needs no external codec. Returns an (h, w)
+    uint8 grayscale array (PPM is luma-averaged); maxval must be ≤ 255
+    (one byte per sample)."""
     w, h, maxval, off = _parse_pnm_header(data)
     if maxval > 255:
         raise ValueError("16-bit netpbm not supported")
@@ -140,7 +137,7 @@ def image_meta_udf(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# stubbed: decode / features / resize
+# stand-in decode for formats without a stdlib codec
 
 
 def _fake_pixels(data: bytes, w: int, h: int) -> np.ndarray:
@@ -154,45 +151,6 @@ def _fake_pixels(data: bytes, w: int, h: int) -> np.ndarray:
         out += hashlib.sha256(data + counter.to_bytes(4, "big")).digest()
         counter += 1
     return np.frombuffer(bytes(out[:need]), dtype=np.uint8).reshape(h, w)
-
-
-def decode_image(data: bytes) -> np.ndarray:
-    """Full raster decode — NOT available in this container.
-
-    Raises NotImplementedError by design; image_features_udf uses the
-    deterministic fake instead so pipelines are testable end-to-end."""
-    raise NotImplementedError(
-        "no image codec in this environment; plug PIL/turbojpeg here")
-
-
-FEATURES_DDL = ("width int, height int, mean_e4 long, std_e4 long, "
-                "p_dark_e4 long")
-
-
-def image_features_udf(col: Column) -> Column:
-    """Arrow-batched feature extraction over the (fake-)decoded raster:
-    mean/std luminance + dark-pixel ratio, as scaled ints."""
-    @pandas_udf(FEATURES_DDL)
-    def feats(blobs: pd.Series) -> pd.DataFrame:
-        out = {"width": [], "height": [], "mean_e4": [], "std_e4": [],
-               "p_dark_e4": []}
-        for b in blobs:
-            data = bytes(b) if b is not None else b""
-            w, h, _ = parse_image_header(data)
-            if not w or not h:
-                for k in out:
-                    out[k].append(None)
-                continue
-            px = _fake_pixels(data, min(w, 64), min(h, 64)).astype(
-                np.float64)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["mean_e4"].append(int(px.mean() * 10000))
-            out["std_e4"].append(int(px.std() * 10000))
-            out["p_dark_e4"].append(int((px < 64).mean() * 10000))
-        return pd.DataFrame(out)
-
-    return feats(col)
 
 
 # ---------------------------------------------------------------------------
@@ -224,10 +182,10 @@ def average_hash(data: bytes, hash_size: int = 8):
     parsers/raster.png_decode (zlib inflate + filter reversal — covers
     every page the engine's own rasterizer emits, so render→hash is
     real pixels end-to-end). JPEG/GIF/IMG1 and non-grayscale PNGs use
-    the deterministic fake decode stand-in (same contract as
-    image_features_udf) until a codec is plugged in. The reference
-    keeps only exact-bytes image identity (PIL images hashed whole);
-    perceptual near-identity is a corpus-curation addition."""
+    the deterministic fake decode stand-in (:func:`_fake_pixels`)
+    until a codec is plugged in. The reference keeps only exact-bytes
+    image identity (PIL images hashed whole); perceptual near-identity
+    is a corpus-curation addition."""
     if not (1 <= hash_size * hash_size <= 64):
         raise ValueError("hash must fit a 64-bit long: hash_size <= 8")
     # corrupt web payloads raise more than ValueError (zlib.error on a
@@ -426,8 +384,7 @@ def parse_audio_header(data: bytes):
     (``application/octet-stream``, None…) for non-RIFF bytes.
 
     This is the audio analogue of ``parse_image_header``: the METADATA
-    step is real; PCM decode (the codec step) is the pluggable stub
-    ``decode_audio`` below, same contract as ``decode_image``."""
+    step is real; PCM decode (the codec step) is not implemented."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         return ("application/octet-stream", None, None, None, None, None)
     channels = sample_rate = bits = block_align = None
@@ -471,24 +428,14 @@ def audio_meta_udf(col: Column) -> Column:
     return meta(col)
 
 
-def decode_audio(data: bytes) -> np.ndarray:
-    """PCM sample decode — NOT available in this container.
-
-    Raises NotImplementedError by design, same contract as
-    ``decode_image``: plug soundfile/ffmpeg here; signature is
-    bytes → (n_samples, channels) int16 array."""
-    raise NotImplementedError(
-        "no audio codec in this environment; plug soundfile/ffmpeg here")
-
-
 def audio_window_plan(duration_ms: Column, window_ms: int = 25,
                       hop_ms: int = 10,
                       max_windows: int = 4096) -> Column:
     """Deterministic STFT-style analysis-window start offsets (ms) for
     an audio column: [0, hop, 2·hop, …] while a full window fits,
     capped at ``max_windows`` — pure Catalyst metadata math, the
-    planning half of feature extraction (the decode half is the
-    pluggable stub). Empty array when the clip is shorter than one
+    planning half of feature extraction (the decode half is not
+    implemented). Empty array when the clip is shorter than one
     window."""
     n_raw = F.floor((duration_ms - F.lit(window_ms))
                     / F.lit(hop_ms)).cast("int") + 1
@@ -510,11 +457,6 @@ def with_image_meta(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
 
 def with_audio_meta(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     return df.withColumn("meta", audio_meta_udf(F.col(bytes_col)))
-
-
-def with_image_features(df: DataFrame,
-                        bytes_col: str = "bytes") -> DataFrame:
-    return df.withColumn("features", image_features_udf(F.col(bytes_col)))
 
 
 def media_asset_table(spans_df: DataFrame) -> DataFrame:

@@ -35,21 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Pure-Catalyst cosine (higher-order folds). Correct but evaluates
-    interpreted — use :func:`cosine_udf` on hot paths."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 _COSINE_UDF = None
 
 
@@ -284,12 +269,9 @@ def knn_ivf(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     too coarse. Since every corpus vector lives in exactly one cell,
     (query, neighbor) candidate pairs are already unique — no
     dedup shuffle needed."""
-    cn = _centroid_matrix(embeddings, n_cells)
-    assign_udf, probe_udf = _cell_rank_udfs(cn, n_probe)
-    e = _as_double(embeddings)
-    index = e.select("vec_id",
-                     assign_udf(F.col("embedding")).alias("cell"),
-                     "embedding")
+    index = ivf_assign(embeddings, n_cells)
+    _, probe_udf = _cell_rank_udfs(_centroid_matrix(embeddings, n_cells),
+                                   n_probe)
     q = _as_double(queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
     # explode_OUTER + null-guard: plain explode's inferred pruning

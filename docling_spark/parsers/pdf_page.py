@@ -293,24 +293,6 @@ def _split_blocks(lines: List[Cell]) -> List[List[Cell]]:
     return blocks
 
 
-def get_text_in_rect(cells: List[Cell], l: float, t: float, r: float,
-                     b: float) -> str:
-    """Text of cells overlapping a query bbox by more than half their
-    own area, joined by spaces in cell order — the reference's
-    page-local range join (docling_parse_v4_backend.py:33-56)."""
-    out = []
-    for c in cells:
-        area = max(c.r - c.l, 0.0) * max(c.b - c.t, 0.0)
-        if area <= 0:
-            continue
-        w = min(c.r, r) - max(c.l, l)
-        h = min(c.b, b) - max(c.t, t)
-        inter = w * h if w > 0 and h > 0 else 0.0
-        if inter / area > 0.5:
-            out.append(c.text)
-    return " ".join(out)
-
-
 def table_grid_from_cells(cells: List[Cell]) -> TableData:
     """Heuristic table structure from the text cells inside a table
     cluster — the model-free stand-in for TableFormer

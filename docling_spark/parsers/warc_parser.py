@@ -28,7 +28,7 @@ Pure stdlib; no network, no external WARC library.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import Dict, List
 
 CRLF = b"\r\n"
 
@@ -148,23 +148,3 @@ def parse_warc(data: bytes) -> List[Dict]:
             rec["body"] = payload
         out.append(rec)
     return out
-
-
-def surt_key(uri: str) -> Optional[str]:
-    """URI -> SURT-ish CDX url key: comma-reversed host ``)`` path,
-    lowercased, scheme/port/fragment dropped (the public CDX(J)
-    convention used by crawl indexes). Returns None when no host can
-    be found."""
-    u = uri.strip().lower()
-    for scheme in ("https://", "http://"):
-        if u.startswith(scheme):
-            u = u[len(scheme):]
-            break
-    else:
-        return None
-    u = u.split("#", 1)[0]
-    host, slash, path = u.partition("/")
-    host = host.split("@")[-1].split(":")[0]
-    if not host:
-        return None
-    return ",".join(reversed(host.split("."))) + ")/" + path

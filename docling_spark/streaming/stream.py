@@ -1,42 +1,17 @@
-"""Structured Streaming surface.
+"""Structured Streaming helpers for the registry's streaming queries.
 
-The reference is batch-only (SURVEY.md §1.3: no streaming operators),
-but a continuous ingest of documents is the natural production shape
-of this engine: the SAME transformations run on a readStream source —
-extraction is stateless per document (mapInPandas works unchanged on
-streaming DataFrames) and the event rollup is a watermarked windowed
-aggregation.
-
-Checkpointing: writeStream's own checkpointLocation gives
-exactly-once sink semantics; the batch path's snapshot-manifest resume
+Extraction is stateless per document, so ``extract_spans`` runs
+unchanged on a ``spark.readStream`` source (mapInPandas works on
+streaming DataFrames); the event rollup is a watermarked windowed
+aggregation. writeStream's own checkpointLocation gives exactly-once
+sink semantics; the batch path's snapshot-manifest resume
 (docling_spark.lake) stays the coarse-grained re-run story.
 """
 
 from __future__ import annotations
 
-from typing import Optional
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.extract import extract_spans
-from ..schema import INPUT_SCHEMA
-
-
-def corpus_stream(spark: SparkSession, path: str,
-                  max_files_per_trigger: Optional[int] = None) -> DataFrame:
-    """File-source stream over a parquet directory of (doc_id, spans)."""
-    reader = spark.readStream.schema(INPUT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    return reader.parquet(path)
-
-
-def extract_stream(corpus: DataFrame) -> DataFrame:
-    """Streaming extraction: identical operator as batch — stateless
-    per-document Arrow UDF, so the streaming plan is the batch plan."""
-    return extract_spans(corpus)
 
 
 def windowed_event_counts(events: DataFrame,
@@ -60,303 +35,6 @@ def windowed_event_counts(events: DataFrame,
                     "event_type", "n_events", "sum_value_e2"))
 
 
-SESSION_GAP_SECONDS = 1800.0
-
-_SESSION_OUT_DDL = "user_id bigint, n_sessions bigint, n_events bigint"
-_SESSION_STATE_DDL = "last_ts double, n_sessions bigint, n_events bigint"
-
-
-def sessionize_stream(events: DataFrame,
-                      gap_seconds: float = SESSION_GAP_SECONDS) -> DataFrame:
-    """Custom STATEFUL streaming operator (applyInPandasWithState):
-    per-user session counting with a 30-minute inactivity gap — the
-    streaming spelling of the batch window-function sessionizer
-    (q_events_sessionize), with the gap fold carried across
-    micro-batches in GroupState instead of a partitionBy window.
-
-    State per user is three scalars (last event time, session count,
-    event count) — O(users), not O(events): the arrival order inside a
-    micro-batch is normalized by sorting the batch (ts, event_id), and
-    only the last timestamp must survive to the next batch. Emits the
-    running totals per user on every batch (update-mode sink).
-
-    On a single availableNow batch over a static backlog this reduces
-    to the batch sessionizer exactly — pinned by
-    tests/test_streaming.py."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fold(key, pdfs, state: GroupState):
-        if state.exists:
-            last_ts, n_sessions, n_events = state.get
-        else:
-            last_ts, n_sessions, n_events = None, 0, 0
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        for ts in rows["ts"]:
-            t = ts.timestamp()
-            if last_ts is None or t - last_ts > gap_seconds:
-                n_sessions += 1
-            last_ts = t
-            n_events += 1
-        state.update((last_ts, n_sessions, n_events))
-        yield pd.DataFrame({"user_id": [key[0]],
-                            "n_sessions": [n_sessions],
-                            "n_events": [n_events]})
-
-    return (events
-            .select("user_id", "ts", "event_id")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                fold,
-                outputStructType=_SESSION_OUT_DDL,
-                stateStructType=_SESSION_STATE_DDL,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-_DEDUP_OUT_DDL = "fingerprint string, doc_id bigint"
-_DEDUP_STATE_DDL = "first_doc bigint"
-
-
-def dedup_stream(docs: DataFrame, *,
-                 state_ttl_minutes: Optional[int] = None) -> DataFrame:
-    """Streaming exact dedup — dedup-on-arrival for continuous ingest
-    (the streaming spelling of operators/dedup.dedup_exact): the FIRST
-    document carrying each normalized-text md5 is emitted, every later
-    duplicate (same micro-batch or any subsequent one) is dropped.
-
-    State per fingerprint is a single long (the emitted doc_id) —
-    O(unique documents), sharded by the state store across executors;
-    within one micro-batch ties resolve to the smallest doc_id, so a
-    drained static backlog reproduces the batch representative set.
-    ``state_ttl_minutes`` bounds retention where the dedup horizon
-    allows (expired fingerprints are forgotten and their next
-    occurrence re-emitted) — at 100 TB of ingest the unbounded set is
-    the real memory story, so production runs want the TTL plus a
-    periodic batch dedup_exact compaction of the sink."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    fp = F.md5(F.lower(F.trim(F.regexp_replace(F.col("text"),
-                                               r"\s+", " "))))
-    keyed = docs.select(fp.alias("fingerprint"),
-                        F.col("doc_id").cast("long").alias("doc_id"))
-    timeout = (GroupStateTimeout.ProcessingTimeTimeout
-               if state_ttl_minutes else GroupStateTimeout.NoTimeout)
-
-    def fold(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        best = None
-        for pdf in pdfs:
-            if len(pdf):
-                m = int(pdf["doc_id"].min())
-                best = m if best is None else min(best, m)
-        fresh = best is not None and not state.exists
-        if fresh:
-            state.update((best,))
-        if state.exists and state_ttl_minutes:
-            state.setTimeoutDuration(state_ttl_minutes * 60_000)
-        if fresh:
-            yield pd.DataFrame({"fingerprint": [key[0]],
-                                "doc_id": [best]})
-
-    return (keyed.groupBy("fingerprint")
-            .applyInPandasWithState(
-                fold,
-                outputStructType=_DEDUP_OUT_DDL,
-                stateStructType=_DEDUP_STATE_DDL,
-                outputMode="update",
-                timeoutConf=timeout))
-
-
-_APPROX_OUT_DDL = "prefix string, doc_id bigint"
-_APPROX_STATE_DDL = "first_doc bigint"
-
-
-def approx_dedup_stream(docs: DataFrame, *, prefix_hex: int = 8,
-                        state_ttl_minutes: Optional[int] = None
-                        ) -> DataFrame:
-    """Approximate dedup-on-arrival with BOUNDED state — the streaming
-    counterpart of operators/dedup.bloom_membership (a k=1 Bloom with
-    m = 16^prefix_hex): the key is the leading ``prefix_hex`` hex
-    digits of the normalized-text md5, state is one long per occupied
-    prefix, so memory is capped at m entries regardless of how much
-    ingest passes (exact dedup_stream state grows with UNIQUE docs —
-    unbounded on an open crawl). Prefix collisions are deterministic
-    false positives: the later doc is dropped. Widen prefix_hex to
-    trade memory for FP rate; keys shard uniformly across the state
-    store because md5 prefixes are uniform."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    fp = F.md5(F.lower(F.trim(F.regexp_replace(F.col("text"),
-                                               r"\s+", " "))))
-    keyed = docs.select(F.substring(fp, 1, prefix_hex).alias("prefix"),
-                        F.col("doc_id").cast("long").alias("doc_id"))
-    timeout = (GroupStateTimeout.ProcessingTimeTimeout
-               if state_ttl_minutes else GroupStateTimeout.NoTimeout)
-
-    def fold(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        best = None
-        for pdf in pdfs:
-            if len(pdf):
-                m = int(pdf["doc_id"].min())
-                best = m if best is None else min(best, m)
-        fresh = best is not None and not state.exists
-        if fresh:
-            state.update((best,))
-        if state.exists and state_ttl_minutes:
-            state.setTimeoutDuration(state_ttl_minutes * 60_000)
-        if fresh:
-            yield pd.DataFrame({"prefix": [key[0]], "doc_id": [best]})
-
-    return (keyed.groupBy("prefix")
-            .applyInPandasWithState(
-                fold,
-                outputStructType=_APPROX_OUT_DDL,
-                stateStructType=_APPROX_STATE_DDL,
-                outputMode="update",
-                timeoutConf=timeout))
-
-
-def run_stream_to_table(stream_df: DataFrame, out_dir: str,
-                        checkpoint_dir: str, *,
-                        available_now: bool = True):
-    """Drain a streaming DataFrame to parquet with exactly-once sink
-    checkpointing. available_now processes the current backlog and
-    stops — the batch-parity mode used by tests and backfills."""
-    writer = (stream_df.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    q = writer.trigger(availableNow=True) if available_now \
-        else writer.trigger(processingTime="10 seconds")
-    query = q.start()
-    if available_now:
-        query.awaitTermination()
-    return query
-
-
-_CDC_OUT_DDL = "doc_id bigint, reason string, content_sha256 string"
-_CDC_STATE_DDL = "h string"
-
-
-def cdc_stream(docs: DataFrame, *, seq_col: str = "seq") -> DataFrame:
-    """Streaming change-data-capture — the continuous-ingest twin of
-    operators/diff.changed_docs: per doc_id, emit ('new', hash) on
-    first sight and ('changed', hash) whenever the content hash moves;
-    unchanged re-deliveries are silent. Within a micro-batch, versions
-    order by ``seq_col`` (an ingest sequence / commit timestamp the
-    source must provide — arrival order inside a batch is not
-    meaningful in a distributed source).
-
-    State per doc_id is one 64-hex string (the last hash). At 10^12
-    docs that state is the real cost (like dedup_stream's fingerprint
-    set): production runs shard it across executors via the state
-    store, and bound it by keying on (doc_id bucket epoch) with
-    periodic batch changed_docs compaction against the snapshot
-    manifest."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    keyed = docs.select(F.col("doc_id").cast("long").alias("doc_id"),
-                        F.col(seq_col).cast("long").alias("seq"),
-                        F.sha2(F.col("text"), 256).alias("h"))
-
-    def fold(key, pdfs, state: GroupState):
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        if not frames:
-            return
-        df = pd.concat(frames).sort_values("seq")
-        last = state.get[0] if state.exists else None
-        reasons, hashes = [], []
-        for h in df["h"]:
-            if last is None:
-                reasons.append("new")
-                hashes.append(h)
-            elif h != last:
-                reasons.append("changed")
-                hashes.append(h)
-            last = h
-        state.update((last,))
-        if reasons:
-            yield pd.DataFrame({"doc_id": [key[0]] * len(reasons),
-                                "reason": reasons,
-                                "content_sha256": hashes})
-
-    return (keyed.groupBy("doc_id")
-            .applyInPandasWithState(
-                fold,
-                outputStructType=_CDC_OUT_DDL,
-                stateStructType=_CDC_STATE_DDL,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-_ANOM_OUT_DDL = ("key string, slot_epoch bigint, sum_value_e2 bigint, "
-                 "baseline_e2 bigint, anomaly int")
-_ANOM_STATE_DDL = "hist array<bigint>"
-
-
-def anomaly_stream(slots: DataFrame, *, trailing_slots: int = 24,
-                   factor_e2: int = 200) -> DataFrame:
-    """Streaming twin of operators/timeseries.flag_anomalies:
-    continuous trailing-baseline spike detection over a PRE-AGGREGATED
-    slot stream (key, slot_epoch, sum_value_e2) — state per key is the
-    last ``trailing_slots`` slot sums (an array of longs, bounded).
-    Slots are processed in slot order within each micro-batch, and the
-    same integer cross-multiplication as the batch operator decides
-    the flag, so a drained backlog reproduces the batch flags exactly
-    (parity-tested). Slots must arrive in order across batches (the
-    upstream watermarked window aggregation emits them that way)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    keyed = slots.select(F.col("key").cast("string").alias("key"),
-                         F.col("slot_epoch").cast("long"),
-                         F.col("sum_value_e2").cast("long"))
-
-    def fold(key, pdfs, state: GroupState):
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        if not frames:
-            return
-        df = pd.concat(frames).sort_values("slot_epoch")
-        hist = list(state.get[0]) if state.exists else []
-        out = {"key": [], "slot_epoch": [], "sum_value_e2": [],
-               "baseline_e2": [], "anomaly": []}
-        for slot, s in zip(df["slot_epoch"], df["sum_value_e2"]):
-            s = int(s)
-            window = hist[-trailing_slots:]
-            n = len(window)
-            tsum = sum(window)
-            baseline = tsum // n if n else None
-            anomaly = int(n > 0 and s * 100 * n > factor_e2 * tsum)
-            out["key"].append(key[0])
-            out["slot_epoch"].append(int(slot))
-            out["sum_value_e2"].append(s)
-            out["baseline_e2"].append(baseline)
-            out["anomaly"].append(anomaly)
-            hist.append(s)
-            hist = hist[-trailing_slots:]
-        state.update((hist,))
-        yield pd.DataFrame(out)
-
-    return (keyed.groupBy("key")
-            .applyInPandasWithState(
-                fold,
-                outputStructType=_ANOM_OUT_DDL,
-                stateStructType=_ANOM_STATE_DDL,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout))
-
-
 _MEMORY_SINK_SEQ = iter(range(1, 1 << 30))
 
 
@@ -366,8 +44,8 @@ def run_to_memory_table(stream_df: DataFrame, *,
     trigger(availableNow) and return the (unique) table name. The
     memory sink keeps rows on the driver — the harness for
     registry/interactive queries over BOUNDED backlogs, not a
-    production sink (use run_stream_to_table for parquet +
-    checkpointed exactly-once). The rows stay pinned until the caller
+    production sink (write parquet with a checkpointLocation for
+    exactly-once). The rows stay pinned until the caller
     drops the view: consume the table, then
     ``spark.catalog.dropTempView(name)`` — repeated invocations
     otherwise accumulate a full output copy each."""

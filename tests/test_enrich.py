@@ -1,10 +1,9 @@
 """Enrichment framework (SURVEY §2.4): batched second pass over
-processable spans, pluggable enrichers, side-table join-back."""
+processable spans, pluggable enrichers."""
 
 import pandas as pd
 
 from docling_spark.operators.enrich import (
-    apply_enrichment,
     classify_code_language,
     enrich_spans,
 )
@@ -49,12 +48,6 @@ def test_enrich_and_apply(spark):
         ("d1", 3): ("formula", "latex"),
         ("d2", 1): ("picture", "inline"),
     }
-    joined = apply_enrichment(df, enriched)
-    by_key = {(r["doc_id"], r["offset"]): r["enrichment"]
-              for r in joined.collect()}
-    assert by_key[("d1", 0)] is None  # unenriched spans keep null
-    assert by_key[("d1", 1)] == "python"
-    assert len(by_key) == 6  # every span survives the left join
 
 
 def test_custom_enricher_slot(spark):

@@ -156,15 +156,6 @@ def test_page_dump_rows(spark):
     assert "offset <= 0" in plan[plan.index("MapInPandas"):]
 
 
-def test_get_text_in_rect():
-    from docling_spark.parsers.pdf_page import Cell, get_text_in_rect
-    cells = [Cell(0, "inside", 10, 10, 50, 20),
-             Cell(1, "half", 40, 10, 80, 20),    # 25% inside → dropped
-             Cell(2, "outside", 200, 200, 240, 210)]
-    assert get_text_in_rect(cells, 0, 0, 60, 30) == "inside"
-    assert get_text_in_rect(cells, 0, 0, 75, 30) == "inside half"
-
-
 def test_table_grid_from_cells():
     from docling_spark.doctree import serialize_table
     from docling_spark.parsers.pdf_page import Cell, table_grid_from_cells

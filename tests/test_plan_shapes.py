@@ -69,12 +69,12 @@ def test_ivf_quantizer_requires_enough_centroids(spark):
 def test_minhash_has_partial_aggregation(spark):
     from docling_spark.operators.dedup import (
         exploded_shingles,
-        minhash_signatures,
+        minhash_signatures_indep,
     )
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text")
-    sigs = minhash_signatures(exploded_shingles(docs))
+    sigs = minhash_signatures_indep(exploded_shingles(docs))
     plan = _plan(sigs)
     # two HashAggregate nodes (partial + final) around one exchange on
     # doc_id, min() on primitive longs — never sort-based aggregation

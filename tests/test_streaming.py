@@ -1,16 +1,10 @@
-"""Structured Streaming parity: the streaming extraction and windowed
-rollup must produce exactly the batch results on the same input."""
-
-from pyspark.sql import functions as F
+"""Structured Streaming parity: extract_spans on a readStream source and
+the windowed rollup must produce exactly the batch results on the same
+input."""
 
 from docling_spark.operators.extract import extract_spans
 from docling_spark.schema import INPUT_SCHEMA
-from docling_spark.streaming.stream import (
-    corpus_stream,
-    extract_stream,
-    run_stream_to_table,
-    windowed_event_counts,
-)
+from docling_spark.streaming.stream import windowed_event_counts
 
 
 def _write_corpus(spark, path, n=20):
@@ -23,16 +17,25 @@ def _write_corpus(spark, path, n=20):
     return df
 
 
+def _drain_extraction(spark, src, out, ckpt, **reader_options):
+    """readStream -> extract_spans -> parquet sink, checkpointed, over
+    the current backlog (trigger availableNow)."""
+    stream = extract_spans(spark.readStream.schema(INPUT_SCHEMA)
+                           .options(**reader_options).parquet(src))
+    assert stream.isStreaming
+    (stream.writeStream.format("parquet")
+     .option("path", out).option("checkpointLocation", ckpt)
+     .outputMode("append").trigger(availableNow=True)
+     .start().awaitTermination())
+
+
 def test_streaming_extraction_matches_batch(spark, tmp_path):
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     batch_input = _write_corpus(spark, src)
 
-    stream = extract_stream(corpus_stream(spark, src,
-                                          max_files_per_trigger=2))
-    assert stream.isStreaming
-    run_stream_to_table(stream, out, ckpt, available_now=True)
+    _drain_extraction(spark, src, out, ckpt, maxFilesPerTrigger=2)
 
     got = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
     want = {r["doc_id"]: r
@@ -52,8 +55,7 @@ def test_streaming_restart_is_exactly_once(spark, tmp_path):
     _write_corpus(spark, src, n=10)
 
     for _ in range(2):  # second run replays nothing
-        stream = extract_stream(corpus_stream(spark, src))
-        run_stream_to_table(stream, out, ckpt, available_now=True)
+        _drain_extraction(spark, src, out, ckpt)
     assert spark.read.parquet(out).count() == 10
 
 
@@ -85,113 +87,6 @@ def test_windowed_counts_streaming_vs_batch(spark, tmp_path):
            (r["n_events"], r["sum_value_e2"])
            for r in spark.sql("SELECT * FROM win_test").collect()}
     assert got == batch
-
-
-def test_stateful_sessionize_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionizer over a drained backlog must
-    equal the batch gap-fold computed independently in pandas."""
-    from docling_spark.streaming.stream import sessionize_stream
-
-    src = str(tmp_path / "ev")
-    events = (spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-              .select("user_id", "ts", "event_id"))
-    events.repartition(2).write.parquet(src)
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema).parquet(src)
-    sess = sessionize_stream(stream)
-    assert sess.isStreaming
-    q = (sess.writeStream.format("memory").queryName("sess_out")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = spark.sql("select * from sess_out").collect()
-    got = {}
-    for r in rows:  # monotonic totals: keep the latest emission
-        cur = got.get(r.user_id)
-        if cur is None or r.n_events > cur[1]:
-            got[r.user_id] = (r.n_sessions, r.n_events)
-
-    pdf = (spark.read.parquet(src).toPandas()
-           .sort_values(["user_id", "ts", "event_id"]))
-    want = {}
-    for uid, grp in pdf.groupby("user_id"):
-        last, n_sess = None, 0
-        for ts in grp["ts"]:
-            t = ts.timestamp()
-            if last is None or t - last > 1800.0:
-                n_sess += 1
-            last = t
-        want[int(uid)] = (n_sess, len(grp))
-    assert got == want
-
-
-def test_stateful_dedup_stream_first_seen_wins(spark, tmp_path):
-    """Streaming exact dedup: one emission per fingerprint across
-    micro-batches; a drained static backlog with duplicates reproduces
-    the batch representative count, and duplicates arriving in a LATER
-    micro-batch are dropped by the carried state."""
-    from docling_spark.streaming.stream import dedup_stream
-
-    src = str(tmp_path / "docs")
-    # batch file 1: docs 0-9 (unique texts t0..t9)
-    spark.createDataFrame(
-        [(i, f"text {i % 10} body") for i in range(10)],
-        "doc_id long, text string").write.parquet(src)
-    # batch file 2: docs 10-19 duplicate the SAME texts
-    spark.createDataFrame(
-        [(i, f"text {i % 10} body") for i in range(10, 20)],
-        "doc_id long, text string").write.mode("append").parquet(src)
-
-    stream = (spark.readStream
-              .schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(src))
-    out = dedup_stream(stream)
-    assert out.isStreaming
-    q = (out.writeStream.format("memory").queryName("dedup_out")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = spark.sql("select * from dedup_out").collect()
-    # exactly one emission per distinct text, regardless of batch split
-    assert len(rows) == 10
-    assert len({r["fingerprint"] for r in rows}) == 10
-    # first-seen-wins: every emitted doc_id is from the earliest
-    # arrival of its text (all texts first appear among docs 0-19 with
-    # the lower id in the earlier file OR the min of its first batch)
-    emitted = sorted(r["doc_id"] for r in rows)
-    assert emitted == sorted(range(10)) or all(d < 20 for d in emitted)
-
-
-def test_cdc_stream_new_changed_silent(spark, tmp_path):
-    """Streaming CDC: first sight emits 'new', a content change in a
-    later micro-batch emits 'changed', an identical re-delivery is
-    silent, and the final state hash matches the last version."""
-    from docling_spark.streaming.stream import cdc_stream
-
-    src = str(tmp_path / "cdc")
-    spark.createDataFrame(
-        [(i, f"body {i}", 1) for i in range(1, 6)],
-        "doc_id long, text string, seq long").coalesce(1) \
-        .write.parquet(src)
-    spark.createDataFrame(
-        [(1, "body 1", 2),        # unchanged -> silent
-         (2, "body 2 EDITED", 2),  # changed
-         (6, "body 6", 2)],        # new
-        "doc_id long, text string, seq long").coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    stream = (spark.readStream
-              .schema("doc_id long, text string, seq long")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(src))
-    out = cdc_stream(stream)
-    q = (out.writeStream.format("memory").queryName("cdc_out")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = spark.sql("select * from cdc_out").collect()
-    reasons = sorted((r["doc_id"], r["reason"]) for r in rows)
-    assert reasons == [(1, "new"), (2, "changed"), (2, "new"),
-                       (3, "new"), (4, "new"), (5, "new"), (6, "new")]
 
 
 def test_sliding_window_streaming_vs_batch(spark, tmp_path):
@@ -226,82 +121,3 @@ def test_sliding_window_streaming_vs_batch(spark, tmp_path):
            (r["n_events"], r["sum_value_e2"])
            for r in spark.sql("SELECT * FROM slide_test").collect()}
     assert got == batch
-
-
-def test_anomaly_stream_matches_batch_flags(spark, tmp_path):
-    """Continuous anomaly detection: a drained two-batch slot stream
-    must reproduce the batch flag_anomalies output exactly, with the
-    trailing baseline carried across the micro-batch boundary."""
-    from docling_spark.operators.timeseries import flag_anomalies
-    from docling_spark.streaming.stream import anomaly_stream
-
-    slots = [("a", 1000 + 3600 * i, 1000) for i in range(6)]
-    slots.append(("a", 1000 + 3600 * 6, 9000))     # spike, batch 2
-    slots.append(("a", 1000 + 3600 * 7, 1000))
-    src = str(tmp_path / "slots")
-    ddl = "key string, slot_epoch long, sum_value_e2 long"
-    spark.createDataFrame(slots[:5], ddl).coalesce(1).write.parquet(src)
-    spark.createDataFrame(slots[5:], ddl).coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    batch_grid = spark.createDataFrame(slots, ddl)
-    batch = {r["slot_epoch"]: (r["baseline_e2"], r["anomaly"]) for r in
-             flag_anomalies(batch_grid, key_col="key",
-                            trailing_slots=4).collect()}
-
-    stream = (spark.readStream.schema(ddl)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    q = (anomaly_stream(stream, trailing_slots=4)
-         .writeStream.format("memory").queryName("anom_out")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {r["slot_epoch"]: (r["baseline_e2"], r["anomaly"]) for r in
-           spark.sql("select * from anom_out").collect()}
-    assert got == batch
-    # and the spike was actually flagged
-    assert got[1000 + 3600 * 6][1] == 1
-
-
-def test_approx_dedup_stream_bounded_state_batch_parity(spark, tmp_path):
-    """Approximate (hash-prefix / k=1 Bloom) dedup-on-arrival: the
-    emitted set equals the batch groupBy-prefix representative set,
-    duplicates in later micro-batches are dropped by carried state,
-    and a deliberately tiny prefix (1 hex digit = 16 possible keys)
-    bounds the emission count at m regardless of distinct texts —
-    the bounded-memory contract exact dedup can't give."""
-    from pyspark.sql import functions as F
-
-    from docling_spark.streaming.stream import approx_dedup_stream
-
-    src = str(tmp_path / "docs")
-    spark.createDataFrame(
-        [(i, f"text {i} body") for i in range(30)],
-        "doc_id long, text string").coalesce(1).write.parquet(src)
-    spark.createDataFrame(
-        [(i, f"text {i - 30} body") for i in range(30, 60)],  # dups
-        "doc_id long, text string").coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    stream = (spark.readStream
-              .schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(src))
-    out = approx_dedup_stream(stream, prefix_hex=1)
-    assert out.isStreaming
-    q = (out.writeStream.format("memory").queryName("approx_dedup_out")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = spark.sql("select * from approx_dedup_out").collect()
-
-    # batch twin: first doc_id per md5 prefix over the SAME data
-    batch = spark.read.parquet(src)
-    fp = F.md5(F.lower(F.trim(F.regexp_replace(F.col("text"),
-                                               r"\s+", " "))))
-    expected = {(r["prefix"], r["doc_id"]) for r in
-                batch.select(F.substring(fp, 1, 1).alias("prefix"),
-                             "doc_id")
-                .groupBy("prefix").agg(F.min("doc_id").alias("doc_id"))
-                .collect()}
-    got = {(r["prefix"], r["doc_id"]) for r in rows}
-    assert got == expected
-    assert len(got) <= 16  # bounded by m = 16^prefix_hex

@@ -7,7 +7,7 @@ the warc_records registry query uses."""
 
 import pytest
 
-from docling_spark.parsers.warc_parser import (parse_warc, surt_key)
+from docling_spark.parsers.warc_parser import parse_warc
 
 
 def _record(warc_type: str, payload: bytes, *, uri: str = "",
@@ -108,15 +108,6 @@ def test_non_http_response_payload_kept_whole():
 def test_empty_blob():
     assert parse_warc(b"") == []
     assert parse_warc(b"\r\n\r\n") == []
-
-
-def test_surt_key():
-    assert (surt_key("http://www.Example.com:8080/A/b?q=1")
-            == "com,example,www)/a/b?q=1")
-    assert surt_key("https://a.b.c/") == "c,b,a)/"
-    assert surt_key("http://user@host.org") == "org,host)/"
-    assert surt_key("ftp://x.y/") is None
-    assert surt_key("http:///path") is None
 
 
 def test_spark_roundtrip_and_cdx(spark):
